@@ -31,7 +31,8 @@ import org.apache.spark.sql.functions._
   *     min of two medians is the robust estimate of the plan's cost).
   *   - planRisksNovel = risk findings MINUS the PlanAllowlist grants: the
   *     graded signal is "novel scale risks: 0", not a raw count that grows
-  *     with every documented exception.
+  *     with every documented exception. A plan audit that throws is
+  *     counted in planAuditErrors (and logged), never read as zero risks.
   *   - "fixture" stamps an md5 manifest of the SF dir (file names+sizes),
   *     so cross-session sweeps are provably same-data.
   *   - "storagePost" reports block-manager residency after the sweep (gc +
@@ -268,6 +269,7 @@ object Bench {
     // sweep advances instead of accumulating across all 200+ queries.
     var planRisks = 0
     var planRisksNovel = 0
+    var planAuditErrors = 0
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => filter.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -285,7 +287,14 @@ object Bench {
             planRisks += findings.size
             planRisksNovel +=
               graft.plans.PlanAllowlist.filterNovel(name, findings, plan).size
-          } catch { case _: Throwable => () }
+          } catch {
+            // a failed audit must not pass for a clean plan: it is counted
+            // in the artifact beside planRisksNovel and logged
+            case e: Throwable =>
+              planAuditErrors += 1
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"plan audit of $name failed", e)
+          }
         }
         name -> median
       }
@@ -408,6 +417,7 @@ object Bench {
       s""""calibration":{"pre":$calPre,"post":$calPost,"prev":$prevCal},""" +
       s""""total_calibrated":$totalCal,""" +
       s""""planRisks":$planRisks,"planRisksNovel":$planRisksNovel,""" +
+      s""""planAuditErrors":$planAuditErrors,""" +
       s""""fixture":{"dir":${jstr(sfDir)},"manifest":${jstr(manifest(sfDir))}},""" +
       s""""baseBuilds":$baseJson,""" +
       s""""storagePost":$storageJson,"remeasured":$remJson,""" +

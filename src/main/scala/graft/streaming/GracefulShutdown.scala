@@ -20,8 +20,14 @@ object GracefulShutdown {
       installed = true
       sys.addShutdownHook {
         spark.streams.active.foreach { q =>
+          // mirror reference: log-and-continue, so one failing stop does
+          // not keep the other queries from committing
           try q.stop()
-          catch { case _: Throwable => () } // mirror reference: log-and-continue
+          catch {
+            case e: Throwable =>
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"shutdown: stopping streaming query ${q.id} failed", e)
+          }
         }
       }
     }

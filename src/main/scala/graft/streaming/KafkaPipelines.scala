@@ -76,10 +76,9 @@ object KafkaPipelines {
   /** R3: Kafka sink writer (start() requires a live broker + connector). */
   def sink(df: DataFrame, cfg: KafkaConfig,
            checkpointDir: String): DataStreamWriter[Row] =
-    df.writeStream.format("kafka")
+    StreamOps.checkpointed(df, checkpointDir).format("kafka")
       .option("kafka.bootstrap.servers", cfg.bootstrapServers)
       .option("topic", cfg.topic)
-      .option("checkpointLocation", checkpointDir)
 
   /** §2.2 end-to-end: Kafka[in] → windowed word count → Kafka[out]. */
   def wordCountPipeline(spark: SparkSession, in: KafkaConfig, out: KafkaConfig,

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming transform library (SURVEY.md §2.3 I). Every operator is a
   * plan-to-plan function usable on BOTH a streaming and a batch DataFrame —
@@ -103,19 +104,27 @@ object StreamOps {
       .select(col("timestamp").as("ts"),
         sentenceColumn(col("value")).as("sentence"))
 
+  /** The writer of every engine stream that keeps a checkpoint: its
+    * checkpoint lives at `checkpointDir` and goes through [[CheckpointFiles]],
+    * which this installs on the session unless the session already names a
+    * checkpoint file manager. */
+  def checkpointed[T](ds: Dataset[T], checkpointDir: String): DataStreamWriter[T] = {
+    val conf = ds.sparkSession.conf
+    if (conf.getOption(CheckpointFiles.confKey).isEmpty)
+      conf.set(CheckpointFiles.confKey, classOf[CheckpointFiles].getName)
+    ds.writeStream.option("checkpointLocation", checkpointDir)
+  }
+
   /** R5 console sink (the consumer's per-record log,
     * go/consumer/consumer.go:79-81). */
-  def consoleSink(df: DataFrame,
-                  checkpointDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.format("console")
-      .option("checkpointLocation", checkpointDir)
+  def consoleSink(df: DataFrame, checkpointDir: String): DataStreamWriter[Row] =
+    checkpointed(df, checkpointDir).format("console")
 
   /** R5 foreachBatch sink: arbitrary per-micro-batch side effects (the
     * general form of processMessage — batch df + batch id). */
   def foreachBatchSink(df: DataFrame, checkpointDir: String)(
-      f: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch(f)
-      .option("checkpointLocation", checkpointDir)
+      f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    checkpointed(df, checkpointDir).foreachBatch(f)
 
   /** Stream-static enrichment join (§2.3 C join_stream_static): the
     * static side is re-read per micro-batch and broadcast when small —

@@ -137,9 +137,8 @@ object StreamingCuration {
                    threshold: Double = 0.5, shingleN: Int = 2,
                    bands: Int = 4, rows: Int = 4)
                   (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
+    StreamOps.checkpointed(docs, checkpointDir)
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the model params plumb through — an index built with a
         // non-default model would otherwise silently equi-join to

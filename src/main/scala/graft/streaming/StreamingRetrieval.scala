@@ -37,9 +37,8 @@ object StreamingRetrieval {
     // advice data-loss path); both relations bind to one epoch
     AppendLedger.bindEpoch(checkpointDir,
       Seq(s"$indexPath/postings", s"$indexPath/doclens"))
-    docs.writeStream
+    StreamOps.checkpointed(docs, checkpointDir)
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val delta = RetrievalIndex.build(batch, idCol, textCol)

@@ -45,9 +45,8 @@ object StreamingTakedown {
     * one idempotent store compaction per non-empty micro-batch. */
   private def removalSink(removals: DataFrame, checkpointDir: String)(
       apply: DataFrame => Unit): StreamingQuery =
-    removals.writeStream
+    StreamOps.checkpointed(removals, checkpointDir)
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) apply(batch)
       }

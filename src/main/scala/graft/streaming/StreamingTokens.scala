@@ -34,9 +34,8 @@ object StreamingTokens {
     // checkpoint against a maintained store would replay-skip every new
     // batch — the round-11 advice data-loss path)
     AppendLedger.bindEpoch(checkpointDir, Seq(s"$storePath/tf"))
-    docs.writeStream
+    StreamOps.checkpointed(docs, checkpointDir)
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           // invalidate the derived bucketed projection UNCONDITIONALLY
