@@ -20,7 +20,10 @@ object IncrCcBench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case e: Throwable =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "warm-up query failed; the first rep pays set-up", e)
+    }
     def timed(label: String)(f: => Long): Unit = {
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

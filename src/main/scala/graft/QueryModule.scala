@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A bundle of oracle-checked queries contributed to [[SparkEntry]].
   *
@@ -79,15 +80,55 @@ object Tables {
     *   - TIMESTAMP(MICROS) isAdjustedToUTC=true: TimestampType — pass through.
     * Branching on the loaded dtype keeps all fixture generations working.
     */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    adapt(name, readParquet(spark, s"$sfDir/$name.parquet"))
+
+  /** The per-table adaptation [[load]] applies to a freshly read table. */
+  private[graft] def adapt(name: String, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name != "events") df
     else df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
       case _                => df
+    }
+  }
+
+  /** Session schema catalog: per session, absolute path -> (stamp, schema).
+    * `spark.read.parquet` runs one Spark job per call just to read a footer
+    * and infer the schema; reading with the schema pinned skips that job
+    * while the file index is still listed on every load. Only metadata is
+    * kept — no DataFrame, relation or result. The stamp is the path's file
+    * manifest (names, sizes, mtimes) plus the session's parquet settings,
+    * so a table rewritten in place, or a session whose parquet reader
+    * options changed, infers again. Weak session keys: a stopped session's
+    * entries go with it, and two sessions never share one. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]
+
+  /** `spark.read.parquet(path)` with the schema taken from the session
+    * catalog. A path that is not on the local file system, or does not
+    * exist (globs included), is read with plain inference. A manifest IO
+    * error propagates: it never falls back to a cached schema. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    val file = new java.io.File(uri.getPath).getAbsoluteFile
+    if (Option(uri.getScheme).exists(_ != "file") || !file.exists)
+      spark.read.parquet(path)
+    else {
+      val stamp = BenchSupport.manifest(file.getPath, strict = true) + "\n" +
+        spark.conf.getAll.filter(_._1.contains(".parquet.")).toSeq.sorted.mkString(",")
+      val cache = schemas.synchronized(schemas.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap))
+      val schema = cache.get(file.getPath) match {
+        case (`stamp`, known) => known
+        case _ =>
+          val inferred = spark.read.parquet(path).schema
+          cache.put(file.getPath, (stamp, inferred))
+          inferred
+      }
+      spark.read.schema(schema).parquet(path)
     }
   }
 

@@ -22,7 +22,10 @@ object TimeQuery {
     spark.sparkContext.setLogLevel("WARN")
     plans.TopKPerGroup.install(spark) // match Bench/Verify session wiring
     val fn = SparkEntry.queries(name)
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case e: Throwable =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "warm-up query failed; the first rep pays set-up", e)
+    }
     val times = (1 to reps).map { i =>
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()

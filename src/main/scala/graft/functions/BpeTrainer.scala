@@ -63,12 +63,14 @@ case class BpeMergePair(child: Expression, pair: String)
   }
 
   // pair = concat(w1, ' ', w2) of two space-free tokens, so the single
-  // space is unambiguous; limit -1 keeps an empty w2
-  @transient private lazy val w1: UTF8String = {
-    val parts = pair.split(" ", -1)
-    require(parts.length == 2, s"pair must be two tokens, got '$pair'")
-    UTF8String.fromString(parts(0))
-  }
+  // space is unambiguous; limit -1 keeps an empty w2. Checked at
+  // construction, so a malformed pair fails on the driver at plan time
+  // rather than in a task.
+  require(pair.split(" ", -1).length == 2,
+    s"pair must be two tokens, got '$pair'")
+
+  @transient private lazy val w1: UTF8String =
+    UTF8String.fromString(pair.split(" ", -1)(0))
   @transient private lazy val w2: UTF8String =
     UTF8String.fromString(pair.split(" ", -1)(1))
   @transient private lazy val mergedTok: UTF8String =

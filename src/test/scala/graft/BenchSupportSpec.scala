@@ -149,4 +149,36 @@ class BenchSupportSpec extends AnyFunSuite {
       dir.delete()
     }
   }
+
+  test("manifest of a single file hashes its own line; directory format unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("benchsupport5").toFile
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    try {
+      val f = new java.io.File(dir, "t.parquet")
+      java.nio.file.Files.writeString(f.toPath, "abc")
+      assert(f.setLastModified(1000000000000L))
+      val sub = new java.io.File(dir, "d")
+      assert(sub.mkdir())
+      val g = new java.io.File(sub, "p.parquet")
+      java.nio.file.Files.writeString(g.toPath, "xy")
+      assert(g.setLastModified(1000000002000L))
+      // a file stamps its own (name, size, mtime) line...
+      val m1 = BenchSupport.manifest(f.getPath, strict = true)
+      assert(m1 == md5("t.parquet:3:1000000000000"))
+      assert(m1 != md5(""), "a single file must not hash the empty listing")
+      // ...and a directory keeps the sorted relative listing it always had
+      assert(BenchSupport.manifest(dir.getPath) ==
+        md5("d/p.parquet:2:1000000002000\nt.parquet:3:1000000000000"))
+      java.nio.file.Files.writeString(f.toPath, "xyz") // same size
+      assert(f.setLastModified(1000000001000L))
+      assert(BenchSupport.manifest(f.getPath, strict = true) != m1,
+        "an in-place rewrite of the file must change its manifest")
+    } finally {
+      Option(new java.io.File(dir, "d").listFiles()).getOrElse(Array.empty)
+        .foreach(_.delete())
+      Option(dir.listFiles()).getOrElse(Array.empty).foreach(_.delete())
+      dir.delete()
+    }
+  }
 }

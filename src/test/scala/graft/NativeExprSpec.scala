@@ -199,4 +199,17 @@ class NativeExprSpec extends SparkSpec {
     assert(spark.sessionState.functionRegistry
       .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(NativeCosine.name)))
   }
+
+  test("BpeMergePair rejects a malformed pair on the driver, before any task") {
+    import spark.implicits._
+    val toks = Seq(Tuple1(Seq("a", "b"))).toDF("t")
+    Seq("a", "a b c").foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        toks.select(graft.functions.BpeMergePair.merge(col("t"), bad)))
+      assert(e.getMessage.contains(s"'$bad'"))
+    }
+    val merged = toks.select(
+      graft.functions.BpeMergePair.merge(col("t"), "a b").as("m"))
+    assert(merged.head().getSeq[String](0) == Seq("a_b"))
+  }
 }

@@ -1,16 +1,22 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
 
 /** Tables.load's events-timestamp adaptation: the fixture's parquet
   * physical type changed once already between rounds (TIMESTAMP(NANOS) →
   * TIMESTAMP(MICROS) NTZ) and darkened a third of the registry. This spec
   * pins all three loader branches against synthetic events tables, so a
   * future regeneration to ANY of the shapes is caught by a unit test
-  * instead of a driver-gate blackout.
+  * instead of a driver-gate blackout. The session schema catalog behind
+  * the loader is pinned too: no inference job on a repeated load, the
+  * same schema and rows as a fresh read, and a new schema after a table
+  * is rewritten in place.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -84,5 +90,91 @@ class TablesSpec extends SparkSpec {
     val df = Tables.load(spark, dir, "documents")
     assert(df.schema("ts").dataType == LongType)
     assert(df.head().getLong(1) == 42L)
+  }
+
+  /** Jobs `body` submits, counted by a SparkListener. A marker job in its
+    * own group closes the window: the listener bus delivers events in
+    * order, so once the marker's start arrives every job `body` submitted
+    * has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"tables-spec-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => marked.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "TablesSpec load")
+      body
+      sc.setJobGroup(s"$group-marker", "TablesSpec marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(60, TimeUnit.SECONDS), "marker job never seen")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("schema catalog: a repeated load of an unchanged table submits no job") {
+    val dir = Files.createTempDirectory("graft-tables").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val first = jobsDuring(Tables.load(spark, dir, "region"))
+    assert(first >= 1, "the first load infers the schema with a job")
+    val second = jobsDuring(Tables.load(spark, dir, "region"))
+    assert(second == 0, s"second load ran $second job(s)")
+  }
+
+  test("schema catalog: pinned loads match a fresh read on every fixture table") {
+    Tables.names.foreach { n =>
+      Tables.load(spark, sf, n) // make sure the catalog holds the entry
+      val pinned = Tables.load(spark, sf, n)
+      val fresh = Tables.adapt(n, spark.read.parquet(s"$sf/$n.parquet"))
+      assert(pinned.schema == fresh.schema, s"$n schema")
+      assert(pinned.count() == fresh.count(), s"$n count")
+    }
+  }
+
+  test("schema catalog: a single-file table rewritten in place is inferred again") {
+    // fixture tables are single parquet files, so the manifest must stamp
+    // the file itself: copy one Spark-written part file to events.parquet
+    val dir = Files.createTempDirectory("graft-tables").toString
+    val target = Paths.get(s"$dir/events.parquet")
+    def writeSingleFile(df: org.apache.spark.sql.DataFrame): Unit = {
+      val staging = s"$dir/staging"
+      df.coalesce(1).write.mode("overwrite").parquet(staging)
+      val part = new java.io.File(staging).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeSingleFile(Seq((1L, "not a timestamp")).toDF("event_id", "ts"))
+    assert(loadEvents(dir).schema("ts").dataType == StringType)
+    writeSingleFile(Seq((1L, micros * 1000L)).toDF("event_id", "ts"))
+    val df = loadEvents(dir)
+    assert(df.schema("ts").dataType == TimestampType,
+      "the rewritten file's BIGINT ts must take the ns-long branch")
+    assert(df.select(unix_micros(col("ts"))).head().getLong(0) == micros)
+  }
+
+  test("schema catalog: a changed parquet session setting is inferred again") {
+    // the fixture's events.ts is TIMESTAMP(MICROS) without UTC adjustment:
+    // NTZ by default, TimestampType once NTZ inference is switched off. A
+    // copy under another name keeps the events adaptation out of the way.
+    val dir = Files.createTempDirectory("graft-tables").toString
+    Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$dir/ev.parquet"))
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    assert(Tables.load(spark, dir, "ev").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    spark.conf.set(key, "false")
+    try assert(Tables.load(spark, dir, "ev").schema("ts").dataType == TimestampType)
+    finally spark.conf.unset(key)
   }
 }
