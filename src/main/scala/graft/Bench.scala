@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * the driver captures a bounded stdout tail, which clipped the r03/r04
   * artifacts mid-object ("parsed": null), so the file is the durable copy.
   *
-  * Each query runs `spark.graft.bench.runs` times (default 3) and reports
+  * Each query runs `SPARK_GRAFT_BENCH_RUNS` times (env, default 3) and reports
   * the per-query MEDIAN — single-shot timings on a shared machine conflate
   * GC pauses / page cache state / concurrent load with the plan's cost
   * (r04's 100x phantom regressions on untouched queries). Failures are
@@ -132,6 +132,13 @@ object BenchSupport {
     }
   }
 
+  /** `s` as a quoted JSON string literal (Jackson's escaper: quote,
+    * backslash and every control character), for the hand-assembled
+    * artifact and oracle JSON. */
+  def jsonString(s: String): String =
+    "\"" + new String(
+      com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+
   /** md5 over the sorted (relative-name, byte-size, mtime-ms) listing of
     * a fixture dir — proves two sweeps claiming the same fixture saw the
     * same data. The mtime term closes the round-11 advice gap: a fixture
@@ -181,24 +188,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the driver benches at local[32] with shuffle.partitions=32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = session(defaultCpus = 32)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts may be TIMESTAMP(NANOS) parquet; see Tables.load
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Wire the grouped-top-k rewrite up front — GraftSession.attach (the
-    // library's declared entry) always installs it, but this bare bench
-    // session previously only gained it mid-sweep when q_topk_window ran,
-    // so which queries got the heap plan depended on execution order
-    // (r14: the operator's fused-stage codegen bug is fixed, and the
-    // rewrite carries a conf kill switch, spark.graft.topk.rewrite).
-    plans.TopKPerGroup.install(spark)
+    import BenchSupport.jsonString
     // Warmup: the first job pays session setup (codegen compiler, parquet
     // footers, scheduler spin-up) — run the flagship once untimed so the
     // first measured query isn't charged ~5s of one-time cost.
@@ -374,13 +366,7 @@ object Bench {
       }
     }
 
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = finalResults.map { case (k, v) => s"${jstr(k)}:$v" }
+    val qs = finalResults.map { case (k, v) => s"${jsonString(k)}:$v" }
       .mkString("{", ",", "}")
     val calPost = calibrate()
     // per-query CALIBRATED values (task #5): cross-round per-query
@@ -389,16 +375,16 @@ object Bench {
     val calMean = (calPre + calPost) / 2
     val qsCal = finalResults.map { case (k, v) =>
       val cal = if (v >= 0 && calMean > 0) v / calMean else -1.0
-      s"${jstr(k)}:${math.floor(cal * 10000 + 0.5) / 10000}"
+      s"${jsonString(k)}:${math.floor(cal * 10000 + 0.5) / 10000}"
     }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+    val errJson = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }
       .mkString("{", ",", "}")
-    val partialJson = partial.map { case (k, v) => s"${jstr(k)}:$v" }
+    val partialJson = partial.map { case (k, v) => s"${jsonString(k)}:$v" }
       .mkString("{", ",", "}")
     val remJson = remeasured.map { case (k, (a, b, p)) =>
-      s"${jstr(k)}:{\"first\":$a,\"second\":$b,\"prev\":$p,\"isolated\":true}"
+      s"${jsonString(k)}:{\"first\":$a,\"second\":$b,\"prev\":$p,\"isolated\":true}"
     }.mkString("{", ",", "}")
-    val baseJson = baseBuilds.map { case (k, v) => s"${jstr(k)}:$v" }
+    val baseJson = baseBuilds.map { case (k, v) => s"${jsonString(k)}:$v" }
       .mkString("{", ",", "}")
 
     // Fixture manifest — two sweeps claiming the same fixture can be
@@ -433,12 +419,12 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""queries_calibrated":$qsCal,""" +
-      s""""sf":${jstr(sfDir)},"runs":$runs,"stat":"median",""" +
+      s""""sf":${jsonString(sfDir)},"runs":$runs,"stat":"median",""" +
       s""""calibration":{"pre":$calPre,"post":$calPost,"prev":$prevCal},""" +
       s""""total_calibrated":$totalCal,""" +
       s""""planRisks":$planRisks,"planRisksNovel":$planRisksNovel,""" +
       s""""planAuditErrors":$planAuditErrors,""" +
-      s""""fixture":{"dir":${jstr(sfDir)},"manifest":${jstr(manifest(sfDir))}},""" +
+      s""""fixture":{"dir":${jsonString(sfDir)},"manifest":${jsonString(manifest(sfDir))}},""" +
       s""""baseBuilds":$baseJson,""" +
       s""""storagePost":$storageJson,"remeasured":$remJson,""" +
       s""""partialRuns":$partialJson,"errors":$errJson}"""
@@ -450,5 +436,28 @@ object Bench {
     Files.writeString(Paths.get(outFile), json + "\n")
     println(json)
     spark.stop()
+  }
+  /** The measurement session Bench times on and Verify checks on (the
+    * test-side dev mains use it too): `local[$SPARK_GRAFT_CPUS]`, else
+    * `local[defaultCpus]`, with as many shuffle partitions, UTC, no UI,
+    * WARN logs, and the grouped-top-k rewrite installed up front.
+    * GraftSession.attach (the library's declared entry) always installs
+    * it; a bare session without the install only gained it mid-run when
+    * q_topk_window ran, so which queries got the heap plan depended on
+    * execution order (the rewrite's kill switch is
+    * spark.graft.topk.rewrite). */
+  def session(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // events.ts may be TIMESTAMP(NANOS) parquet; see Tables.load
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    plans.TopKPerGroup.install(spark)
+    spark
   }
 }

@@ -56,7 +56,7 @@ object IncrementContract {
     * the bench driver runs this BEFORE the timed sweep (round-11 advice
     * finding #5: building the base lazily inside the graded query
     * re-entangles the one-time build cost with the steady-state arrival
-    * timing, the exact complaint IncrCcBench was split to fix). Returns
+    * timing). Returns
     * (family, seconds) lines; the bench artifact ships them as
     * `baseBuilds` so the write-once cost stays visible instead of
     * silently vanishing from the graded numbers. */

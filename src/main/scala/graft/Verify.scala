@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,20 +10,9 @@ object Verify {
     // nothing and exit 0, looking like a clean run against stale output.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts may be TIMESTAMP(NANOS) parquet; see Tables.load
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same session wiring as Bench: the top-k rewrite is installed up
-    // front (not mid-run by whichever query happens to run first), so
-    // the correctness gate exercises exactly the plans the bench times
-    plans.TopKPerGroup.install(spark)
+    // Bench's session: the correctness gate exercises exactly the plans
+    // the bench times
+    val spark = Bench.session(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // fixture-presence gate: the 7 extended-surface TPC-H queries (and
     // their oracle entries below) join the sweep only when the sfDir
@@ -47,22 +35,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val oracles = SparkEntry.oracleSql ++
       (if (gated) operators.TpchGatedQueries.oracleSql else Map.empty)
     val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) =>
+        s"${BenchSupport.jsonString(k)}: ${BenchSupport.jsonString(v)}"
+      }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -54,7 +54,9 @@ import org.apache.spark.unsafe.types.UTF8String
 case class BpeMergePair(child: Expression, pair: String)
     extends UnaryExpression {
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // ARRAY<STRING> in, ARRAY<STRING> out: merge copies a null element
+  // through, so the element nullability is the child's
+  override def dataType: DataType = child.dataType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -157,11 +159,9 @@ object BpeTrainer {
 
   /** Train `rounds` merges over `docs(textCol)`. Returns the merged
     * corpus (same schema, textCol rewritten) and the learned merge
-    * sequence in order. `onRound` observes (step, seconds) per round —
-    * the BpeBench per-round-cost hook. */
+    * sequence in order. */
   def train(docs: DataFrame, textCol: String, rounds: Int,
-            minCount: Long = 1L, checkpointEvery: Int = 8,
-            onRound: (MergeStep, Double) => Unit = (_, _) => ())
+            minCount: Long = 1L, checkpointEvery: Int = 8)
       : (DataFrame, Seq[MergeStep]) = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
@@ -171,35 +171,38 @@ object BpeTrainer {
     // SPLIT ONCE: the standing corpus is a token-array column; each round
     // counts pairs straight off the arrays and merges them natively
     // ([[BpeMergePair]]), never re-splitting the text — the r13-measured
-    // per-round wall was the re-split, not the merge. array_join at the
-    // end restores textCol byte-identically (tokens are space-free, the
-    // engine's space-normalized corpus contract; ≡ the regex path on such
-    // corpora — spec-pinned against applyMerge and trainDelta).
+    // per-round wall was the re-split, not the merge. The text column is
+    // dropped for the loop, so no checkpoint carries it beside the arrays;
+    // array_join at the end restores it byte-identically at its original
+    // position (tokens are space-free, the engine's space-normalized
+    // corpus contract; ≡ the regex path on such corpora — spec-pinned
+    // against applyMerge and trainDelta).
     val toksCol = "__bpe_toks"
-    var cur = Materialize.spread(docs)
-      .withColumn(toksCol, split(col(textCol), " "))
+    val spread = Materialize.spread(docs)
+    var cur = spread.withColumn(toksCol, split(col(textCol), " "))
+      .drop(textCol)
     val steps = Seq.newBuilder[MergeStep]
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
-      val t0 = System.nanoTime()
       val best = tokenPairCounts(cur.select(col(toksCol).as("t")))
         .orderBy(col("c").desc, col("p").asc).limit(1).collect()
       if (best.isEmpty || best(0).getLong(1) < minCount) exhausted = true
       else {
         val pair = best(0).getString(0)
-        val step = MergeStep(r, pair, best(0).getLong(1))
-        steps += step
+        steps += MergeStep(r, pair, best(0).getLong(1))
         cur = cur.withColumn(toksCol, BpeMergePair.merge(col(toksCol), pair))
         if (r % checkpointEvery == 0) cur = Materialize(cur)
-        onRound(step, (System.nanoTime() - t0) / 1e9)
       }
       r += 1
     }
     val learned = steps.result()
     val merged =
-      if (learned.isEmpty) cur.drop(toksCol)
-      else cur.withColumn(textCol, array_join(col(toksCol), " ")).drop(toksCol)
+      if (learned.isEmpty) spread
+      else cur.select(docs.columns.toSeq.map { c =>
+        if (c == textCol) array_join(col(toksCol), " ").as(c)
+        else cur(s"`${c.replace("`", "``")}`")
+      }: _*)
     (merged, learned)
   }
 
@@ -222,11 +225,10 @@ object BpeTrainer {
     * application are unchanged, so trainDelta ≡ train step for step and
     * byte for byte (spec-pinned); only the counting plan differs.
     * After merge 1 the per-round cost falls with the affected-doc count
-    * (BpeBench measures the curve); at rounds in the hundreds this is
-    * the difference between a trainer and a toy. */
+    * (SCALE.md "BPE per-round cost" records the curve); at rounds in the
+    * hundreds this is the difference between a trainer and a toy. */
   def trainDelta(docs: DataFrame, textCol: String, rounds: Int,
-                 minCount: Long = 1L, checkpointEvery: Int = 8,
-                 onRound: (MergeStep, Double) => Unit = (_, _) => ())
+                 minCount: Long = 1L, checkpointEvery: Int = 8)
       : (DataFrame, Seq[MergeStep]) = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
@@ -239,14 +241,12 @@ object BpeTrainer {
       var r = 1
       var exhausted = false
       while (r <= rounds && !exhausted) {
-        val t0 = System.nanoTime()
         val best = counts.orderBy(col("c").desc, col("p").asc)
           .limit(1).collect()
         if (best.isEmpty || best(0).getLong(1) < minCount) exhausted = true
         else {
           val pair = best(0).getString(0)
-          val step = MergeStep(r, pair, best(0).getLong(1))
-          steps += step
+          steps += MergeStep(r, pair, best(0).getLong(1))
           if (r < rounds) {
             val affected = Materialize(
               cur.filter(containsPair(col(textCol), pair)))
@@ -261,7 +261,6 @@ object BpeTrainer {
           }
           cur = cur.withColumn(textCol, applyMerge(col(textCol), pair))
           if (r % checkpointEvery == 0) cur = Materialize(cur)
-          onRound(step, (System.nanoTime() - t0) / 1e9)
         }
         r += 1
       }

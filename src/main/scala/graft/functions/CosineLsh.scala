@@ -64,7 +64,7 @@ object CosineLsh {
     * at nPlanes = 5 / depth = 2 every vector lands in 16 of the 32
     * buckets, so every bucket blows past the hot cap, the whole corpus
     * degrades to chain edges, and recall collapses (measured 0.0003 —
-    * AnnBench round 7). planesForCount(count, target, probeDepth) divides
+    * SCALE.md "ANN recall ladder"). planesForCount(count, target, probeDepth) divides
     * the target by this fan-out; probeDepth = 0 is the legacy
     * occupancy-blind sizing (single-key corpus sides, e.g. [[topK]]'s
     * corpus relation). */

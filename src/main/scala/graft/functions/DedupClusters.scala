@@ -32,11 +32,6 @@ object DedupClusters {
     *
     * @param pairs columns (aCol, bCol) — one row per detected pair
     * @return (id, cluster) where cluster = min node id in the component
-    */
-  /** @param hopsPerRound label-propagation joins per checkpoint round:
-    *   1 = classic; 2 = two-hop (halves the checkpoint/action overhead
-    *   per covered hop — helps when rounds are overhead-bound, i.e.
-    *   small graphs; same fixpoint either way)
     * @param reliable write per-round checkpoints to the configured
     *   SparkContext checkpoint dir instead of executor-pinned
     *   localCheckpoints — the fault-tolerant mode for long-running
@@ -45,7 +40,6 @@ object DedupClusters {
   def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
                           bCol: String = "b_id",
                           maxIter: Int = 20,
-                          hopsPerRound: Int = 1,
                           reliable: Boolean = false,
                           roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None): DataFrame = {
     val rel = reliable || Materialize.reliableRequested(pairs)
@@ -59,14 +53,10 @@ object DedupClusters {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      var next = labels
-      for (_ <- 1 to hopsPerRound) {
-        val viaNeighbors = edges.join(next, edges("dst") === next("id"))
-          .select(edges("src").as("id"), col("cluster"))
-        next = next.unionAll(viaNeighbors)
-          .groupBy("id").agg(min("cluster").as("cluster"))
-      }
-      labels = Materialize(next, rel)
+      val viaNeighbors = edges.join(labels, edges("dst") === labels("id"))
+        .select(edges("src").as("id"), col("cluster"))
+      labels = Materialize(labels.unionAll(viaNeighbors)
+        .groupBy("id").agg(min("cluster").as("cluster")), rel)
       val s = labels.agg(sum("cluster")).head().getLong(0)
       converged = s == prevSum
       prevSum = s

@@ -1,8 +1,8 @@
 package graft.functions
 
 /** Tiny local-filesystem helpers shared by the artifact-maintenance
-  * paths (DedupClusters' staged-swap retirement, IncrCcBench's
-  * wipe-and-rebuild leg). Local `java.io.File` only — the write-once
+  * paths (DedupClusters' staged-swap retirement, the artifact stores'
+  * relation rewrites and writer locks). Local `java.io.File` only — the write-once
   * artifacts live under the system tmpdir by design; a distributed
   * deployment retires artifact dirs through its object store's own
   * API instead. */

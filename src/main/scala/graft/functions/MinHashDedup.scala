@@ -353,7 +353,8 @@ object MinHashDedup {
 
   /** [[dedupIncremental]] building the corpus [[Index]] on the fly —
     * correctness-equivalent, but it re-derives the corpus signatures, so
-    * it forfeits the incremental cost win (IncrBench measures the gap);
+    * it forfeits the incremental cost win (SCALE.md "Incremental dedup"
+    * records the gap);
     * use the Index overload with persisted relations in production. */
   def dedupIncremental(existing: DataFrame, batch: DataFrame, idCol: String,
                        textCol: String, threshold: Double): DataFrame = {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * and the bucket tree is re-evaluated once PER PROBE KEY inside
   * multiProbeBuckets' array constructor, so a depth-2/11-plane keying ran
   * ~47k interpreted lambda ops per row (measured 119 s for a 20k-vector
-  * corpus, AnnBench round 7; the CosineLsh scaladoc's "bucketize is
+  * corpus, SCALE.md "ANN recall ladder"; the CosineLsh scaladoc's "bucketize is
   * codegen'd" claim was aspirational until this class). This expression
   * is one compiled nPlanes × dim multiply-add loop; the plane matrix
   * rides the plan as a reference object, broadcast with the task binary.

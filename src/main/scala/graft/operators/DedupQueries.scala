@@ -936,8 +936,8 @@ object DedupQueries extends QueryModule {
   /** The increment's candidate-generation half: ensure the base, hash
     * the delta, probe the bucketed stored keys. Returns (artifact path,
     * materialized delta gram relation, materialized candidate pairs) —
-    * split from [[incDeltaPairs]] so IncrCcBench can time candidate
-    * generation apart from the verify. */
+    * split from [[incDeltaPairs]] so candidate generation can be timed
+    * apart from the verify. */
   private[graft] def incDeltaCand(s: org.apache.spark.sql.SparkSession,
       dir: String)
       : (String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {

@@ -240,11 +240,11 @@ object EvalQueries extends QueryModule {
     // banded-MinHash candidate set (k=8 signatures, 4 bands × 2 rows,
     // md5-derived so both engines draw identical hashes) against exact
     // shingle-Jaccard ≥ 0.5 ground truth → candidate precision / recall /
-    // F1. The fixture-scale twin of the AnnBench/SimHashBench recall
-    // measurements: the ORACLE-CHECKED proof that band collision finds
+    // F1. The fixture-scale twin of the ANN / SimHash recall ladders in
+    // SCALE.md: the ORACLE-CHECKED proof that band collision finds
     // what exact Jaccard finds. The block (doc_id < 1000, 7-28 true pairs per SF) bounds the
-    // exact-pair side; production recall at scale is measured in the
-    // benches, this pins the MECHANISM.
+    // exact-pair side; production recall at scale is recorded in
+    // SCALE.md, this pins the MECHANISM.
     "q_minhash_eval" -> ((s, dir) => {
       val sh = graft.functions.Materialize(
         t(s, dir, "documents")

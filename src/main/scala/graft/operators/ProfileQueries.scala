@@ -104,38 +104,20 @@ object ProfileQueries extends QueryModule {
         (Seq(col("r_days").desc, col("o_custkey")), "r_score"),
         (Seq(col("freq").asc, col("o_custkey")), "f_score"),
         (Seq(col("mon").asc, col("o_custkey")), "m_score"))
-      val chained = s.conf.get("spark.graft.rfm.chained", "false").toBoolean
-      val scored = if (chained) {
-        // retired r13 form, kept conf-gated for re-measurement: each pass
-        // ranks the PREVIOUS pass's output, so passes 2-3 must pin their
-        // inputs (2 extra eager actions) to stop the boundary collect and
-        // the two plan reads from re-executing every earlier pass
-        specs.zipWithIndex.foldLeft(cust) {
-          case (acc, ((order, score), i)) =>
-            RangeRank.withGroupedRank(acc, Nil, order, s"__rk_$score",
-                countName = if (i == 0) "__nc" else null, pin = i > 0)
-              .withColumn(score, RangeRank.ntileFromRank(
-                col(s"__rk_$score"), col("__nc"), 4).cast("bigint"))
-              .drop(s"__rk_$score")
-        }
-      } else {
-        // r14: the three scores are INDEPENDENT functions of the pinned
-        // customer aggregate — rank each over `cust` directly (no
-        // inter-pass pins; every boundary collect reads the checkpoint,
-        // not a stack of earlier passes) and join the three quartile
-        // columns back on the unique custkey. 2 fewer eager actions;
-        // same ranks, same NTILE algebra, oracle-gated identical. Each
-        // pass emits its own group count (same value — the NTILE
-        // denominator |customers|).
-        specs.foldLeft(cust) { case (acc, (order, score)) =>
-          val ranked = RangeRank.withGroupedRank(cust, Nil, order,
-              s"__rk_$score", countName = s"__nc_$score")
-            .select(col("o_custkey").as(s"__ck_$score"),
-              RangeRank.ntileFromRank(col(s"__rk_$score"),
-                col(s"__nc_$score"), 4).cast("bigint").as(score))
-          acc.join(ranked, col("o_custkey") === col(s"__ck_$score"))
-            .drop(s"__ck_$score")
-        }
+      // the three scores are INDEPENDENT functions of the pinned customer
+      // aggregate — rank each over `cust` directly (no inter-pass pins;
+      // every boundary collect reads the checkpoint, not a stack of
+      // earlier passes) and join the three quartile columns back on the
+      // unique custkey. Each pass emits its own group count (same value —
+      // the NTILE denominator |customers|).
+      val scored = specs.foldLeft(cust) { case (acc, (order, score)) =>
+        val ranked = RangeRank.withGroupedRank(cust, Nil, order,
+            s"__rk_$score", countName = s"__nc_$score")
+          .select(col("o_custkey").as(s"__ck_$score"),
+            RangeRank.ntileFromRank(col(s"__rk_$score"),
+              col(s"__nc_$score"), 4).cast("bigint").as(score))
+        acc.join(ranked, col("o_custkey") === col(s"__ck_$score"))
+          .drop(s"__ck_$score")
       }
       scored
         .select(col("o_custkey"), col("r_days"), col("freq"),

@@ -116,7 +116,7 @@ class AnnSpec extends SparkSpec {
     // SCALE.md) does not transfer to, so the fixture-level assertion is
     // the exactness limit: probing every cell must reproduce brute force
     // row for row (routing + wiring, zero recall slack). The measured
-    // operating-point recall lives in AnnBench at corpus scale.
+    // operating-point recall at corpus scale is recorded in SCALE.md.
     val probes = e.filter(col("vec_id") < 10)
     val auto = Ann.topK(e, probes, "vec_id", "embedding", k = 5,
       corpusCount = Some(Ann.BruteTopKMax + 1), nProbe = 16)

@@ -181,4 +181,18 @@ class BenchSupportSpec extends AnyFunSuite {
       dir.delete()
     }
   }
+
+  test("jsonString escapes quote, backslash and control characters; Jackson reads it back") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Seq("plain", "a\"quote", "back\\slash", "line\nbreak", "tab\there",
+        "ctl\u0001char", "all \" \\ \n \t \u0001 \r end").foreach { s =>
+      val lit = BenchSupport.jsonString(s)
+      assert(lit.startsWith("\"") && lit.endsWith("\""), lit)
+      assert(!lit.exists(_ < ' '), s"raw control character in $lit")
+      assert(mapper.readValue(lit, classOf[String]) == s, lit)
+    }
+    // as a key and value inside an object, the way Bench and Verify write
+    val obj = s"{${BenchSupport.jsonString("k\t")}: ${BenchSupport.jsonString("v\"\n")}}"
+    assert(mapper.readTree(obj).get("k\t").asText() == "v\"\n")
+  }
 }

@@ -1,36 +1,36 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
-/** Dev utility: dump `.explain("formatted")` of registry queries to files.
-  * Test-sources-only (must not ship in the production artifact); run with
-  * BOTH target/scala-2.13/classes and target/scala-2.13/test-classes
-  * (plus the Spark jars) on the classpath:
+/** Dev utility: dump `.explain("formatted")` of registry queries to files
+  * and audit each plan with PlanDoctor. Test-sources-only (must not ship
+  * in the production artifact); run with BOTH target/scala-2.13/classes
+  * and target/scala-2.13/test-classes (plus the Spark jars) on the
+  * classpath:
   *   java -cp "<classes>:<test-classes>:<spark jars>" graft.ExplainQuery
-  *     <outDir> <suffix> <sfDir> <query ...>
-  * Writes <outDir>/<query>_<suffix>.txt per query. The plan is the
-  * EXECUTED adaptive plan (the df is run first via toRdd.count, so AQE's
-  * final join strategies / coalesced exchanges are what lands in the file
-  * — the same flavor Bench's plan audit grades).
+  *     <outDir> <suffix> <sfDir> [query ...]
+  * With no query names it covers the whole registry. Writes
+  * <outDir>/<query>_<suffix>.txt per query. The plan is the EXECUTED
+  * adaptive plan (the df is run first via toRdd.count, so AQE's final
+  * join strategies / coalesced exchanges are what lands in the file —
+  * the same flavor Bench's plan audit grades). Prints every PlanDoctor
+  * risk finding tagged NOVEL or allowlisted (plans/PlanAllowlist.scala),
+  * then the raw and novel totals — the drill-down behind Bench's
+  * planRisks / planRisksNovel counters.
   */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 3,
+      "usage: ExplainQuery <outDir> <suffix> <sfDir> [query ...]")
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = args(2)
-    val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    plans.TopKPerGroup.install(spark) // match Bench/Verify session wiring
+    val names =
+      if (args.length > 3) args.drop(3).toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
+    val spark = Bench.session(defaultCpus = 32)
     Files.createDirectories(Paths.get(outDir))
+    var raw = 0; var novel = 0
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -38,14 +38,23 @@ object ExplainQuery {
         df.queryExecution.toRdd.count()
         val formatted = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        val executed = df.queryExecution.executedPlan.toString
+        val plan = df.queryExecution.executedPlan
         Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"),
-          s"== explain(formatted) ==\n$formatted\n== executedPlan (final adaptive) ==\n$executed\n")
+          s"== explain(formatted) ==\n$formatted\n== executedPlan (final adaptive) ==\n$plan\n")
         println(s"[explain] wrote $name")
+        val findings = plans.PlanDoctor.diagnosePlan(plan)
+          .filter(_.severity == "risk")
+        val nv = plans.PlanAllowlist.filterNovel(name, findings, plan)
+        raw += findings.size; novel += nv.size
+        findings.foreach { f =>
+          val tag = if (nv.contains(f)) "NOVEL" else "allowlisted"
+          println(s"[explain] $tag $name: ${f.render}")
+        }
       } catch { case e: Throwable =>
         println(s"[explain] ERR $name ${Option(e.getMessage).getOrElse(e.getClass.getName).take(160)}")
       }
     }
+    println(s"[explain] risks raw=$raw novel=$novel")
     spark.stop()
   }
 }

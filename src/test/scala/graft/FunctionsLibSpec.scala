@@ -319,12 +319,16 @@ class FunctionsLibSpec extends SparkSpec {
     // the delta recount (counts - pairs(affected_before) +
     // pairs(affected_after)) must be indistinguishable from train's full
     // per-round recount — steps, counts, and the merged corpus itself
-    val hand = Seq((1L, "a a a b"), (2L, "a a b")).toDF("doc_id", "text")
+    val hand = Seq((1L, "a a a b", "x"), (2L, "a a b", "y"))
+      .toDF("doc_id", "text", "tag")
     val corpus = table("documents").limit(50).select(col("doc_id"), col("text"))
     for ((docs, rounds) <- Seq((hand, 10), (corpus, 6))) {
       val (mFull, sFull) = BpeTrainer.train(docs, "text", rounds)
       val (mDelta, sDelta) = BpeTrainer.trainDelta(docs, "text", rounds)
       assert(sDelta == sFull, s"merge sequences differ: $sDelta vs $sFull")
+      // same schema and column order as the input (text is not last in hand)
+      assert(mFull.schema == docs.schema && mDelta.schema == docs.schema,
+        s"schemas differ: ${mFull.schema} / ${mDelta.schema} vs ${docs.schema}")
       val full = mFull.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       val delta = mDelta.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(delta == full, "merged corpora differ")

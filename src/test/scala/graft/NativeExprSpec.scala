@@ -212,4 +212,18 @@ class NativeExprSpec extends SparkSpec {
       graft.functions.BpeMergePair.merge(col("t"), "a b").as("m"))
     assert(merged.head().getSeq[String](0) == Seq("a_b"))
   }
+
+  test("BpeMergePair passes a null element through and declares it nullable") {
+    val toks = spark.sql("SELECT array('a', null, 'b') AS t, array('x', null, 'a', 'b') AS u")
+    val merged = toks.select(
+      graft.functions.BpeMergePair.merge(col("t"), "a b").as("m"),
+      graft.functions.BpeMergePair.merge(col("u"), "a b").as("n"))
+    merged.schema.fields.foreach { f =>
+      assert(f.dataType == org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.StringType, containsNull = true), f.toString)
+    }
+    val r = merged.head()
+    assert(r.getSeq[String](0) == Seq("a", null, "b"))
+    assert(r.getSeq[String](1) == Seq("x", null, "a_b"))
+  }
 }

@@ -21,6 +21,26 @@ class TopKPlanSpec extends SparkSpec {
       .orderBy("o_orderpriority", "rn")
   }
 
+  test("Bench.session installs the rewrite: row_number() <= k plans TopKPerGroupExec") {
+    // a session with the rule absent (as before any registry query ran),
+    // then the measurement-session helper; the helper returns this same
+    // JVM-wide session, so its runtime settings are restored afterwards
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    TopKPerGroup.uninstall(spark)
+    try {
+      // the adaptive root is opaque to collect; read the rendered plan
+      def heapExec(df: DataFrame) =
+        df.queryExecution.executedPlan.toString.contains("TopKPerGroup ")
+      assert(!heapExec(topkDf), "rule absent, yet the heap exec planned")
+      val s = Bench.session(defaultCpus = 4)
+      assert(s eq spark)
+      assert(heapExec(topkDf), topkDf.queryExecution.executedPlan.toString)
+    } finally {
+      TopKPerGroup.uninstall(spark)
+      spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    }
+  }
+
   test("sql: topk_per_group TVF equals the DataFrame form and plans the heap exec") {
     graft.plans.TopKSql.install(spark)
     try {
