@@ -41,8 +41,8 @@ import org.apache.spark.sql.functions._
   */
 /** The pure (Spark-free) halves of the bench harness, split out so the
   * machinery that produces the GRADED artifact is itself unit-testable —
-  * two rounds of grading were misled by harness bugs, so the parser and
-  * manifest logic carry specs (BenchSupportSpec). */
+  * two rounds of grading were misled by harness bugs, so the parser
+  * carries specs (BenchSupportSpec). */
 object BenchSupport {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -138,48 +138,6 @@ object BenchSupport {
   def jsonString(s: String): String =
     "\"" + new String(
       com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
-
-  /** md5 over the sorted (relative-name, byte-size, mtime-ms) listing of
-    * a fixture dir — proves two sweeps claiming the same fixture saw the
-    * same data. The mtime term closes the round-11 advice gap: a fixture
-    * regenerated in place whose files keep identical sizes (plausible for
-    * fixed-width/seeded generators) still changes the manifest, so every
-    * content-keyed artifact tag (JoinQueries.dirTag) invalidates. A path
-    * that is a single file hashes that file's own line, so a table stored
-    * as one file (every fixture table) is stamped by its own bytes.
-    *
-    * Error handling is the caller's choice: `strict = true` (the dirTag
-    * artifact-keying path and the Tables schema catalog) PROPAGATES IO
-    * errors, a directory that cannot be listed included — a transient
-    * listing failure must never collapse two different corpora onto one
-    * shared tag and silently serve stale artifacts; `strict = false` (the
-    * bench provenance stamp) folds the failure into a per-error string so
-    * a diagnostic field can't abort a sweep, but two different failures
-    * still stamp differently. */
-  def manifest(path: String, strict: Boolean = false): String = {
-    def children(f: java.io.File): Seq[java.io.File] = f.listFiles() match {
-      case null if strict && f.isDirectory =>
-        throw new java.io.IOException(s"cannot list $f")
-      case null => Seq.empty
-      case fs => fs.sortBy(_.getName).toSeq
-    }
-    def walk(f: java.io.File, prefix: String): Seq[String] =
-      if (f.isDirectory)
-        children(f).flatMap(c => walk(c, s"$prefix${f.getName}/"))
-      else Seq(s"$prefix${f.getName}:${f.length}:${f.lastModified}")
-    try {
-      val root = new java.io.File(path)
-      val lines = (if (root.isFile) walk(root, "")
-        else children(root).flatMap(walk(_, ""))).mkString("\n")
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(lines.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    } catch {
-      case e: Throwable if !strict =>
-        s"unavailable:${e.getClass.getSimpleName}:" +
-          Option(e.getMessage).getOrElse("").take(80)
-      case e: Throwable => throw e
-    }
-  }
 }
 
 object Bench {
@@ -390,7 +348,7 @@ object Bench {
     // Fixture manifest — two sweeps claiming the same fixture can be
     // checked for actually-same data (round-8's sf1 artifacts diverged
     // with no way to prove the inputs matched).
-    def manifest(dir: String): String = BenchSupport.manifest(dir)
+    def manifest(dir: String): String = functions.FsUtil.manifest(dir)
 
     // Post-sweep storage audit: with no df retention, every Materialize
     // localCheckpoint should be unreferenced by now — give the JVM a gc
@@ -438,14 +396,11 @@ object Bench {
     spark.stop()
   }
   /** The measurement session Bench times on and Verify checks on (the
-    * test-side dev mains use it too): `local[$SPARK_GRAFT_CPUS]`, else
-    * `local[defaultCpus]`, with as many shuffle partitions, UTC, no UI,
-    * WARN logs, and the grouped-top-k rewrite installed up front.
-    * GraftSession.attach (the library's declared entry) always installs
-    * it; a bare session without the install only gained it mid-run when
-    * q_topk_window ran, so which queries got the heap plan depended on
-    * execution order (the rewrite's kill switch is
-    * spark.graft.topk.rewrite). */
+    * test-side dev mains and the spec suites use it too):
+    * `local[$SPARK_GRAFT_CPUS]`, else `local[defaultCpus]`, with as many
+    * shuffle partitions, UTC, no UI, WARN logs, and every engine component
+    * attached up front by [[GraftSession.attach]] — so no plan depends on
+    * which query happened to install a rule first. */
   def session(defaultCpus: Int): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val spark = SparkSession.builder()
@@ -457,7 +412,6 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    plans.TopKPerGroup.install(spark)
-    spark
+    GraftSession.attach(spark)
   }
 }

@@ -1,58 +1,83 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.graftbridge.PlanBridge
 
-/** THE library entry point: one call wires everything the engine adds to
-  * a stock SparkSession — native codegen expressions, the custom join /
-  * top-k strategies, the SQL table-valued surface, and the optimizer
-  * rules — so "switching to this library" is:
+/** THE one place that knows what the engine adds to a SparkSession: the
+  * native codegen functions, the optimizer rules, the planner strategies
+  * and the SQL table-valued functions, each held in one list below.
+  * "Switching to this library" is one call on a session the caller owns:
   *
-  *   val spark = GraftSession.builder("local[32]").getOrCreate()
   *   GraftSession.attach(spark)            // or, on a cluster:
   *   // --conf spark.sql.extensions=graft.functions.GraftExtensions
   *
-  * `builder` pins the session defaults every Verify/Bench/test session in
-  * this repo runs with (UTC, bounded shuffle partitions left to the
-  * caller, nanos-as-long parquet reads for mixed-precision fixtures) and
-  * routes extensions through [[graft.functions.GraftExtensions]] so a
-  * cluster submit with the same conf behaves identically. `attach` is the
-  * after-the-fact flavor for sessions the caller already owns (notebooks,
-  * test harnesses) — idempotent, like every per-component install it
-  * delegates to.
+  * `attach` and [[graft.functions.GraftExtensions]] iterate the same
+  * lists, so the library and cluster paths cannot drift apart;
+  * `Bench.session` (Bench, Verify, the test session) ends in `attach`.
+  * [[add]] and [[remove]] are the only writers of a session's
+  * `experimental` rule and strategy lists — the use-site self-installs
+  * (`AsofJoinOp.asof`, `RangeJoinOp.rangeLookup`, key and rollup
+  * registration, `TopKPerGroup.install`) go through them too, so a bare
+  * session can still plan a custom node it was handed.
   */
 object GraftSession {
 
-  /** A builder preconfigured with the engine's session contract. */
-  def builder(master: String, appName: String = "graft"): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** (name, info, builder) as `SparkSessionExtensions.injectTableFunction`
+    * takes it. */
+  type TableFunction =
+    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)
 
-  /** Idempotently attach every engine component to a live session:
-    * native functions (cosine/simhash/jaccard/fingerprint/jaro/dot + the
-    * UDF registry), the as-of / range-lookup / top-k strategies and their SQL
-    * TVFs, and the optimizer rules (UDF promotion, rollup rewrite, join
-    * elimination, window-top-k rewrite). */
+  val nativeFunctions: Seq[functions.NativeFunction[_]] = Seq(
+    functions.NativeCosine, functions.NativeSimHash, functions.NativeJaccard,
+    functions.NativeFingerprint, functions.NativeJaro, functions.NativeDot)
+
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    functions.PromoteCosineUdf, plans.RollupRewrite, plans.JoinElimination,
+    plans.RewriteTopKWindow)
+
+  val plannerStrategies: Seq[SparkStrategy] = Seq(
+    plans.TopKStrategy, plans.AsofJoinStrategy, plans.RangeLookupStrategy)
+
+  val tableFunctions: Seq[TableFunction] = Seq(
+    plans.AsofSql.descriptor, plans.RangeSql.descriptor,
+    plans.TopKSql.descriptor)
+
+  /** Idempotently attach every component to a live session, plus the
+    * Scala-UDF convenience registry (`cosine_sim`, `normalize_text`, ...),
+    * which lives in `spark.udf` and so has no extensions form. */
   def attach(spark: SparkSession): SparkSession = {
-    functions.NativeCosine.register(spark)
-    functions.NativeCosine.enableUdfPromotion(spark)
-    functions.NativeSimHash.register(spark)
-    functions.NativeJaccard.register(spark)
-    functions.NativeFingerprint.register(spark)
-    functions.NativeJaro.register(spark)
-    functions.NativeDot.register(spark)
+    nativeFunctions.foreach(_.register(spark))
     functions.Registry.registerAll(spark)
-    plans.AsofJoinOp.install(spark)
-    plans.RangeJoinOp.install(spark)
-    plans.TopKPerGroup.install(spark)
-    plans.AsofSql.install(spark)
-    plans.RangeSql.install(spark)
-    plans.TopKSql.install(spark)
-    plans.RollupRewrite.attach(spark)
-    plans.JoinElimination.install(spark)
+    tableFunctions.foreach(PlanBridge.registerTableFunction(spark, _))
+    add(spark, optimizerRules, plannerStrategies)
     spark
+  }
+
+  /** Append each rule and strategy the session lacks, in the given order;
+    * members already present stay where they are. */
+  def add(spark: SparkSession, rules: Seq[Rule[LogicalPlan]] = Nil,
+          strategies: Seq[SparkStrategy] = Nil): Unit =
+    update(spark)(rs => rs ++ rules.filterNot(rs.contains),
+      ss => ss ++ strategies.filterNot(ss.contains))
+
+  /** Drop the given rules and strategies from the session. */
+  def remove(spark: SparkSession, rules: Seq[Rule[LogicalPlan]] = Nil,
+             strategies: Seq[SparkStrategy] = Nil): Unit =
+    update(spark)(_.filterNot(rules.contains),
+      _.filterNot(strategies.contains))
+
+  private def update(spark: SparkSession)(
+      rules: Seq[Rule[LogicalPlan]] => Seq[Rule[LogicalPlan]],
+      strategies: Seq[SparkStrategy] => Seq[SparkStrategy]): Unit = {
+    val x = spark.experimental
+    x.synchronized {
+      x.extraOptimizations = rules(x.extraOptimizations)
+      x.extraStrategies = strategies(x.extraStrategies)
+    }
   }
 }

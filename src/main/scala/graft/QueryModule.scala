@@ -117,7 +117,7 @@ object Tables {
     if (Option(uri.getScheme).exists(_ != "file") || !file.exists)
       spark.read.parquet(path)
     else {
-      val stamp = BenchSupport.manifest(file.getPath, strict = true) + "\n" +
+      val stamp = functions.FsUtil.manifest(file.getPath, strict = true) + "\n" +
         spark.conf.getAll.filter(_._1.contains(".parquet.")).toSeq.sorted.mkString(",")
       val cache = schemas.synchronized(schemas.computeIfAbsent(spark,
         _ => new java.util.concurrent.ConcurrentHashMap))

@@ -2,7 +2,8 @@ package graft.functions
 
 /** Tiny local-filesystem helpers shared by the artifact-maintenance
   * paths (DedupClusters' staged-swap retirement, the artifact stores'
-  * relation rewrites and writer locks). Local `java.io.File` only — the write-once
+  * relation rewrites and writer locks) and the content stamp that keys
+  * engine state (the `Tables` schema catalog, artifact tags). Local `java.io.File` only — the write-once
   * artifacts live under the system tmpdir by design; a distributed
   * deployment retires artifact dirs through its object store's own
   * API instead. */
@@ -104,5 +105,47 @@ private[graft] object FsUtil {
     }
     throw last.getOrElse(new IllegalStateException(
       s"timed out waiting for the writer lock on $artifactRoot"))
+  }
+
+  /** md5 over the sorted (relative-name, byte-size, mtime-ms) listing of
+    * a fixture dir — proves two sweeps claiming the same fixture saw the
+    * same data. The mtime term closes the round-11 advice gap: a fixture
+    * regenerated in place whose files keep identical sizes (plausible for
+    * fixed-width/seeded generators) still changes the manifest, so every
+    * content-keyed artifact tag (`JoinQueries.dirTag`) invalidates. A path
+    * that is a single file hashes that file's own line, so a table stored
+    * as one file (every fixture table) is stamped by its own bytes.
+    *
+    * Error handling is the caller's choice: `strict = true` (the dirTag
+    * artifact-keying path and the Tables schema catalog) PROPAGATES IO
+    * errors, a directory that cannot be listed included — a transient
+    * listing failure must never collapse two different corpora onto one
+    * shared tag and silently serve stale artifacts; `strict = false` (the
+    * bench provenance stamp) folds the failure into a per-error string so
+    * a diagnostic field can't abort a sweep, but two different failures
+    * still stamp differently. */
+  def manifest(path: String, strict: Boolean = false): String = {
+    def children(f: java.io.File): Seq[java.io.File] = f.listFiles() match {
+      case null if strict && f.isDirectory =>
+        throw new java.io.IOException(s"cannot list $f")
+      case null => Seq.empty
+      case fs => fs.sortBy(_.getName).toSeq
+    }
+    def walk(f: java.io.File, prefix: String): Seq[String] =
+      if (f.isDirectory)
+        children(f).flatMap(c => walk(c, s"$prefix${f.getName}/"))
+      else Seq(s"$prefix${f.getName}:${f.length}:${f.lastModified}")
+    try {
+      val root = new java.io.File(path)
+      val lines = (if (root.isFile) walk(root, "")
+        else children(root).flatMap(walk(_, ""))).mkString("\n")
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(lines.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    } catch {
+      case e: Throwable if !strict =>
+        s"unavailable:${e.getClass.getSimpleName}:" +
+          Option(e.getMessage).getOrElse("").take(80)
+      case e: Throwable => throw e
+    }
   }
 }

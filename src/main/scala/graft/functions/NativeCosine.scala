@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -105,32 +102,8 @@ case class CosineSim(left: Expression, right: Expression)
   override def prettyName: String = "cosine_sim_native"
 }
 
-object NativeCosine {
-
-  val name = "cosine_sim_native"
-
-  private val info = new ExpressionInfo(classOf[CosineSim].getName, name)
-
-  private val builder: FunctionBuilder = { args =>
-    require(args.length == 2, s"$name takes exactly 2 arguments")
-    CosineSim(args.head, args(1))
-  }
-
-  /** Descriptor for SparkSessionExtensions.injectFunction. */
-  val descriptor: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
-    (FunctionIdentifier(name), info, builder)
-
-  /** Idempotent in-session registration (library path, no extensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-
-  /** Idempotently attach [[PromoteCosineUdf]] to an existing session. */
-  def enableUdfPromotion(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(PromoteCosineUdf))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PromoteCosineUdf
-}
+object NativeCosine
+    extends NativeFunction("cosine_sim_native", 2)(a => CosineSim(a.head, a(1)))
 
 /** Optimizer rule (§4.3 custom-Catalyst tier): rewrites calls to the
   * registered `cosine_sim` Scala UDF into the native [[CosineSim]]
@@ -156,21 +129,14 @@ object PromoteCosineUdf
 }
 
 /** Cluster entry point: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * injects the engine's native expressions and rewrites at session build
-  * time. For an already-built session, [[NativeCosine.register]] +
-  * [[NativeCosine.enableUdfPromotion]] do the same. */
+  * injects, at session build time, the component list
+  * [[graft.GraftSession.attach]] installs on a live session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(NativeCosine.descriptor)
-    ext.injectFunction(NativeSimHash.descriptor)
-    ext.injectFunction(NativeJaccard.descriptor)
-    ext.injectFunction(NativeFingerprint.descriptor)
-    ext.injectFunction(NativeJaro.descriptor)
-    ext.injectFunction(NativeDot.descriptor)
-    ext.injectOptimizerRule(_ => PromoteCosineUdf)
-    ext.injectOptimizerRule(_ => graft.plans.RollupRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.JoinElimination)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteTopKWindow)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    import graft.GraftSession._
+    nativeFunctions.foreach(f => ext.injectFunction(f.descriptor))
+    optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    plannerStrategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    tableFunctions.foreach(ext.injectTableFunction)
   }
 }

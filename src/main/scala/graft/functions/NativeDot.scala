@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -109,23 +106,5 @@ case class DotLong(left: Expression, right: Expression)
   override def prettyName: String = "dot_long_native"
 }
 
-object NativeDot {
-
-  val name = "dot_long_native"
-
-  private val info = new ExpressionInfo(classOf[DotLong].getName, name)
-
-  private val builder: FunctionBuilder = { args =>
-    require(args.length == 2, s"$name takes exactly 2 arguments")
-    DotLong(args.head, args(1))
-  }
-
-  /** Descriptor for SparkSessionExtensions.injectFunction. */
-  val descriptor: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
-    (FunctionIdentifier(name), info, builder)
-
-  /** Idempotent in-session registration (library path, no extensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
+object NativeDot
+    extends NativeFunction("dot_long_native", 2)(a => DotLong(a.head, a(1)))

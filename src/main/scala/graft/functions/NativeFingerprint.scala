@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -62,21 +59,5 @@ case class RollingFingerprint(child: Expression) extends UnaryExpression {
   override def prettyName: String = "rolling_fingerprint"
 }
 
-object NativeFingerprint {
-
-  val name = "rolling_fingerprint"
-
-  private val info = new ExpressionInfo(classOf[RollingFingerprint].getName, name)
-
-  private val builder: FunctionBuilder = { args =>
-    require(args.length == 1, s"$name takes exactly 1 argument")
-    RollingFingerprint(args.head)
-  }
-
-  val descriptor: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
-    (FunctionIdentifier(name), info, builder)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
+object NativeFingerprint
+    extends NativeFunction("rolling_fingerprint", 1)(a => RollingFingerprint(a.head))

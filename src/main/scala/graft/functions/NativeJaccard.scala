@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
@@ -83,21 +80,5 @@ case class TokenSetJaccard(left: Expression, right: Expression)
   override def prettyName: String = "token_set_jaccard"
 }
 
-object NativeJaccard {
-
-  val name = "token_set_jaccard"
-
-  private val info = new ExpressionInfo(classOf[TokenSetJaccard].getName, name)
-
-  private val builder: FunctionBuilder = { args =>
-    require(args.length == 2, s"$name takes exactly 2 arguments")
-    TokenSetJaccard(args.head, args(1))
-  }
-
-  val descriptor: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
-    (FunctionIdentifier(name), info, builder)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
+object NativeJaccard
+    extends NativeFunction("token_set_jaccard", 2)(a => TokenSetJaccard(a.head, a(1)))

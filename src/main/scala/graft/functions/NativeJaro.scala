@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -112,21 +109,5 @@ case class JaroWinkler(left: Expression, right: Expression)
   override def prettyName: String = "jaro_winkler"
 }
 
-object NativeJaro {
-
-  val name = "jaro_winkler"
-
-  private val info = new ExpressionInfo(classOf[JaroWinkler].getName, name)
-
-  private val builder: FunctionBuilder = { args =>
-    require(args.length == 2, s"$name takes exactly 2 arguments")
-    JaroWinkler(args.head, args(1))
-  }
-
-  val descriptor: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
-    (FunctionIdentifier(name), info, builder)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
+object NativeJaro
+    extends NativeFunction("jaro_winkler", 2)(a => JaroWinkler(a.head, a(1)))

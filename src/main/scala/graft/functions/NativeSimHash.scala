@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -96,23 +93,5 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
   override def prettyName: String = "simhash_sig_native"
 }
 
-object NativeSimHash {
-
-  val name = "simhash_sig_native"
-
-  private val info = new ExpressionInfo(classOf[SimHashSig].getName, name)
-
-  private val builder: FunctionBuilder = { args =>
-    require(args.length == 1, s"$name takes exactly 1 argument")
-    SimHashSig(args.head)
-  }
-
-  /** Descriptor for SparkSessionExtensions.injectFunction. */
-  val descriptor: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
-    (FunctionIdentifier(name), info, builder)
-
-  /** Idempotent in-session registration (library path, no extensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
+object NativeSimHash
+    extends NativeFunction("simhash_sig_native", 1)(a => SimHashSig(a.head))

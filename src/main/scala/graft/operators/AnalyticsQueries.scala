@@ -313,7 +313,6 @@ object AnalyticsQueries extends QueryModule {
     // result set; a hot noun bucket's |B|² verify work spreads over S²
     // shuffle cells).
     "q_fuzzy_pairs" -> ((s, dir) => {
-      graft.functions.NativeJaro.register(s)
       val names = t(s, dir, "part").select("p_name").distinct()
         .withColumn("noun", element_at(split(col("p_name"), " "), -1))
       val (a, b) = graft.functions.GridSalt.sides(names, col("p_name"))

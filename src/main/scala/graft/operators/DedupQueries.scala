@@ -306,7 +306,6 @@ object DedupQueries extends QueryModule {
       // native codegen kernel (graft.functions.NativeFingerprint) — same
       // value as fpExpr / the DuckDB oracle, one static call per row.
       // repartition before the hash fold — see q_ngram_jaccard.
-      graft.functions.NativeFingerprint.register(s)
       t(s, dir, "documents")
         .repartition(col("doc_id"))
         .select(col("doc_id"),
@@ -659,7 +658,7 @@ object DedupQueries extends QueryModule {
       : org.apache.spark.sql.DataFrame = {
       val tokRel = toks.getOrElse(minhashTokRel(s, dir))
       val docGrams = minhashGrams(tokRel)
-      minhashVerify(s, minhashCands(minhashBands(docGrams)), docGrams)
+      minhashVerify(minhashCands(minhashBands(docGrams)), docGrams)
   }
 
   /** LSH candidate pairs (id_a < id_b) of a banded key relation, with the
@@ -760,11 +759,9 @@ object DedupQueries extends QueryModule {
     * and the kernel runs there AND again in the projection — the
     * q_editdist_pairs hazard, now a PlanDoctor rule
     * (expensive-join-predicate). */
-  private def minhashVerify(s: org.apache.spark.sql.SparkSession,
-      cand: org.apache.spark.sql.DataFrame,
+  private def minhashVerify(cand: org.apache.spark.sql.DataFrame,
       docGrams: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.NativeJaccard.register(s)
     val jac = call_function(graft.functions.NativeJaccard.name,
       col("x.grams"), col("y.grams"))
     // size prefilter (AllPairs/PPJoin length filter, here oracle-
@@ -890,7 +887,7 @@ object DedupQueries extends QueryModule {
       bands.groupBy("band", "bk").agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$path/bandcounts")
       graft.functions.DedupClusters.writePersisted(
-        minhashVerify(s, minhashCands(bands), grams), path, "id_a", "id_b")
+        minhashVerify(minhashCands(bands), grams), path, "id_a", "id_b")
     }
     path
   }
@@ -930,7 +927,7 @@ object DedupQueries extends QueryModule {
     val lookup = graft.functions.Materialize(
       baseGrams.unionByName(deltaGrams)
         .join(broadcast(candIds), Seq("doc_id"), "left_semi"))
-    (baseClusters, minhashVerify(s, cand, lookup))
+    (baseClusters, minhashVerify(cand, lookup))
   }
 
   /** The increment's candidate-generation half: ensure the base, hash

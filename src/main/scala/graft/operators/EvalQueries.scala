@@ -34,11 +34,8 @@ import org.apache.spark.sql.functions._
   */
 object EvalQueries extends QueryModule {
 
-  private def cosine(s: org.apache.spark.sql.SparkSession,
-                     a: String, b: String): Column = {
-    graft.functions.NativeCosine.register(s)
+  private def cosine(a: String, b: String): Column =
     call_function(graft.functions.NativeCosine.name, col(a), col(b))
-  }
 
   private def duckCosine(a: String, b: String): String =
     s"""(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN($a) + 1),
@@ -182,7 +179,7 @@ object EvalQueries extends QueryModule {
           col("label").as("plabel"))
       val top = e.join(broadcast(probes), col("vec_id") =!= col("pid"))
         .select(col("pid"), col("plabel"), col("vec_id"), col("label"),
-          cosine(s, "embedding", "p").as("cos"))
+          cosine("embedding", "p").as("cos"))
         .withColumn("rn", row_number().over(
           Window.partitionBy("pid").orderBy(col("cos").desc, col("vec_id"))))
         .filter(col("rn") <= 10)
@@ -220,7 +217,7 @@ object EvalQueries extends QueryModule {
       val cand = e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(probe))
         .select(col("vec_id"),
-          floor(cosine(s, "embedding", "p") * 1e12 + lit(0.5))
+          floor(cosine("embedding", "p") * 1e12 + lit(0.5))
             .cast("long").as("sc"),
           when(col("label") === col("plabel"), 1L).otherwise(0L).as("pos"))
       graft.functions.RangeRank
@@ -360,7 +357,6 @@ object EvalQueries extends QueryModule {
       // min is identity) so the filter can't push the HOF dot into the
       // BNLJ condition, where it would run on all n² orderings instead
       // of once per kept pair (the q_editdist_pairs pushdown hazard).
-      graft.functions.NativeDot.register(s)
       val dots = vecs.as("a").join(vecs.as("b"), col("a.id") < col("b.id"))
         .select(col("a.id").as("ia"), col("b.id").as("ib"),
           // native codegen Σ aᵢ·bᵢ (exact BIGINT): the HOF zip_with +
@@ -472,7 +468,7 @@ object EvalQueries extends QueryModule {
       val cand = e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(probe))
         .select(col("vec_id"),
-          floor(cosine(s, "embedding", "p") * 1e12 + lit(0.5))
+          floor(cosine("embedding", "p") * 1e12 + lit(0.5))
             .cast("long").as("sc"),
           when(col("label") === col("plabel"), 1L).otherwise(0L).as("pos"))
       val ranked = graft.functions.RangeRank

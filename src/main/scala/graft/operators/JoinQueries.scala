@@ -48,7 +48,7 @@ object JoinQueries extends QueryModule {
     * that look the cached tables up. */
   private[graft] def dirTag(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "\n" + graft.BenchSupport.manifest(dir, strict = true))
+      .digest((dir + "\n" + graft.functions.FsUtil.manifest(dir, strict = true))
         .getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
 
   private def bucketize(s: SparkSession, dir: String, name: String,
@@ -449,7 +449,6 @@ object JoinQueries extends QueryModule {
     // auto broadcast/merge choice are identical to the DataFrame form.
     // Oracle-gated against the same DuckDB relation as q_asof_custom.
     "q_asof_sql" -> ((s, dir) => {
-      graft.plans.AsofSql.install(s)
       t(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("event_id").as("p_id"), col("ts").as("p_ts"),
           col("user_id"))

@@ -31,12 +31,9 @@ object SimilarityQueries extends QueryModule {
     * (graft.functions.NativeCosine) — a tight primitive loop inside
     * whole-stage codegen, vs an interpreted per-element HOF lambda. The
     * per-accumulator fold order is identical to the DuckDB mirror, so
-    * doubles match bit-for-bit. Registration is idempotent per session. */
-  private def cosine(s: org.apache.spark.sql.SparkSession,
-                     a: String, b: String): Column = {
-    graft.functions.NativeCosine.register(s)
+    * doubles match bit-for-bit. */
+  private def cosine(a: String, b: String): Column =
     call_function(graft.functions.NativeCosine.name, col(a), col(b))
-  }
 
   /** Identical arithmetic in DuckDB (index-walk instead of zip_with). */
   private def duckCosine(a: String, b: String): String =
@@ -53,7 +50,7 @@ object SimilarityQueries extends QueryModule {
         .select(col("embedding").as("p"))
       e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(probe))
-        .select(col("vec_id"), cosine(s, "embedding", "p").as("cos_raw"))
+        .select(col("vec_id"), cosine("embedding", "p").as("cos_raw"))
         .orderBy(col("cos_raw").desc, col("vec_id").asc)
         .limit(20)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos"))
@@ -84,7 +81,7 @@ object SimilarityQueries extends QueryModule {
       e.crossJoin(broadcast(probes))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id"),
-          cosine(s, "embedding", "p").as("cos_raw"))
+          cosine("embedding", "p").as("cos_raw"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("probe_id"), col("rn"), col("vec_id"),
@@ -114,7 +111,7 @@ object SimilarityQueries extends QueryModule {
         .select(col("vec_id").as("id_b"), col("embedding").as("eb"))
       val a = e.filter(col("vec_id") < 50)
         .select(col("vec_id").as("id_a"), col("embedding").as("ea"))
-      val cos = cosine(s, "ea", "eb")
+      val cos = cosine("ea", "eb")
       // both predicates live IN the join condition, cheap one first: a
       // pushed-down filter lands AHEAD of the join's own condition, making
       // every pair pay the cosine before the id short-circuit — conjunct

@@ -155,15 +155,14 @@ object WindowQueries extends QueryModule {
     }),
 
     // The declarative window+filter top-k, executed by the CUSTOM
-    // bounded-heap operator (graft.plans.TopKPerGroup): install() makes
-    // RewriteTopKWindow turn this exact pattern into the partial→
-    // exchange→final heap plan, so the driver's oracle hash-gates the
-    // custom exec's output — not just its ScalaTest twin. install is
-    // session-sticky and semantics-preserving: any later registry query
-    // with the same pattern (e.g. q_sample_stratified) simply gains the
-    // same plan, and the 3-SF gate re-validates them all under it.
+    // bounded-heap operator (graft.plans.TopKPerGroup): the session's
+    // RewriteTopKWindow (attached by graft.GraftSession) turns this exact
+    // pattern into the partial→exchange→final heap plan, so the DuckDB
+    // oracle hash-gates the custom exec's output — not just its ScalaTest
+    // twin. Every registry query with the same pattern (e.g.
+    // q_sample_stratified) gains the same plan, and the 3-SF gate
+    // re-validates them all under it.
     "q_topk_window" -> ((s, dir) => {
-      graft.plans.TopKPerGroup.install(s)
       val w = Window.partitionBy("o_orderpriority")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       t(s, dir, "orders")

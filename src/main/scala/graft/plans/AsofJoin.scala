@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, Expression, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, GenerateUnsafeProjection, JavaCode, LazilyGeneratedOrdering}
@@ -606,11 +605,6 @@ object AsofJoinOp {
   private val SaltR = "__asof_salt_r"
   private val HotFlag = "__asof_hot"
 
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
-
   /** As-of join: for each `left` row, the latest `right` row with the
     * same key at rightTime ≤ leftTime within the horizon. Columns are
     * resolved by name against each side (honoring spark.sql.caseSensitive,
@@ -773,7 +767,8 @@ object AsofJoinOp {
           rightTieBreak, horizonMicros, hot, joinType, direction)
     }
     val spark = left.sparkSession
-    install(spark)
+    // a bare session needs the strategy to plan the node handed back
+    graft.GraftSession.add(spark, strategies = Seq(AsofJoinStrategy))
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     val caseSensitive =

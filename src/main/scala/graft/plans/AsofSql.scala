@@ -43,12 +43,9 @@ object AsofSql {
        |string-literal names (CSV for key/tie lists); horizon a day-time
        |interval or integer micros""".stripMargin
 
-  /** Idempotent: registers the TVF in the session's table-function
-    * registry and installs the as-of planner strategy. */
-  def install(spark: SparkSession): Unit = {
-    AsofJoinOp.install(spark)
-    PlanBridge.registerTableFunction(spark, name, usage, builder)
-  }
+  /** The TVF's registry descriptor (listed in graft.GraftSession). */
+  val descriptor: graft.GraftSession.TableFunction =
+    PlanBridge.tableFunction(name, usage, builder)
 
   private def builder(args: Seq[Expression]): LogicalPlan = {
     if (args.length < 8 || args.length > 11)

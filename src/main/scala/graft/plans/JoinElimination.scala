@@ -86,7 +86,8 @@ object JoinElimination extends Rule[LogicalPlan] {
       pos
     }.toSet
     registry.add(Entry(stored, keyPos))
-    install(dim.sparkSession) // declaring a key implies wanting the rule
+    // declaring a key implies wanting the rule
+    graft.GraftSession.add(dim.sparkSession, rules = Seq(JoinElimination))
   }
 
   def clear(): Unit = registry.clear()
@@ -218,10 +219,4 @@ object JoinElimination extends Rule[LogicalPlan] {
         eliminated.incrementAndGet()
         a.copy(child = j.left)
     }
-
-  /** Idempotent per-session hookup (cluster path: GraftExtensions). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(JoinElimination))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ JoinElimination
 }

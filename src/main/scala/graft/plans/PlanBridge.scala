@@ -38,17 +38,24 @@ object PlanBridge {
     case _ => (c, true, true)
   }
 
-  /** Register a session-scoped SQL table-valued function (the
-    * `SELECT * FROM f(...)` surface). Same visibility story as ofRows:
-    * `sessionState` is private[sql]; the registry API itself is the one
-    * Spark's own built-in TVFs (`range`, `explode`, ...) go through. */
+  /** A SQL table-valued function's (name, info, builder) descriptor — the
+    * `SELECT * FROM f(...)` surface, in the shape
+    * `SparkSessionExtensions.injectTableFunction` takes. */
+  def tableFunction(
+      name: String, usage: String,
+      builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] => LogicalPlan)
+      : graft.GraftSession.TableFunction =
+    (org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+        "graft.plans", null, name, usage, ""),
+      builder)
+
+  /** Register a table function in one live session. Same visibility story
+    * as ofRows: `sessionState` is private[sql]; the registry API itself is
+    * the one Spark's own built-in TVFs (`range`, `explode`, ...) go
+    * through. */
   def registerTableFunction(
-      spark: SparkSession, name: String, usage: String,
-      builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] => LogicalPlan): Unit =
+      spark: SparkSession, f: graft.GraftSession.TableFunction): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.tableFunctionRegistry
-      .registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.plans", null, name, usage, ""),
-        builder)
+      .registerFunction(f._1, f._2, f._3)
 }

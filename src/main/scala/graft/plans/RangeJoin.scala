@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, Expression, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, GenerateUnsafeProjection, JavaCode, LazilyGeneratedOrdering}
@@ -317,11 +316,6 @@ object RangeLookupStrategy extends org.apache.spark.sql.execution.SparkStrategy 
 
 object RangeJoinOp {
 
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(RangeLookupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RangeLookupStrategy
-
   /** Scale path for an interval side TOO LARGE to broadcast: grid-bucket
     * the value domain with a caller-supplied width. Each interval
     * replicates to every bucket it overlaps (replication factor ≈ mean
@@ -479,7 +473,8 @@ object RangeJoinOp {
     require(joinType == "inner" || joinType == "left",
       s"rangeLookup joinType must be inner or left, got $joinType")
     val spark = facts.sparkSession
-    install(spark)
+    // a bare session needs the strategy to plan the node handed back
+    graft.GraftSession.add(spark, strategies = Seq(RangeLookupStrategy))
     val lp = facts.queryExecution.analyzed
     val rp = intervals.queryExecution.analyzed
     val caseSensitive =

@@ -28,11 +28,9 @@ object RangeSql {
        |  [, joinType[, loInclusive[, hiInclusive]]]) —
        |string-literal names; inclusivity boolean literals""".stripMargin
 
-  /** Idempotent: registers the TVF and installs the stab strategy. */
-  def install(spark: SparkSession): Unit = {
-    RangeJoinOp.install(spark)
-    PlanBridge.registerTableFunction(spark, name, usage, builder)
-  }
+  /** The TVF's registry descriptor (listed in graft.GraftSession). */
+  val descriptor: graft.GraftSession.TableFunction =
+    PlanBridge.tableFunction(name, usage, builder)
 
   private def builder(args: Seq[Expression]): LogicalPlan = {
     if (args.length < 5 || args.length > 8)

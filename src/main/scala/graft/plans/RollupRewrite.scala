@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, Expression, If, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
@@ -235,7 +235,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
     entries.add(Entry(fact.queryExecution.analyzed,
       rollup.queryExecution.analyzed, groupCols, sumCols, minCols, maxCols))
     evictOver()
-    attach(fact.sparkSession)
+    graft.GraftSession.add(fact.sparkSession, rules = Seq(RollupRewrite))
   }
 
   /** Drop every rollup registered for `fact` (by canonicalized plan
@@ -252,13 +252,6 @@ object RollupRewrite extends Rule[LogicalPlan] {
   /** Drop every registered rollup (the rule stays attached but matches
     * nothing — test hygiene). */
   def clear(): Unit = entries.clear()
-
-  /** Idempotently attach the rule to a live session (the cluster path is
-    * `spark.sql.extensions=graft.functions.GraftExtensions`). */
-  def attach(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(RollupRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RollupRewrite
 
   /** Attribute-only Projects are column pruning, not semantics — strip
     * them before comparing against the registered fact plan. */

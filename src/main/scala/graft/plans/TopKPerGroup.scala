@@ -444,21 +444,11 @@ object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
 }
 
 object TopKPerGroup {
-  /** Session-local install (the extensions path is
-    * `spark.sql.extensions=graft.functions.GraftExtensions`). */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(RewriteTopKWindow))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteTopKWindow
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-  }
+  /** The rewrite and its strategy alone, for a session not built through
+    * graft.GraftSession.attach (which installs them with everything else). */
+  def install(spark: SparkSession): Unit =
+    graft.GraftSession.add(spark, Seq(RewriteTopKWindow), Seq(TopKStrategy))
 
-  def uninstall(spark: SparkSession): Unit = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RewriteTopKWindow)
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_ == TopKStrategy)
-  }
+  def uninstall(spark: SparkSession): Unit =
+    graft.GraftSession.remove(spark, Seq(RewriteTopKWindow), Seq(TopKStrategy))
 }

@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * }}}
   *
   * The builder emits the canonical row_number-window + filter plan, so
-  * [[RewriteTopKWindow]] (installed alongside) turns it into the
+  * [[RewriteTopKWindow]] (attached with it) turns it into the
   * heap-based [[TopKPerGroupExec]] pair exactly as the DataFrame and raw
   * SQL forms plan — the TVF adds no third execution path to maintain.
   */
@@ -52,11 +52,9 @@ object TopKSql {
       "in the TVF surface; use the DataFrame form for such names")
   }
 
-  /** Idempotent: registers the TVF and installs the top-k rewrite. */
-  def install(spark: SparkSession): Unit = {
-    TopKPerGroup.install(spark)
-    PlanBridge.registerTableFunction(spark, name, usage, builder)
-  }
+  /** The TVF's registry descriptor (listed in graft.GraftSession). */
+  val descriptor: graft.GraftSession.TableFunction =
+    PlanBridge.tableFunction(name, usage, builder)
 
   private def builder(args: Seq[Expression]): LogicalPlan = {
     if (args.length < 4 || args.length > 5)

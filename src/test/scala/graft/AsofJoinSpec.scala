@@ -406,7 +406,6 @@ class AsofJoinSpec extends SparkSpec {
   // ---- SQL TVF surface (plans/AsofSql.scala) ----
 
   private def installSqlViews(): Unit = {
-    graft.plans.AsofSql.install(spark)
     purchases.createOrReplaceTempView("asof_spec_p")
     clicks.createOrReplaceTempView("asof_spec_c")
   }

@@ -1,12 +1,13 @@
 package graft
 
+import graft.functions.FsUtil
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench harness's pure machinery — the parts that produce the GRADED
   * artifact. Two rounds of grading were misled by harness bugs (r04's
   * single-shot timings, r08's DataFrame retention), so the outlier gate,
-  * the prev-artifact parser, and the fixture manifest carry their own
-  * unit contracts. */
+  * the prev-artifact parser, and the fixture manifest (FsUtil.manifest,
+  * which also keys engine state) carry their own unit contracts. */
 class BenchSupportSpec extends AnyFunSuite {
 
   private val artifact =
@@ -86,13 +87,13 @@ class BenchSupportSpec extends AnyFunSuite {
     try {
       val f = new java.io.File(dir, "t.parquet")
       java.nio.file.Files.writeString(f.toPath, "abc")
-      val m1 = BenchSupport.manifest(dir.getPath)
-      val m2 = BenchSupport.manifest(dir.getPath)
+      val m1 = FsUtil.manifest(dir.getPath)
+      val m2 = FsUtil.manifest(dir.getPath)
       assert(m1 == m2 && m1.length == 32)
       java.nio.file.Files.writeString(f.toPath, "abcd")
-      assert(BenchSupport.manifest(dir.getPath) != m1,
+      assert(FsUtil.manifest(dir.getPath) != m1,
         "size change must change the manifest")
-      assert(BenchSupport.manifest("/nonexistent/dir/xyz").nonEmpty)
+      assert(FsUtil.manifest("/nonexistent/dir/xyz").nonEmpty)
     } finally {
       Option(dir.listFiles()).getOrElse(Array.empty).foreach(_.delete())
       dir.delete()
@@ -139,10 +140,10 @@ class BenchSupportSpec extends AnyFunSuite {
       val f = new java.io.File(dir, "t.parquet")
       java.nio.file.Files.writeString(f.toPath, "abc")
       assert(f.setLastModified(1000000000000L))
-      val m1 = BenchSupport.manifest(dir.getPath)
+      val m1 = FsUtil.manifest(dir.getPath)
       java.nio.file.Files.writeString(f.toPath, "xyz") // same size
       assert(f.setLastModified(1000000001000L))
-      assert(BenchSupport.manifest(dir.getPath) != m1,
+      assert(FsUtil.manifest(dir.getPath) != m1,
         "same-size regeneration must change the manifest via mtime")
     } finally {
       Option(dir.listFiles()).getOrElse(Array.empty).foreach(_.delete())
@@ -164,15 +165,15 @@ class BenchSupportSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(g.toPath, "xy")
       assert(g.setLastModified(1000000002000L))
       // a file stamps its own (name, size, mtime) line...
-      val m1 = BenchSupport.manifest(f.getPath, strict = true)
+      val m1 = FsUtil.manifest(f.getPath, strict = true)
       assert(m1 == md5("t.parquet:3:1000000000000"))
       assert(m1 != md5(""), "a single file must not hash the empty listing")
       // ...and a directory keeps the sorted relative listing it always had
-      assert(BenchSupport.manifest(dir.getPath) ==
+      assert(FsUtil.manifest(dir.getPath) ==
         md5("d/p.parquet:2:1000000002000\nt.parquet:3:1000000000000"))
       java.nio.file.Files.writeString(f.toPath, "xyz") // same size
       assert(f.setLastModified(1000000001000L))
-      assert(BenchSupport.manifest(f.getPath, strict = true) != m1,
+      assert(FsUtil.manifest(f.getPath, strict = true) != m1,
         "an in-place rewrite of the file must change its manifest")
     } finally {
       Option(new java.io.File(dir, "d").listFiles()).getOrElse(Array.empty)

@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The one-call entry point: attach is idempotent and actually wires the
-  * SQL surface (native function, TVF, optimizer rules). */
+  * SQL surface (native function, TVF, optimizer rules), and every session
+  * in the repo gets it from the one place. */
 class GraftSessionSpec extends SparkSpec {
 
   test("attach wires functions, strategies, TVFs, and rules — twice is safe") {
@@ -30,10 +32,43 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("builder carries the session contract") {
-    val b = GraftSession.builder("local[2]", "graft-contract-test")
-    // getOrCreate returns the EXISTING test session (shared JVM), so
-    // assert on the builder's intent via a fresh config read-back
-    val s = b.getOrCreate()
+    // Bench.session builds every session in the repo: UTC, nanosAsLong,
+    // every component once, and only GraftSession assigns the experimental
+    // lists
+    val s = Bench.session(defaultCpus = 4)
+    assert(s eq spark, "the test session is Bench.session's session")
+    GraftSession.attach(s)
+    GraftSession.attach(s)
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val opts = s.experimental.extraOptimizations
+    GraftSession.optimizerRules.foreach(r =>
+      assert(opts.count(_ == r) == 1, s"${r.ruleName} in $opts"))
+    val strats = s.experimental.extraStrategies
+    GraftSession.plannerStrategies.foreach(st =>
+      assert(strats.count(_ == st) == 1, s"$st in $strats"))
+    val fns = s.sessionState.functionRegistry
+    GraftSession.nativeFunctions.foreach(f => assert(fns.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(f.name)), f.name))
+    val tvfs = s.sessionState.tableFunctionRegistry
+    GraftSession.tableFunctions.foreach(t =>
+      assert(tvfs.functionExists(t._1), t._1.funcName))
+    // the experimental lists are written in one place: an assignment
+    // anywhere else in the engine is a second install path that can drift
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
+    val assign = """\bextra(Optimizations|Strategies)\s*=(?!=)""".r
+    val files = Files.walk(root)
+    val hits =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if assign.findFirstIn(line).isDefined =>
+            s"${root.relativize(p)}:${i + 1}"
+        })
+      finally files.close()
+    // one assignment per list, both in GraftSession's shared helper
+    assert(hits.length == 2 &&
+      hits.forall(_.startsWith("graft/GraftSession.scala:")),
+      s"experimental lists assigned outside the shared helper: $hits")
   }
 }

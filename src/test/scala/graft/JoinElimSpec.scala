@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
 /** Unique-key left-join elimination: result identity (ground truth
-  * collected BEFORE the rule is installed), the join leaving the plan,
+  * collected BEFORE any key is declared), the join leaving the plan,
   * the counter proof, and every non-match guard (no declaration, right
   * column referenced, inner join, different right plan, partial key).
   */
@@ -28,13 +28,14 @@ class JoinElimSpec extends SparkSpec with BeforeAndAfterAll {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }.nonEmpty
 
-  private lazy val truth = q.collect().map(_.toSeq) // before install
+  private lazy val truth = q.collect().map(_.toSeq) // before any key
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    truth // force ground truth pre-rule
+    // the session carries the rule from the start; with no key declared
+    // it matches nothing, so the truth is the join executed literally
     JoinElimination.clear()
-    JoinElimination.install(spark)
+    truth
     JoinElimination.registerUniqueKey(customer, Seq("c_custkey"))
   }
 

@@ -1,7 +1,9 @@
 package graft
 
-import graft.functions.{GraftExtensions, NativeCosine}
+import graft.functions.{GraftExtensions, NativeCosine, Registry}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ExtensionsProbe
 
 /** The native codegen CosineSim expression: correctness vs the HOF
   * formulation, null semantics, plan shape, and registration paths. */
@@ -55,7 +57,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("PromoteCosineUdf rewrites the registered UDF to the native expression") {
     graft.functions.Registry.registerAll(spark)
-    NativeCosine.enableUdfPromotion(spark)
     table("embeddings").limit(20).createOrReplaceTempView("emb_native")
     val df = spark.sql("""
       SELECT vec_id, cosine_sim(embedding, embedding) AS c
@@ -190,14 +191,30 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the function into a new session") {
-    // Re-applying the extension to the current session's registry must be
-    // idempotent; a cold cluster would pass the class via
-    // spark.sql.extensions (documented on GraftExtensions).
-    new GraftExtensions()
-    NativeCosine.register(spark)
-    NativeCosine.register(spark)
-    assert(spark.sessionState.functionRegistry
-      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(NativeCosine.name)))
+    // The cluster path (spark.sql.extensions=graft.functions.GraftExtensions)
+    // installs what the library path (GraftSession.attach) does, less the
+    // Scala-UDF registry (spark.udf has no extensions form).
+    def functionNames(s: SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    def tableFunctionNames(s: SparkSession): Set[String] =
+      s.sessionState.tableFunctionRegistry.listFunction().map(_.funcName).toSet
+    val bare = spark.newSession()
+    val udfs = spark.newSession()
+    Registry.registerAll(udfs)
+    val attached = GraftSession.attach(spark.newSession())
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+
+    assert(ExtensionsProbe.strategies(ext, bare) ==
+      attached.experimental.extraStrategies)
+    assert(ExtensionsProbe.optimizerRules(ext, bare) ==
+      attached.experimental.extraOptimizations)
+    val injected = ExtensionsProbe.functionNames(ext)
+    assert(injected.contains(NativeCosine.name))
+    assert(injected == functionNames(attached) -- functionNames(udfs))
+    val injectedTvfs = ExtensionsProbe.tableFunctionNames(ext)
+    assert(injectedTvfs.nonEmpty &&
+      injectedTvfs == tableFunctionNames(attached) -- tableFunctionNames(bare))
   }
 
   test("BpeMergePair rejects a malformed pair on the driver, before any task") {

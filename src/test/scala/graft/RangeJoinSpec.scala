@@ -124,7 +124,6 @@ class RangeJoinSpec extends SparkSpec {
   }
 
   test("sql: range_lookup TVF equals the DataFrame form") {
-    graft.plans.RangeSql.install(spark)
     facts.createOrReplaceTempView("range_spec_facts")
     bands.createOrReplaceTempView("range_spec_bands")
     val sqlDf = spark.sql(

@@ -4,23 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session — Spark's
-  * getOrCreate makes this safe across suites and keeps test startup O(1)).
-  * Mirrors the Verify/Bench session config exactly.
+/** Shared local SparkSession for all suites: `Bench.session(4)`, the session
+  * Bench times and Verify checks, with every engine component attached
+  * (one JVM-wide session — Spark's getOrCreate makes this safe across suites
+  * and keeps test startup O(1)). `SPARK_GRAFT_CPUS` sets its cores, as it
+  * does for Bench and Verify.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Bench.session(defaultCpus = 4)
   /** Smallest fixture — specs verify exact semantics here; the driver's
     * DuckDB oracle covers sf0.01. */
   val sf: String = "/root/testdata/sf0.001"

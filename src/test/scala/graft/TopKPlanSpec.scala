@@ -11,6 +11,18 @@ import org.apache.spark.sql.functions._
   */
 class TopKPlanSpec extends SparkSpec {
 
+  /** Runs `body` with the rewrite present or absent, then restores
+    * whether it was installed before — the shared session carries it for
+    * every later suite. */
+  private def withRewrite[T](present: Boolean)(body: => T): T = {
+    val was = spark.experimental.extraOptimizations
+      .contains(graft.plans.RewriteTopKWindow)
+    if (present) TopKPerGroup.install(spark) else TopKPerGroup.uninstall(spark)
+    try body
+    finally
+      if (was) TopKPerGroup.install(spark) else TopKPerGroup.uninstall(spark)
+  }
+
   private def topkDf: DataFrame = {
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
@@ -22,12 +34,11 @@ class TopKPlanSpec extends SparkSpec {
   }
 
   test("Bench.session installs the rewrite: row_number() <= k plans TopKPerGroupExec") {
-    // a session with the rule absent (as before any registry query ran),
-    // then the measurement-session helper; the helper returns this same
-    // JVM-wide session, so its runtime settings are restored afterwards
+    // a session with the rule absent, then the measurement-session
+    // helper; the helper returns this same JVM-wide session, so its
+    // runtime settings are restored afterwards
     val partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    TopKPerGroup.uninstall(spark)
-    try {
+    try withRewrite(present = false) {
       // the adaptive root is opaque to collect; read the rendered plan
       def heapExec(df: DataFrame) =
         df.queryExecution.executedPlan.toString.contains("TopKPerGroup ")
@@ -35,15 +46,11 @@ class TopKPlanSpec extends SparkSpec {
       val s = Bench.session(defaultCpus = 4)
       assert(s eq spark)
       assert(heapExec(topkDf), topkDf.queryExecution.executedPlan.toString)
-    } finally {
-      TopKPerGroup.uninstall(spark)
-      spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
   }
 
   test("sql: topk_per_group TVF equals the DataFrame form and plans the heap exec") {
-    graft.plans.TopKSql.install(spark)
-    try {
+    withRewrite(present = true) {
       table("orders").createOrReplaceTempView("orders_v")
       val tvf = spark.sql(
         """SELECT o_orderpriority, rn, o_orderkey
@@ -62,38 +69,35 @@ class TopKPlanSpec extends SparkSpec {
           |FROM topk_per_group('orders_v', 'o_orderpriority',
           |  'o_totalprice DESC, o_orderkey', 3, 'rank_in_group')""".stripMargin)
       assert(named.collect().forall(_.getAs[Int]("rank_in_group") <= 3))
-    } finally TopKPerGroup.uninstall(spark)
+    }
   }
 
   test("sql: topk_per_group TVF rejects malformed calls at analysis time") {
-    graft.plans.TopKSql.install(spark)
-    try {
-      table("orders").createOrReplaceTempView("orders_v")
-      def bad(sql: String, frag: String): Unit = {
-        val e = intercept[Exception](spark.sql(sql).collect())
-        def msgs(t: Throwable): Seq[String] = Option(t).toSeq
-          .flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-        assert(msgs(e).exists(_.contains(frag)),
-          s"expected '$frag' in: ${msgs(e)}")
-      }
-      bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority')",
-        "expects 4-5 arguments")
-      bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority', 'o_totalprice', 0)",
-        "positive integer")
-      bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority', 'o_totalprice SIDEWAYS', 3)",
-        "bad order entry")
-      bad("SELECT * FROM topk_per_group('orders_v', '', 'o_totalprice', 3)",
-        "at least one column")
-      bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority', 'o_totalprice', 3, 'o_orderkey')",
-        "collides")
-      // non-plain identifiers fail with the TVF's own message, not a
-      // confusing downstream resolution error (backticks would otherwise
-      // feed col() verbatim; dots would parse as struct access)
-      bad("SELECT * FROM topk_per_group('orders_v', '`o_orderpriority`', 'o_totalprice', 3)",
-        "plain identifier")
-      bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority', 'my.col DESC', 3)",
-        "plain identifier")
-    } finally TopKPerGroup.uninstall(spark)
+    table("orders").createOrReplaceTempView("orders_v")
+    def bad(sql: String, frag: String): Unit = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      def msgs(t: Throwable): Seq[String] = Option(t).toSeq
+        .flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+      assert(msgs(e).exists(_.contains(frag)),
+        s"expected '$frag' in: ${msgs(e)}")
+    }
+    bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority')",
+      "expects 4-5 arguments")
+    bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority', 'o_totalprice', 0)",
+      "positive integer")
+    bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority', 'o_totalprice SIDEWAYS', 3)",
+      "bad order entry")
+    bad("SELECT * FROM topk_per_group('orders_v', '', 'o_totalprice', 3)",
+      "at least one column")
+    bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority', 'o_totalprice', 3, 'o_orderkey')",
+      "collides")
+    // non-plain identifiers fail with the TVF's own message, not a
+    // confusing downstream resolution error (backticks would otherwise
+    // feed col() verbatim; dots would parse as struct access)
+    bad("SELECT * FROM topk_per_group('orders_v', '`o_orderpriority`', 'o_totalprice', 3)",
+      "plain identifier")
+    bad("SELECT * FROM topk_per_group('orders_v', 'o_orderpriority', 'my.col DESC', 3)",
+      "plain identifier")
   }
 
   test("whole-stage codegen compiles when a projection fuses into the heap phase") {
@@ -102,10 +106,9 @@ class TopKPlanSpec extends SparkSpec {
     // and Janino rejected the duplicate locals, so the whole stage — scan
     // included — fell back to interpreted execution. fallback=false turns
     // that silent degrade into a test failure.
-    TopKPerGroup.install(spark)
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    try withRewrite(present = true) {
       // the q_quantile_sketch shape: derived columns (salt + hash) feed a
       // salted local pass, whose output feeds the global pass in the same
       // stage — both failing compositions from the round-14 audit
@@ -130,13 +133,13 @@ class TopKPlanSpec extends SparkSpec {
       val got = heapForm.collect().map(_.toSeq).toSeq
       val plan = heapForm.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerGroup "), s"heap exec not planned:\n$plan")
-      TopKPerGroup.uninstall(spark)
-      val windowForm = twoPhase // fresh plan: rewrite uninstalled ⇒ native Window
-      val expected = windowForm.collect().map(_.toSeq).toSeq
-      assert(!windowForm.queryExecution.executedPlan.toString.contains("TopKPerGroup "))
-      assert(got == expected)
+      withRewrite(present = false) {
+        val windowForm = twoPhase // fresh plan: rewrite absent ⇒ native Window
+        val expected = windowForm.collect().map(_.toSeq).toSeq
+        assert(!windowForm.queryExecution.executedPlan.toString.contains("TopKPerGroup "))
+        assert(got == expected)
+      }
     } finally {
-      TopKPerGroup.uninstall(spark)
       prev match {
         case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
         case None => spark.conf.unset("spark.sql.codegen.fallback")
@@ -145,8 +148,7 @@ class TopKPlanSpec extends SparkSpec {
   }
 
   test("rewrite fires: two heap phases straddle one exchange, no sorts below") {
-    TopKPerGroup.install(spark)
-    try {
+    withRewrite(present = true) {
       // executedPlan is AdaptiveSparkPlanExec (opaque to collect) — assert
       // on the rendered initial plan
       val plan = topkDf.queryExecution.executedPlan.toString
@@ -164,12 +166,11 @@ class TopKPlanSpec extends SparkSpec {
       val belowTopK = lines.dropWhile(!_.contains("TopKPerGroup "))
       assert(!belowTopK.exists(l => l.contains("Sort ") &&
         !l.contains("Sort [o_orderpriority")), plan)
-    } finally TopKPerGroup.uninstall(spark)
+    }
   }
 
   test("heap phases fuse into whole-stage codegen spans") {
-    TopKPerGroup.install(spark)
-    try {
+    withRewrite(present = true) {
       val df = topkDf
       df.collect() // force execution so AQE finalizes the plan
       val plan = df.queryExecution.executedPlan.toString
@@ -183,21 +184,19 @@ class TopKPlanSpec extends SparkSpec {
         .filter(_.contains("*(")).toSeq
       assert(fused.length == 2,
         s"expected both heap phases codegen-fused, got:\n$plan")
-    } finally TopKPerGroup.uninstall(spark)
+    }
   }
 
   test("operator output is row-identical to the Window form") {
-    val baseline = topkDf.collect().map(_.toSeq)
-    TopKPerGroup.install(spark)
-    try {
+    val baseline = withRewrite(present = false)(topkDf.collect().map(_.toSeq))
+    withRewrite(present = true) {
       val got = topkDf.collect().map(_.toSeq)
       assert(got.sameElements(baseline))
-    } finally TopKPerGroup.uninstall(spark)
+    }
   }
 
   test("global top-k (no partition keys) works and ranks correctly") {
-    TopKPerGroup.install(spark)
-    try {
+    withRewrite(present = true) {
       val w = Window.orderBy(col("o_totalprice").desc, col("o_orderkey"))
       val rows = table("orders")
         .withColumn("rn", row_number().over(w))
@@ -210,12 +209,11 @@ class TopKPlanSpec extends SparkSpec {
       assert(prices.zip(prices.tail).forall { case (a, b) => a >= b })
       val expTop = table("orders").agg(max("o_totalprice")).head().getDouble(0)
       assert(prices.head == expTop)
-    } finally TopKPerGroup.uninstall(spark)
+    }
   }
 
   test("rewrite does NOT fire on rank() or on non-literal bounds") {
-    TopKPerGroup.install(spark)
-    try {
+    withRewrite(present = true) {
       val w = Window.partitionBy("o_orderpriority")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       val ranked = table("orders")
@@ -223,16 +221,20 @@ class TopKPlanSpec extends SparkSpec {
       val execs = ranked.queryExecution.executedPlan
         .collect { case e: TopKPerGroupExec => e }
       assert(execs.isEmpty, "rank() must keep the Window plan")
-    } finally TopKPerGroup.uninstall(spark)
+    }
   }
 
   test("rewrite strips only a WindowGroupLimit matching the window's own spec") {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window => LWindow, WindowGroupLimit}
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    val optimized = table("orders")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .queryExecution.optimizedPlan
+    // the plan Spark optimizes without the rule, which the rule is then
+    // applied to by hand
+    val optimized = withRewrite(present = false) {
+      table("orders")
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        .queryExecution.optimizedPlan
+    }
     // sanity: InferWindowGroupLimit put its pre-bound under the Window,
     // and the rewrite strips that matching bound
     assert(optimized.collect { case g: WindowGroupLimit => g }.nonEmpty)
@@ -265,10 +267,8 @@ class TopKPlanSpec extends SparkSpec {
       .filter(col("rn") <= 4)
       .select("o_orderpriority", "rn", "o_orderkey", "price")
       .orderBy("o_orderpriority", "rn").collect().map(_.toSeq)
-    val baseline = run
-    TopKPerGroup.install(spark)
-    try assert(run.sameElements(baseline))
-    finally TopKPerGroup.uninstall(spark)
+    val baseline = withRewrite(present = false)(run)
+    withRewrite(present = true)(assert(run.sameElements(baseline)))
   }
 
   test("sort fallback: near-unique key past the group budget stays row-identical") {
@@ -279,11 +279,10 @@ class TopKPlanSpec extends SparkSpec {
     def q = table("orders").withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 2).select("o_orderkey", "rn", "o_totalprice")
       .orderBy("o_orderkey", "rn")
-    val baseline = q.collect().map(_.toSeq)
+    val baseline = withRewrite(present = false)(q.collect().map(_.toSeq))
     spark.conf.set("spark.sql.adaptive.enabled", "false") // collectable plan
     spark.conf.set(graft.plans.TopKStrategy.MaxHeapRowsKey, "20")
-    TopKPerGroup.install(spark)
-    try {
+    try withRewrite(present = true) {
       val df = q
       val got = df.collect().map(_.toSeq)
       assert(got.sameElements(baseline))
@@ -294,7 +293,6 @@ class TopKPlanSpec extends SparkSpec {
       val fallbacks = execs.map(_.metrics("sortFallbacks").value).sum
       assert(fallbacks > 0, "expected at least one heap→sort degrade")
     } finally {
-      TopKPerGroup.uninstall(spark)
       spark.conf.unset(graft.plans.TopKStrategy.MaxHeapRowsKey)
       spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
@@ -311,13 +309,12 @@ class TopKPlanSpec extends SparkSpec {
       .filter(col("rn") <= 3)
       .select("o_orderpriority", "rn", "o_orderkey")
       .orderBy("o_orderpriority", "rn")
-    val baseline = q.collect().map(_.toSeq)
+    val baseline = withRewrite(present = false)(q.collect().map(_.toSeq))
     spark.conf.set(key, "false")
     spark.conf.set(graft.plans.TopKStrategy.MaxHeapRowsKey, "3") // 1 group
-    TopKPerGroup.install(spark)
-    try assert(q.collect().map(_.toSeq).sameElements(baseline))
+    try withRewrite(present = true)(
+      assert(q.collect().map(_.toSeq).sameElements(baseline)))
     finally {
-      TopKPerGroup.uninstall(spark)
       spark.conf.unset(graft.plans.TopKStrategy.MaxHeapRowsKey)
       spark.conf.set(key, prev)
     }
@@ -327,14 +324,10 @@ class TopKPlanSpec extends SparkSpec {
     val key = "spark.sql.codegen.wholeStage"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
-    TopKPerGroup.install(spark)
-    try {
+    try withRewrite(present = true) {
       // no projection after the filter: downstream consumes our rows raw
       val rows = topkDf.collect()
       assert(rows.length > 0 && rows.length <= 15)
-    } finally {
-      TopKPerGroup.uninstall(spark)
-      spark.conf.set(key, prev)
-    }
+    } finally spark.conf.set(key, prev)
   }
 }

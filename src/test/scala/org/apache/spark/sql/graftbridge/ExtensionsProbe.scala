@@ -1,0 +1,28 @@
+/* In the org.apache.spark.sql namespace to read SparkSessionExtensions'
+ * `private[sql]` build accessors. */
+package org.apache.spark.sql.graftbridge
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.analysis.{SimpleFunctionRegistry, SimpleTableFunctionRegistry}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
+
+/** What a set of session extensions installs into a session built with
+  * them, read without building one. */
+object ExtensionsProbe {
+
+  def strategies(ext: SparkSessionExtensions, s: SparkSession): Seq[SparkStrategy] =
+    ext.buildPlannerStrategies(s)
+
+  def optimizerRules(ext: SparkSessionExtensions, s: SparkSession): Seq[Rule[LogicalPlan]] =
+    ext.buildOptimizerRules(s)
+
+  def functionNames(ext: SparkSessionExtensions): Set[String] =
+    ext.registerFunctions(new SimpleFunctionRegistry)
+      .listFunction().map(_.funcName).toSet
+
+  def tableFunctionNames(ext: SparkSessionExtensions): Set[String] =
+    ext.registerTableFunctions(new SimpleTableFunctionRegistry)
+      .listFunction().map(_.funcName).toSet
+}
