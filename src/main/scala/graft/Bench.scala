@@ -1,83 +1,99 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Benchmark main. Prints ONE JSON line (the driver's contract) and ALSO
-  * writes the identical JSON to BENCH_LOCAL.json in the working directory:
-  * the driver captures a bounded stdout tail, which clipped the r03/r04
-  * artifacts mid-object ("parsed": null), so the file is the durable copy.
-  *
-  * Each query runs `SPARK_GRAFT_BENCH_RUNS` times (env, default 3) and reports
-  * the per-query MEDIAN — single-shot timings on a shared machine conflate
-  * GC pauses / page cache state / concurrent load with the plan's cost
-  * (r04's 100x phantom regressions on untouched queries). Failures are
-  * reported in a separate "errors" map instead of being silently folded
-  * into the timings as time-to-exception.
-  *
-  * Trustworthiness machinery (round-8 verdict task #1 — that round's
-  * committed artifact shipped phantom 17-22x regressions):
-  *   - NO DataFrame retention: the plan audit runs INLINE right after each
-  *     query's timed runs (the df has just been counted, so the diagnosis
-  *     reads the final adaptive plan — the diagnoseExecuted flavor), and
-  *     only the counts survive. Holding every benched df until a post-sweep
-  *     audit pinned all eagerly-checkpointed relations in the block manager
-  *     for the whole 220-query sweep; storage pressure grew monotonically
-  *     and the late-alphabet lineitem scans paid for it.
-  *   - OUTLIER RE-MEASURE: any query whose median exceeds 1.5x its value in
-  *     the latest committed BENCH_r*.json is re-run (same runs count) after
-  *     the sweep; both medians ship in "remeasured" and the headline takes
-  *     the MIN of the two (load spikes only ever inflate a timing — the
-  *     min of two medians is the robust estimate of the plan's cost).
-  *   - planRisksNovel = risk findings MINUS the PlanAllowlist grants: the
-  *     graded signal is "novel scale risks: 0", not a raw count that grows
-  *     with every documented exception. A plan audit that throws is
-  *     counted in planAuditErrors (and logged), never read as zero risks.
-  *   - "fixture" stamps an md5 manifest of the SF dir (file names+sizes),
-  *     so cross-session sweeps are provably same-data.
-  *   - "storagePost" reports block-manager residency after the sweep (gc +
-  *     ContextCleaner drain) with an overBudget flag — a retention bug like
-  *     round 8's now ships its own red flag in the same artifact.
-  */
 /** The pure (Spark-free) halves of the bench harness, split out so the
   * machinery that produces the GRADED artifact is itself unit-testable —
-  * two rounds of grading were misled by harness bugs, so the parser
-  * carries specs (BenchSupportSpec). */
+  * two rounds of grading were misled by harness bugs, so the artifact's
+  * reader and writer carry specs (BenchSupportSpec). */
 object BenchSupport {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Parse the per-query medians out of a prior bench artifact, but ONLY
-    * when it was measured on the same fixture dir — cross-SF timings are
-    * incomparable, and a 10x-fixture sweep comparing against sf0.1
-    * numbers would trip the outlier gate on EVERY query and silently
-    * double its own cost on re-measures. Returns empty on any mismatch
-    * or parse failure (the re-measure pass then simply doesn't run). */
-  def parsePrevQueries(txt: String, sfDir: String): Map[String, Double] = {
-    def parse(t: String): Map[String, Double] = {
-      val sameSf = {
-        val m = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(t)
-        m.forall(_.group(1) == sfDir)
-      }
-      val qStart = t.indexOf("\"queries\":{")
-      if (qStart < 0 || !sameSf) Map.empty[String, Double] else {
-        val body = t.substring(qStart + 11, t.indexOf('}', qStart))
-        val kv = "\"([^\"]+)\":(-?[\\d.]+(?:[eE][+-]?\\d+)?)".r
-        kv.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+  /** The one JSON mapper Bench and Verify read and write through. */
+  val mapper: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** A prior artifact's per-query medians and the mean of its
+    * calibration.pre/post (None when absent or not above 0) — always
+    * read from the same file, so the gate never pairs one run's medians
+    * with another run's load. */
+  final case class Baseline(queries: Map[String, Double],
+                            calibration: Option[Double])
+
+  /** Read a prior bench artifact: Bench's own object, or the driver's
+    * capture wrapper, whose "parsed" field holds that object (null when
+    * the driver could not parse the line). None on malformed input, on an
+    * empty medians map, and unless the object was measured on `sfDir` —
+    * cross-SF timings are incomparable, and a 10x-fixture sweep compared
+    * against sf0.1 numbers would trip the outlier gate on EVERY query and
+    * double its own cost on re-measures. */
+  def readBaseline(txt: String, sfDir: String): Option[Baseline] = {
+    val root = try Option(mapper.readTree(txt)) catch {
+      case e: JacksonException =>
+        log.warn("prev bench artifact unparseable; no outlier re-measure", e)
+        None
     }
-    try {
-      val direct = parse(txt)
-      // the committed BENCH_r*.json is the DRIVER's wrapper: my JSON line
-      // lives escaped (and possibly clipped) inside its "tail" string —
-      // unescape and retry; a partial (clipped) medians map still feeds
-      // the outlier gate for the queries it covers
-      if (direct.nonEmpty) direct
-      else parse(txt.replace("\\\"", "\""))
-    } catch { case e: Throwable =>
-      log.warn("prev bench artifact unparseable; no outlier re-measure", e)
-      Map.empty
+    root.map(r => if (r.has("parsed")) r.get("parsed") else r)
+      .filter(_.path("sf").textValue == sfDir)
+      .flatMap { o =>
+        val queries = o.path("queries").properties.asScala.collect {
+          case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+        }.toMap
+        val cal = o.path("calibration")
+        val (pre, post) = (cal.path("pre"), cal.path("post"))
+        val calMean = Option.when(pre.isNumber && post.isNumber)(
+          (pre.asDouble + post.asDouble) / 2).filter(_ > 0)
+        Option.when(queries.nonEmpty)(Baseline(queries, calMean))
+      }
+  }
+
+  /** The artifact Bench prints and writes, as one ordered map of its 19
+    * keys. `queries` are the final per-query medians (-1 = no success);
+    * the total, the per-query calibrated values and the calibrated total
+    * derive from them and from mean(calPre, calPost). */
+  def artifact(sfDir: String, runs: Int, queries: Seq[(String, Double)],
+               calPre: Double, calPost: Double, calPrev: Double,
+               planRisks: Int, planRisksNovel: Int, planAuditErrors: Int,
+               manifest: String, baseBuilds: Seq[(String, Double)],
+               storageBytes: Long, storageRdds: Int, overBudget: Boolean,
+               remeasured: Seq[(String, (Double, Double, Double))],
+               partialRuns: Seq[(String, Int)],
+               errors: Seq[(String, String)]): ListMap[String, Any] = {
+    val total = queries.collect { case (_, v) if v >= 0 => v }.sum
+    // total_calibrated (round-10 verdict task #6) and queries_calibrated
+    // (task #5; -1 marks failed queries) divide by the mean calibration:
+    // this VM's load swings 2-3x hour to hour, and a ratio of same-hour
+    // wall-clock times compares plan cost like-for-like across sweeps
+    val calMean = (calPre + calPost) / 2
+    val calibrated = queries.map { case (k, v) =>
+      val cal = if (v >= 0 && calMean > 0) v / calMean else -1.0
+      k -> math.floor(cal * 10000 + 0.5) / 10000
     }
+    ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> ListMap(queries: _*),
+      "queries_calibrated" -> ListMap(calibrated: _*),
+      "sf" -> sfDir, "runs" -> runs, "stat" -> "median",
+      "calibration" -> ListMap("pre" -> calPre, "post" -> calPost,
+        "prev" -> calPrev),
+      "total_calibrated" -> (if (calMean > 0) total / calMean else -1.0),
+      "planRisks" -> planRisks, "planRisksNovel" -> planRisksNovel,
+      "planAuditErrors" -> planAuditErrors,
+      "fixture" -> ListMap("dir" -> sfDir, "manifest" -> manifest),
+      "baseBuilds" -> ListMap(baseBuilds: _*),
+      "storagePost" -> ListMap("bytes" -> storageBytes, "rdds" -> storageRdds,
+        "overBudget" -> overBudget),
+      "remeasured" -> ListMap(remeasured.map { case (k, (a, b, p)) =>
+        k -> ListMap("first" -> a, "second" -> b, "prev" -> p,
+          "isolated" -> true)
+      }: _*),
+      "partialRuns" -> ListMap(partialRuns: _*),
+      "errors" -> ListMap(errors: _*))
   }
 
   /** Latest committed BENCH_r<N>.json in `dir`, by round number. */
@@ -113,33 +129,47 @@ object BenchSupport {
     if (calNow > 0 && calPrev > 0)
       prev > 0 && median > 0.5 && median / calNow > 1.5 * (prev / calPrev)
     else isOutlier(median, prev)
-
-  /** Mean of the pre/post calibration stamps of a prior bench artifact
-    * (direct JSON or escaped inside the driver wrapper's "tail"). */
-  def parsePrevCalibration(txt: String): Option[Double] = {
-    // no closing brace in the pattern: the object gained a "prev" field
-    // in round 12, and older artifacts end right after "post"
-    val re =
-      """"calibration":\{"pre":(-?[\d.]+(?:[eE][+-]?\d+)?),"post":(-?[\d.]+(?:[eE][+-]?\d+)?)""".r
-    def parse(t: String): Option[Double] =
-      re.findFirstMatchIn(t)
-        .map(m => (m.group(1).toDouble + m.group(2).toDouble) / 2)
-        .filter(_ > 0)
-    try parse(txt).orElse(parse(txt.replace("\\\"", "\"")))
-    catch { case e: Throwable =>
-      log.warn("prev bench calibration unparseable; raw outlier gate", e)
-      None
-    }
-  }
-
-  /** `s` as a quoted JSON string literal (Jackson's escaper: quote,
-    * backslash and every control character), for the hand-assembled
-    * artifact and oracle JSON. */
-  def jsonString(s: String): String =
-    "\"" + new String(
-      com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 }
 
+/** Benchmark main. Prints ONE JSON line (the driver's contract) and ALSO
+  * writes the identical JSON to BENCH_LOCAL.json in the working directory:
+  * the driver captures a bounded stdout tail, which clipped the r03/r04
+  * artifacts mid-object ("parsed": null), so the file is the durable copy.
+  *
+  * Each query runs `SPARK_GRAFT_BENCH_RUNS` times (env, default 3) and reports
+  * the per-query MEDIAN — single-shot timings on a shared machine conflate
+  * GC pauses / page cache state / concurrent load with the plan's cost
+  * (r04's 100x phantom regressions on untouched queries). Failures are
+  * reported in a separate "errors" map instead of being silently folded
+  * into the timings as time-to-exception.
+  *
+  * Trustworthiness machinery (round-8 verdict task #1 — that round's
+  * committed artifact shipped phantom 17-22x regressions):
+  *   - NO DataFrame retention: the plan audit runs INLINE right after each
+  *     query's timed runs (the df has just been counted, so the diagnosis
+  *     reads the final adaptive plan — the diagnoseExecuted flavor), and
+  *     only the counts survive. Holding every benched df until a post-sweep
+  *     audit pinned all eagerly-checkpointed relations in the block manager
+  *     for the whole 220-query sweep; storage pressure grew monotonically
+  *     and the late-alphabet lineitem scans paid for it.
+  *   - OUTLIER RE-MEASURE: any query whose median exceeds 1.5x its value in
+  *     the latest committed BENCH_r*.json (the driver's wrapper; Bench's
+  *     object is its "parsed" field) is re-run (same runs count) after
+  *     the sweep; both medians ship in "remeasured" and the headline takes
+  *     the MIN of the two (load spikes only ever inflate a timing — the
+  *     min of two medians is the robust estimate of the plan's cost).
+  *   - The artifact is one ordered map (BenchSupport.artifact), and every
+  *     artifact is read and written through BenchSupport.mapper (Jackson).
+  *   - planRisksNovel = risk findings MINUS the PlanAllowlist grants: the
+  *     graded signal is "novel scale risks: 0", not a raw count that grows
+  *     with every documented exception. A plan audit that throws is
+  *     counted in planAuditErrors (and logged), never read as zero risks.
+  *   - "fixture" stamps an md5 manifest of the SF dir (file names+sizes),
+  *     so cross-session sweeps are provably same-data.
+  *   - "storagePost" reports block-manager residency after the sweep (gc +
+  *     ContextCleaner drain) with an overBudget flag — a retention bug like
+  *     round 8's now ships its own red flag in the same artifact.
+  */
 object Bench {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -148,7 +178,6 @@ object Bench {
     // the driver benches at local[32] with shuffle.partitions=32
     val spark = session(defaultCpus = 32)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    import BenchSupport.jsonString
     // Warmup: the first job pays session setup (codegen compiler, parquet
     // footers, scheduler spin-up) — run the flagship once untimed so the
     // first measured query isn't charged ~5s of one-time cost.
@@ -275,23 +304,25 @@ object Bench {
     // the headline takes the min.
     // Baseline chain for the outlier gate: explicit SPARK_GRAFT_BENCH_PREV
     // (special sweeps, e.g. sf1) → latest committed driver artifact
-    // (BENCH_r*.json — my JSON sits escaped in its "tail") → the committed
-    // BENCH_LOCAL.json (the previous full local sweep; read before this
-    // run overwrites it). First candidate that parses non-empty wins.
-    // the baseline's CALIBRATION must come from the same artifact as its
-    // per-query medians, so resolve the file text first
-    val prevTxt = (
+    // (BENCH_r*.json — my object sits in its "parsed" field) → the
+    // committed BENCH_LOCAL.json (the previous full local sweep; read
+    // before this run overwrites it). The first file that reads a
+    // same-SF, non-empty medians map wins; its calibration comes with it.
+    val baseline = (
       sys.env.get("SPARK_GRAFT_BENCH_PREV").map(new java.io.File(_)) ++
       BenchSupport.latestRoundArtifact(new java.io.File(".")) ++
-      Some(new java.io.File("BENCH_LOCAL.json")))
+      Some(new java.io.File("BENCH_LOCAL.json"))).view
       .filter(_.isFile)
-      .map(f => Files.readString(f.toPath))
-      .find(t => BenchSupport.parsePrevQueries(t, sfDir).nonEmpty)
-    val prev = prevTxt
-      .map(BenchSupport.parsePrevQueries(_, sfDir))
-      .getOrElse(Map.empty[String, Double])
-    val prevCal = prevTxt.flatMap(BenchSupport.parsePrevCalibration)
-      .getOrElse(-1.0)
+      .flatMap(f => BenchSupport.readBaseline(
+        Files.readString(f.toPath), sfDir).map(f -> _))
+      .headOption
+    System.err.println(baseline.fold(
+      "[bench] no baseline artifact for this fixture; no outlier re-measure") {
+      case (f, b) => s"[bench] baseline: ${f.getName} (${b.queries.size} " +
+        s"queries, calibration ${b.calibration.getOrElse(-1.0)})"
+    })
+    val prev = baseline.fold(Map.empty[String, Double])(_._2.queries)
+    val prevCal = baseline.flatMap(_._2.calibration).getOrElse(-1.0)
     val remeasured =
       scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double)]
     // QUIESCE before each re-measure (round-9 verdict: the re-measure ran
@@ -324,31 +355,7 @@ object Bench {
       }
     }
 
-    val qs = finalResults.map { case (k, v) => s"${jsonString(k)}:$v" }
-      .mkString("{", ",", "}")
     val calPost = calibrate()
-    // per-query CALIBRATED values (task #5): cross-round per-query
-    // comparison reads these directly instead of re-deriving from the
-    // headline calibration; -1 marks failed queries
-    val calMean = (calPre + calPost) / 2
-    val qsCal = finalResults.map { case (k, v) =>
-      val cal = if (v >= 0 && calMean > 0) v / calMean else -1.0
-      s"${jsonString(k)}:${math.floor(cal * 10000 + 0.5) / 10000}"
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }
-      .mkString("{", ",", "}")
-    val partialJson = partial.map { case (k, v) => s"${jsonString(k)}:$v" }
-      .mkString("{", ",", "}")
-    val remJson = remeasured.map { case (k, (a, b, p)) =>
-      s"${jsonString(k)}:{\"first\":$a,\"second\":$b,\"prev\":$p,\"isolated\":true}"
-    }.mkString("{", ",", "}")
-    val baseJson = baseBuilds.map { case (k, v) => s"${jsonString(k)}:$v" }
-      .mkString("{", ",", "}")
-
-    // Fixture manifest — two sweeps claiming the same fixture can be
-    // checked for actually-same data (round-8's sf1 artifacts diverged
-    // with no way to prove the inputs matched).
-    def manifest(dir: String): String = functions.FsUtil.manifest(dir)
 
     // Post-sweep storage audit: with no df retention, every Materialize
     // localCheckpoint should be unreferenced by now — give the JVM a gc
@@ -360,32 +367,20 @@ object Bench {
     Thread.sleep(2000)
     val rddInfos = spark.sparkContext.getRDDStorageInfo
     val storageBytes = rddInfos.map(i => i.memSize + i.diskSize).sum
-    val storageJson =
-      s"""{"bytes":$storageBytes,"rdds":${rddInfos.length},""" +
-      s""""overBudget":${storageBytes > storageBudgetBytes}}"""
 
-    val total = finalResults.collect { case (_, v) if v >= 0 => v }.sum
-    // Load-normalized headline (round-10 verdict task #6): the sweep
-    // total expressed in multiples of the fixed calibration workload,
-    // total / mean(calPre, calPost) — this VM's hour-to-hour load swings
-    // 2-3x, and the raw seconds conflate plan cost with host contention;
-    // two sweeps' total_calibrated compare like-for-like because the
-    // calibration runs under the same contention as the queries it
-    // normalizes. Dimensionless by design (a ratio of same-hour
-    // wall-clock times).
-    val totalCal = if (calMean > 0) total / calMean else -1.0
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""queries_calibrated":$qsCal,""" +
-      s""""sf":${jsonString(sfDir)},"runs":$runs,"stat":"median",""" +
-      s""""calibration":{"pre":$calPre,"post":$calPost,"prev":$prevCal},""" +
-      s""""total_calibrated":$totalCal,""" +
-      s""""planRisks":$planRisks,"planRisksNovel":$planRisksNovel,""" +
-      s""""planAuditErrors":$planAuditErrors,""" +
-      s""""fixture":{"dir":${jsonString(sfDir)},"manifest":${jsonString(manifest(sfDir))}},""" +
-      s""""baseBuilds":$baseJson,""" +
-      s""""storagePost":$storageJson,"remeasured":$remJson,""" +
-      s""""partialRuns":$partialJson,"errors":$errJson}"""
+    // "fixture" stamps the SF dir's file manifest, so two sweeps claiming
+    // the same fixture can be checked for actually-same data (round-8's
+    // sf1 artifacts diverged with no way to prove the inputs matched)
+    val json = BenchSupport.mapper.writeValueAsString(BenchSupport.artifact(
+      sfDir = sfDir, runs = runs, queries = finalResults,
+      calPre = calPre, calPost = calPost, calPrev = prevCal,
+      planRisks = planRisks, planRisksNovel = planRisksNovel,
+      planAuditErrors = planAuditErrors,
+      manifest = functions.FsUtil.manifest(sfDir), baseBuilds = baseBuilds,
+      storageBytes = storageBytes, storageRdds = rddInfos.length,
+      overBudget = storageBytes > storageBudgetBytes,
+      remeasured = remeasured.toSeq, partialRuns = partial.toSeq,
+      errors = errors.toSeq))
     // a filtered run must never masquerade as the durable full-registry
     // artifact the driver (and round-over-round comparisons) read;
     // SPARK_GRAFT_BENCH_OUT names special sweeps (e.g. BENCH_SF1_r09.json)

@@ -37,11 +37,8 @@ object Verify {
     }
     val oracles = SparkEntry.oracleSql ++
       (if (gated) operators.TpchGatedQueries.oracleSql else Map.empty)
-    val json = oracles
-      .map { case (k, v) =>
-        s"${BenchSupport.jsonString(k)}: ${BenchSupport.jsonString(v)}"
-      }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      BenchSupport.mapper.writeValueAsString(oracles))
     spark.stop()
   }
 }

@@ -183,16 +183,12 @@ object GraphQueries extends QueryModule {
       // r's broadcast side and leans on ReusedExchange for the rest,
       // stacking ~85 codegen stages. r14 AbProbe (same-JVM A/B, sf0.1,
       // 6 reps): materialized wall 1.95 s / cpu 2.36 s vs inline wall
-      // 2.38 s / cpu 4.10 s, consistent across every interleaved rep —
-      // conf-gated only for re-measurement, default ON.
-      val perRound = s.conf.get("spark.graft.bfs.materializeRounds",
-        "true").toBoolean
+      // 2.38 s / cpu 4.10 s, consistent across every interleaved rep.
       for (_ <- 1 to 4) {
         val nxt = dist.join(sym, col("node") === col("u"))
           .select(col("v").as("node"), (col("hops") + 1).as("hops"))
-        dist = dist.unionAll(nxt)
-          .groupBy("node").agg(min(col("hops")).as("hops"))
-        if (perRound) dist = graft.functions.Materialize(dist)
+        dist = graft.functions.Materialize(dist.unionAll(nxt)
+          .groupBy("node").agg(min(col("hops")).as("hops")))
       }
       dist.orderBy("node")
     }),

@@ -370,7 +370,7 @@ object JoinQueries extends QueryModule {
           leftTime = "p_ts", rightTime = "c_ts",
           rightTieBreak = Seq("c_id"),
           horizonMicros = 7L * 24 * 3600 * 1000000L,
-          broadcastRight = true)
+          strategy = "broadcast")
         .select(col("p_id"), col("user_id"), col("c_id").as("asof_click"),
           round(col("c_value"), 4).as("click_value"))
         .orderBy("p_id")

@@ -635,8 +635,7 @@ object AsofJoinOp {
     * broadcast-index exec when the right side's plan statistics fall under
     * spark.sql.autoBroadcastJoinThreshold — the as-of analog of Spark's own
     * broadcast-hash-join choice — and the both-sides-large sort-merge exec
-    * otherwise. strategy = "merge" / "broadcast" forces a side;
-    * broadcastRight = true is the legacy spelling of "broadcast".
+    * otherwise. strategy = "merge" / "broadcast" forces a side.
     */
   /** Sampled dominant-key detection for [[asofSkewSalted]]: the keys whose
     * share of a `fraction` sample of `df` is at least `minShare`. The
@@ -737,7 +736,6 @@ object AsofJoinOp {
       rightTieBreak: Seq[String],
       horizonMicros: Long,
       joinType: String = "inner",
-      broadcastRight: Boolean = false,
       direction: String = "backward",
       strategy: String = "auto"): DataFrame = {
     require(leftKeys.nonEmpty && leftKeys.length == rightKeys.length,
@@ -752,8 +750,7 @@ object AsofJoinOp {
       s"asof direction must be backward, forward or nearest, got $direction")
     require(Set("auto", "merge", "broadcast", "skewsalt").contains(strategy),
       s"asof strategy must be auto, merge, broadcast or skewsalt, got $strategy")
-    val effStrategy = if (broadcastRight) "broadcast" else strategy
-    if (effStrategy == "skewsalt") {
+    if (strategy == "skewsalt") {
       // sampled dominant-key probe, then the salted rewrite over the SAME
       // merge exec; a skew-free sample falls back to auto (a small right
       // side should still broadcast — that path has no skew to begin with)
@@ -806,6 +803,6 @@ object AsofJoinOp {
     PlanBridge.ofRows(spark, AsofJoin(
       lk, rk, lt, rt,
       rightTieBreak.map(res(rp, _)), horizonMicros,
-      joinType == "left", effStrategy, direction, lp, rp))
+      joinType == "left", strategy, direction, lp, rp))
   }
 }

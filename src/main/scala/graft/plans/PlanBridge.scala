@@ -46,8 +46,11 @@ object PlanBridge {
       builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] => LogicalPlan)
       : graft.GraftSession.TableFunction =
     (org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+      // the non-deprecated full constructor; Spark rejects a group or
+      // source outside its own lists
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        "graft.plans", null, name, usage, ""),
+        "graft.plans", null, name, usage, "", "", "", "table_funcs", "", "",
+        "scala_udf"),
       builder)
 
   /** Register a table function in one live session. Same visibility story

@@ -128,7 +128,7 @@ class AsofJoinSpec extends SparkSpec {
         leftKeys = Seq("user_id"), rightKeys = Seq("c_user"),
         leftTime = "p_ts", rightTime = "c_ts",
         rightTieBreak = Seq("c_id"), horizonMicros = H7D,
-        broadcastRight = true)
+        strategy = "broadcast")
       .select(col("p_id"), col("user_id"), col("c_id"), col("c_ts"))
       .orderBy("p_id")
     val bc = bdf.collect().map(_.toSeq)
@@ -164,13 +164,13 @@ class AsofJoinSpec extends SparkSpec {
       .toDF("c_id", "c_user", "c_ts")
     val out = AsofJoinOp.asof(l, r,
         Seq("user_id"), Seq("c_user"), "p_ts", "c_ts", Seq("c_id"),
-        horizonMicros = 2L * 3600 * 1000000L, broadcastRight = true)
+        horizonMicros = 2L * 3600 * 1000000L, strategy = "broadcast")
       .select("p_id", "c_id").collect().map(x => (x.getLong(0), x.getLong(1)))
     assert(out.toSet == Set((1L, 103L)), s"got ${out.toSeq}")
     // outer broadcast: every left survives, unmatched with null right
     val outer = AsofJoinOp.asof(l, r,
         Seq("user_id"), Seq("c_user"), "p_ts", "c_ts", Seq("c_id"),
-        2L * 3600 * 1000000L, joinType = "left", broadcastRight = true)
+        2L * 3600 * 1000000L, joinType = "left", strategy = "broadcast")
       .select("p_id", "c_id").collect()
       .map(x => x.getLong(0) -> (if (x.isNullAt(1)) None else Some(x.getLong(1))))
       .toMap

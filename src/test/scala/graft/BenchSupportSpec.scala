@@ -2,11 +2,12 @@ package graft
 
 import graft.functions.FsUtil
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The bench harness's pure machinery — the parts that produce the GRADED
   * artifact. Two rounds of grading were misled by harness bugs (r04's
   * single-shot timings, r08's DataFrame retention), so the outlier gate,
-  * the prev-artifact parser, and the fixture manifest (FsUtil.manifest,
+  * the artifact's writer and reader, and the fixture manifest (FsUtil.manifest,
   * which also keys engine state) carry their own unit contracts. */
 class BenchSupportSpec extends AnyFunSuite {
 
@@ -15,38 +16,45 @@ class BenchSupportSpec extends AnyFunSuite {
       |"q_b":1.5,"q_neg":-1.0,"q_exp":1.2E-4},"sf":"/root/testdata/sf0.1",
       |"runs":3}""".stripMargin.replace("\n", "")
 
-  test("parsePrevQueries reads medians, including failure markers and exponents") {
-    val m = BenchSupport.parsePrevQueries(artifact, "/root/testdata/sf0.1")
+  private def medians(txt: String, sfDir: String): Map[String, Double] =
+    BenchSupport.readBaseline(txt, sfDir).fold(Map.empty[String, Double])(_.queries)
+
+  test("readBaseline reads medians, including failure markers and exponents") {
+    val m = medians(artifact, "/root/testdata/sf0.1")
     assert(m == Map("q_a" -> 0.25, "q_b" -> 1.5, "q_neg" -> -1.0,
       "q_exp" -> 1.2e-4))
   }
 
-  test("parsePrevQueries refuses a different fixture dir (cross-SF timings are incomparable)") {
-    assert(BenchSupport.parsePrevQueries(artifact, "/tmp/graft-sf1").isEmpty)
+  test("readBaseline refuses a different fixture dir (cross-SF timings differ)") {
+    assert(BenchSupport.readBaseline(artifact, "/tmp/graft-sf1").isEmpty)
   }
 
-  test("parsePrevQueries reads the driver wrapper's escaped tail") {
-    // the committed BENCH_r*.json is the driver's capture wrapper: my
-    // JSON line sits escaped inside its "tail" string (and may be
-    // clipped — a partial medians map is still a usable baseline)
+  test("readBaseline reads the driver wrapper's parsed object") {
+    // the committed BENCH_r*.json is the driver's capture wrapper,
+    // pretty-printed: my JSON line sits parsed in its "parsed" field (and
+    // escaped in the clipped "tail" string, which is never read)
     val wrapper =
       """{"n": 8, "rc": 0, "sf": 0.1,
-        | "tail": "{\"metric\":\"total\",\"queries\":{\"q_a\":0.5,\"q_b\":2.0},\"sf\":\"/root/testdata/sf0.1\"}",
-        | "parsed": null}""".stripMargin
-    val m = BenchSupport.parsePrevQueries(wrapper, "/root/testdata/sf0.1")
-    assert(m == Map("q_a" -> 0.5, "q_b" -> 2.0))
+        | "tail": "{\"metric\":\"total\",\"queries\":{\"q_z\":9.0}}",
+        | "parsed": {"metric": "total", "queries": {"q_a": 0.5, "q_b": 2.0},
+        |   "sf": "/root/testdata/sf0.1"}}""".stripMargin
+    assert(medians(wrapper, "/root/testdata/sf0.1") ==
+      Map("q_a" -> 0.5, "q_b" -> 2.0))
   }
 
-  test("parsePrevQueries returns empty on a clipped tail missing the queries key") {
+  test("readBaseline returns nothing for a wrapper whose parsed is null") {
+    // the driver could not parse a clipped line: the medians in the tail
+    // are not salvaged
     val clipped =
       """{"n": 8, "tail": "6733,\"q_zzz\":0.13}", "parsed": null}"""
-    assert(BenchSupport.parsePrevQueries(clipped, "x").isEmpty)
+    assert(BenchSupport.readBaseline(clipped, "x").isEmpty)
   }
 
-  test("parsePrevQueries is total on malformed input") {
-    assert(BenchSupport.parsePrevQueries("not json at all", "x").isEmpty)
-    assert(BenchSupport.parsePrevQueries("""{"queries":17}""", "x").isEmpty)
-    assert(BenchSupport.parsePrevQueries("", "x").isEmpty)
+  test("readBaseline is total on malformed input") {
+    assert(BenchSupport.readBaseline("not json at all", "x").isEmpty)
+    assert(BenchSupport.readBaseline("""{"queries":17,"sf":"x"}""", "x").isEmpty)
+    assert(BenchSupport.readBaseline("""{"queries":{"q_a":1.0""", "x").isEmpty)
+    assert(BenchSupport.readBaseline("", "x").isEmpty)
   }
 
   test("latestRoundArtifact picks the highest round number") {
@@ -118,17 +126,21 @@ class BenchSupportSpec extends AnyFunSuite {
       median = 1.2, prev = 1.0, calNow = 1.0, calPrev = -1.0))
   }
 
-  test("parsePrevCalibration reads plain, extended and wrapper-escaped forms") {
-    assert(BenchSupport.parsePrevCalibration(
-      """{"calibration":{"pre":0.5,"post":1.5},"x":1}""").contains(1.0))
-    // round-12 artifacts append a "prev" field — must still parse
-    assert(BenchSupport.parsePrevCalibration(
-      """{"calibration":{"pre":0.5,"post":1.5,"prev":0.7}}""").contains(1.0))
-    // escaped inside the driver wrapper's tail string
-    assert(BenchSupport.parsePrevCalibration(
-      """{"tail":"{\"calibration\":{\"pre\":2.0,\"post\":4.0}}"}""")
-      .contains(3.0))
-    assert(BenchSupport.parsePrevCalibration("""{"no":"cal"}""").isEmpty)
+  test("readBaseline's calibration: plain, extended and wrapper forms") {
+    def cal(obj: String): Option[Double] = BenchSupport.readBaseline(
+      s"""{"queries":{"q_a":1.0},"sf":"x",$obj}""", "x").flatMap(_.calibration)
+    assert(cal(""""calibration":{"pre":0.5,"post":1.5},"y":1""").contains(1.0))
+    // round-12 artifacts append a "prev" field
+    assert(cal(""""calibration":{"pre":0.5,"post":1.5,"prev":0.7}""")
+      .contains(1.0))
+    // inside the driver wrapper's parsed object
+    assert(BenchSupport.readBaseline(
+      """{"tail":"","parsed":{"queries":{"q_a":1.0},"sf":"x",
+        |"calibration":{"pre":2.0,"post":4.0}}}""".stripMargin, "x")
+      .flatMap(_.calibration).contains(3.0))
+    assert(cal(""""no":"cal"""").isEmpty)
+    assert(cal(""""calibration":{"pre":-1.0,"post":0.5}""").isEmpty,
+      "a mean not above 0 is no calibration")
   }
 
   test("manifest catches a same-size in-place regeneration via mtime") {
@@ -183,17 +195,77 @@ class BenchSupportSpec extends AnyFunSuite {
     }
   }
 
-  test("jsonString escapes quote, backslash and control characters; Jackson reads it back") {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    Seq("plain", "a\"quote", "back\\slash", "line\nbreak", "tab\there",
-        "ctl\u0001char", "all \" \\ \n \t \u0001 \r end").foreach { s =>
-      val lit = BenchSupport.jsonString(s)
-      assert(lit.startsWith("\"") && lit.endsWith("\""), lit)
-      assert(!lit.exists(_ < ' '), s"raw control character in $lit")
-      assert(mapper.readValue(lit, classOf[String]) == s, lit)
+  private def sweep(errors: Seq[(String, String)] = Nil,
+                    sf: String = "/root/testdata/sf0.1") =
+    BenchSupport.artifact(sfDir = sf, runs = 3,
+      queries = Seq("q_a" -> 0.25, "q_neg" -> -1.0, "q_exp" -> 1.2e-4),
+      calPre = 0.5, calPost = 0.7, calPrev = 0.6,
+      planRisks = 2, planRisksNovel = 0, planAuditErrors = 0,
+      manifest = "abc", baseBuilds = Seq("tfidf" -> 1.5),
+      storageBytes = 10L, storageRdds = 1, overBudget = false,
+      remeasured = Seq("q_a" -> ((0.9, 0.25, 0.3))),
+      partialRuns = Seq("q_exp" -> 2), errors = errors)
+
+  test("the artifact's JSON escapes quotes and control characters") {
+    val mapper = BenchSupport.mapper
+    val strings = Seq("plain", "a\"quote", "back\\slash", "line\nbreak",
+      "tab\there", "ctl\u0001char", "all \" \\ \n \t \u0001 \r end")
+    val json = mapper.writeValueAsString(
+      sweep(errors = strings.map(s => s -> s), sf = "sf \"q\"\n"))
+    assert(!json.exists(_ < ' '), s"raw control character in $json")
+    val errs = mapper.readTree(json).get("errors")
+    strings.foreach(s => assert(errs.get(s).asText == s, s))
+    // the oracle map Verify writes goes through the same mapper
+    val oracle = mapper.readTree(mapper.writeValueAsString(Map("k\t" -> "v\"\n")))
+    assert(oracle.get("k\t").asText == "v\"\n")
+    assert(BenchSupport.readBaseline(json, "sf \"q\"\n").isDefined)
+  }
+
+  test("artifact write -> read round trip: 19 keys in order, same medians") {
+    val json = BenchSupport.mapper.writeValueAsString(sweep())
+    val root = BenchSupport.mapper.readTree(json)
+    assert(root.fieldNames.asScala.toSeq == Seq("metric", "value", "unit",
+      "queries", "queries_calibrated", "sf", "runs", "stat", "calibration",
+      "total_calibrated", "planRisks", "planRisksNovel", "planAuditErrors",
+      "fixture", "baseBuilds", "storagePost", "remeasured", "partialRuns",
+      "errors"))
+    assert(root.get("runs").isInt && root.get("storagePost").get("bytes").isIntegralNumber)
+    assert(root.get("storagePost").get("overBudget").isBoolean)
+    assert(root.get("remeasured").get("q_a").get("isolated").asBoolean)
+    assert(root.get("value").asDouble == 0.25 + 1.2e-4)
+    assert(root.get("queries_calibrated").get("q_a").asDouble == 0.4167)
+    assert(root.get("queries_calibrated").get("q_neg").asDouble == -1.0)
+    val back = BenchSupport.readBaseline(json, "/root/testdata/sf0.1")
+    assert(back.contains(BenchSupport.Baseline(
+      Map("q_a" -> 0.25, "q_neg" -> -1.0, "q_exp" -> 1.2e-4), Some(0.6))))
+  }
+
+  test("readBaseline reads every committed BENCH_*.json artifact") {
+    // read-only over the repository's own artifacts: the reader, given
+    // each file's own sf, returns every median its object holds; the
+    // parsed-null driver wrappers (r01-r12) yield no baseline
+    val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("BENCH_") && f.getName.endsWith(".json"))
+      .sortBy(_.getName)
+    assert(Seq("BENCH_r13.json", "BENCH_r14.json", "BENCH_LOCAL.json")
+      .forall(n => files.exists(_.getName == n)), files.map(_.getName).toSeq)
+    val read = files.map { f =>
+      val txt = java.nio.file.Files.readString(f.toPath)
+      val root = BenchSupport.mapper.readTree(txt)
+      val obj = if (root.has("parsed")) root.get("parsed") else root
+      val sf = Option(obj.path("sf").textValue).getOrElse(root.path("sf").asText)
+      val got = BenchSupport.readBaseline(txt, sf)
+      assert(got.fold(0)(_.queries.size) == obj.path("queries").size,
+        s"${f.getName}: read ${got.fold(0)(_.queries.size)} of " +
+          s"${obj.path("queries").size} medians")
+      f.getName -> got
+    }.toMap
+    assert(read("BENCH_r13.json").map(_.queries.size).contains(236))
+    assert(read("BENCH_r14.json").map(_.queries.size).contains(236))
+    assert(read("BENCH_r14.json").flatMap(_.calibration)
+      .exists(c => math.abs(c - 0.587338446) < 1e-9))
+    (1 to 12).map(n => f"BENCH_r$n%02d.json").foreach { n =>
+      assert(read.get(n).exists(_.isEmpty), s"$n should yield no baseline")
     }
-    // as a key and value inside an object, the way Bench and Verify write
-    val obj = s"{${BenchSupport.jsonString("k\t")}: ${BenchSupport.jsonString("v\"\n")}}"
-    assert(mapper.readTree(obj).get("k\t").asText() == "v\"\n")
   }
 }

@@ -100,6 +100,19 @@ class TopKPlanSpec extends SparkSpec {
       "plain identifier")
   }
 
+  test("sql: topk_per_group's usage text reads back from the session's table-function registry") {
+    val info = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.tableFunctionRegistry
+      .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(
+        "topk_per_group"))
+    assert(info.isDefined, "topk_per_group is not registered")
+    assert(info.get.getName == "topk_per_group")
+    assert(info.get.getUsage.startsWith(
+      "topk_per_group(table, groupCols, orderSpec, k [, rankCol])"),
+      info.get.getUsage)
+    assert(info.get.getGroup == "table_funcs")
+  }
+
   test("whole-stage codegen compiles when a projection fuses into the heap phase") {
     // Regression: without usedInputs = empty, consume() emitted the fused
     // Project's evaluation twice (pre-evaluated vars + the packed-row copy)
