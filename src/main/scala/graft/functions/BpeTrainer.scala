@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -52,7 +51,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * in the references array (constant generated source, one Janino compile
   * for every merge round). */
 case class BpeMergePair(child: Expression, pair: String)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   // ARRAY<STRING> in, ARRAY<STRING> out: merge copies a null element
   // through, so the element nullability is the child's
@@ -78,8 +77,8 @@ case class BpeMergePair(child: Expression, pair: String)
   @transient private lazy val mergedTok: UTF8String =
     UTF8String.fromString(pair.replace(' ', '_'))
 
-  /** Called from eval and generated code. */
-  def merge(tokens: ArrayData): ArrayData = {
+  def kernel(input: Any): Any = {
+    val tokens = input.asInstanceOf[ArrayData]
     val n = tokens.numElements()
     val out = new Array[AnyRef](n)
     var i = 0; var m = 0
@@ -93,15 +92,6 @@ case class BpeMergePair(child: Expression, pair: String)
     }
     new GenericArrayData(
       if (m == n) out else java.util.Arrays.copyOf(out, m))
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    merge(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMergePair", this)
-    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = $ref.merge($arr);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

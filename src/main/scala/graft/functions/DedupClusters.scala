@@ -409,7 +409,7 @@ object DedupClusters {
     // (a torn pairs append under the marker would make trail-rebuild
     // recovery silently drop the missing merges)
     StagedCommit.commitAppend(s"$path/pairs",
-      newPairs.select(pairCols.map(col): _*))
+      newPairs.select(pairCols.map(col).toIndexedSeq: _*))
     // stage only AFTER the trail holds the pairs the refresh folded in
     refreshed.write.mode("overwrite").parquet(s"$path/clusters_next")
     swapInStagedClusters(path)

@@ -94,13 +94,13 @@ object IvfIndex {
 
   /** Nearest-cell id for a vector column (0 until model.k). */
   def assign(vec: Column, m: Model): Column =
-    greatest(m.centroids.zipWithIndex.map { case (c, i) =>
+    greatest(m.centroids.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       struct(negSqDist(vec, c).as("d"), lit(i).as("cell"))
     }: _*).getField("cell")
 
   /** The nProbe nearest cell ids for a probe vector (array column). */
   def probeCells(vec: Column, m: Model, nProbe: Int): Column = {
-    val scored = array(m.centroids.zipWithIndex.map { case (c, i) =>
+    val scored = array(m.centroids.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       struct(negSqDist(vec, c).as("d"), lit(i).as("cell"))
     }: _*)
     // sort ascending by (d, cell) then take the LAST nProbe (largest -d =

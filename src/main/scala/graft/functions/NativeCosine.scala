@@ -2,16 +2,16 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen cosine similarity over ArrayType(FloatType) or
   * ArrayType(DoubleType) — the §4.3 "custom Catalyst Expression" tier:
   * unlike a Scala UDF (boxing + serialization per row) or the HOF
-  * formulation (interpreted lambda per element), this compiles to a tight
-  * primitive Java loop inside whole-stage codegen — the formulation for
+  * formulation (interpreted lambda per element), this is one tight
+  * primitive loop, a JIT-compiled Scala kernel called from the fused
+  * whole-stage-codegen stage ([[BinaryKernel]]) — the formulation for
   * the 100 TB hot path.
   *
   * Semantics (single pass, per-accumulator order identical to the HOF /
@@ -23,12 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *   to float; accumulation is double either way.
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def isDoubleArr(dt: DataType): Boolean = dt match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
+    extends BinaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType) = dt match {
@@ -45,13 +40,16 @@ case class CosineSim(left: Expression, right: Expression)
 
   override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
+  @transient private lazy val leftDouble = KernelExpression.isDoubleArray(left.dataType)
+  @transient private lazy val rightDouble = KernelExpression.isDoubleArray(right.dataType)
+
+  def kernel(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = x.numElements()
     if (n == 0 || n != y.numElements()) return null
-    val xd = isDoubleArr(left.dataType)
-    val yd = isDoubleArr(right.dataType)
+    val xd = leftDouble
+    val yd = rightDouble
     var dot = 0d; var na = 0d; var nb = 0d; var i = 0
     while (i < n) {
       val xi = if (xd) x.getDouble(i) else x.getFloat(i).toDouble
@@ -62,38 +60,6 @@ case class CosineSim(left: Expression, right: Expression)
     if (na == 0d || nb == 0d) null
     else java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      def getter(arr: String, dt: DataType): String =
-        if (isDoubleArr(dt)) s"$arr.getDouble($i)"
-        else s"(double) $arr.getFloat($i)"
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n == 0 || $n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $x = ${getter(a, left.dataType)};
-         |    final double $y = ${getter(b, right.dataType)};
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if ($na == 0.0 || $nb == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |  }
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =

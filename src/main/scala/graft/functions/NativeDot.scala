@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -11,8 +10,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (q_lsh_eval's all-pairs cosine ground truth). The HOF formulation
   * (`aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v)`)
   * runs two interpreted lambdas per element and allocates the zipped
-  * array per pair — measured ~6 s for 600k 64-dim pairs; this compiles to
-  * a primitive multiply-add loop inside whole-stage codegen.
+  * array per pair — measured ~6 s for 600k 64-dim pairs; this is one
+  * primitive multiply-add loop, a JIT-compiled Scala kernel called from
+  * the fused whole-stage-codegen stage ([[BinaryKernel]]).
   *
   * Semantics (identical to the HOF twin and the DuckDB mirror):
   * Σ aᵢ·bᵢ as BIGINT; NULL when lengths differ, and NULL when EITHER
@@ -20,10 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * codegen path, so a globally registered SQL function cannot crash or
   * silently diverge depending on which engine path runs (the
   * interpreted path used to unbox a GenericArrayData null into an NPE
-  * while codegen read a 0 from an UnsafeArrayData null slot). The
-  * per-element guard is emitted ONLY when the static array type admits
-  * null elements (containsNull) — a containsNull=false input keeps the
-  * original unguarded multiply-add loop, measured ~20% faster on
+  * while codegen read a 0 from an UnsafeArrayData null slot; both now
+  * run the one kernel). The kernel checks each element ONLY when the
+  * static array type admits null elements (containsNull) — a
+  * containsNull=false input runs the unguarded multiply-add loop, the
+  * codegen'd form of which measured ~20% faster on
   * q_lsh_eval's 600k×64 hot loop, which is why that query builds its
   * vectors non-null-typed (ifnull inside the transform lambda). An
   * input that VIOLATES containsNull=false is outside the type contract
@@ -32,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * |dot| ≤ n·2^2m — q_lsh_eval's ±11k over 64 dims is < 2^33).
   */
 case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType) = dt match {
@@ -49,55 +50,27 @@ case class DotLong(left: Expression, right: Expression)
 
   override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
+  /** True when either input's STATIC type admits null elements — only
+    * then does the kernel check each element (see the class doc). */
+  @transient private lazy val guardNulls: Boolean =
+    Seq(left, right).exists(_.dataType match {
+      case ArrayType(_, cn) => cn
+      case _ => true
+    })
+
+  def kernel(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = x.numElements()
     if (n != y.numElements()) return null
+    val guard = guardNulls
     var dot = 0L; var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      if (guard && (x.isNullAt(i) || y.isNullAt(i))) return null
       dot += x.getLong(i) * y.getLong(i); i += 1
     }
     java.lang.Long.valueOf(dot)
   }
-
-  /** True when either input's STATIC type admits null elements — the
-    * per-element guard is emitted only then (see the class doc). */
-  private def anyContainsNull: Boolean = Seq(left, right).exists(_.dataType match {
-    case ArrayType(_, cn) => cn
-    case _ => true
-  })
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val body =
-        if (anyContainsNull)
-          s"""|  for (int $i = 0; $i < $n; $i++) {
-              |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
-              |      ${ev.isNull} = true;
-              |      break;
-              |    }
-              |    $dot += $a.getLong($i) * $b.getLong($i);
-              |  }""".stripMargin
-        else
-          s"""|  for (int $i = 0; $i < $n; $i++) {
-              |    $dot += $a.getLong($i) * $b.getLong($i);
-              |  }""".stripMargin
-      s"""
-         |final int $n = $a.numElements();
-         |long $dot = 0L;
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |$body
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotLong =

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -35,9 +34,9 @@ object FingerprintImpl {
 
 /** Native codegen rolling fingerprint over a STRING column — promoted
   * from the HOF fold per SURVEY.md §4.3 after it profiled as the slowest
-  * oracle query (interpreted per-char lambdas): one static call per row
+  * oracle query (interpreted per-char lambdas): one kernel call per row
   * inside whole-stage codegen, ~an order of magnitude less overhead. */
-case class RollingFingerprint(child: Expression) extends UnaryExpression {
+case class RollingFingerprint(child: Expression) extends UnaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -46,12 +45,8 @@ case class RollingFingerprint(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any =
+  def kernel(input: Any): Any =
     FingerprintImpl.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.FingerprintImpl.compute($c)")
 
   override protected def withNewChildInternal(newChild: Expression): RollingFingerprint =
     copy(child = newChild)

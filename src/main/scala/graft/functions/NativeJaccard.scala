@@ -1,15 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Set-Jaccard kernel shared by the interpreted eval and the generated
-  * code (called statically from codegen — one call per row, no
-  * per-element lambda interpretation). Inputs are treated as SETS
+/** Set-Jaccard kernel behind [[TokenSetJaccard]] (one call per row from
+  * the interpreted eval and the generated code alike, no per-element
+  * lambda interpretation). Inputs are treated as SETS
   * (duplicates collapse). Returns NaN for the undefined 0/0 case, which
   * the expression maps to NULL. */
 object JaccardImpl {
@@ -38,7 +37,7 @@ object JaccardImpl {
   * |A∪B| in one pass, no intermediate intersection array, vs two
   * interpreted array_intersect calls per candidate pair). */
 case class TokenSetJaccard(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType) = dt match {
@@ -54,24 +53,11 @@ case class TokenSetJaccard(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
+  def kernel(a: Any, b: Any): Any = {
     val r = JaccardImpl.compute(
       a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     if (java.lang.Double.isNaN(r)) null else java.lang.Double.valueOf(r)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("jac")
-      s"""
-         |final double $r = graft.functions.JaccardImpl.compute($a, $b);
-         |if (java.lang.Double.isNaN($r)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TokenSetJaccard =

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,11 +77,11 @@ object JaroImpl {
 
 /** Native codegen Jaro-Winkler similarity between two STRING columns —
   * the fuzzy-match kernel for entity-resolution joins (candidate pairs
-  * from a blocking key, this expression as the verify). Codegen calls the
-  * static kernel once per row; no UDF boxing, no Row allocation.
+  * from a blocking key, this expression as the verify). Both engine paths
+  * call the kernel once per row; no UDF conversion, no Row allocation.
   */
 case class JaroWinkler(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -95,12 +94,8 @@ case class JaroWinkler(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any =
+  def kernel(a: Any, b: Any): Any =
     JaroImpl.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.JaroImpl.jaroWinkler($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaroWinkler =

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
@@ -16,8 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * ~47k interpreted lambda ops per row (measured 119 s for a 20k-vector
   * corpus, SCALE.md "ANN recall ladder"; the CosineLsh scaladoc's "bucketize is
   * codegen'd" claim was aspirational until this class). This expression
-  * is one compiled nPlanes × dim multiply-add loop; the plane matrix
-  * rides the plan as a reference object, broadcast with the task binary.
+  * is one nPlanes × dim multiply-add loop, a JIT-compiled Scala kernel
+  * called from the fused stage ([[UnaryKernel]]); the plane matrix rides
+  * the plan inside the expression, broadcast with the task binary.
   *
   * Semantics: strict dot > 0 sets the bit (ties clear, like the HOF);
   * NULL vector ⇒ NULL; a vector whose length differs from the plane
@@ -27,15 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * accumulation in double.
   */
 case class LshBucket(child: Expression, planes: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(planes.nonEmpty && planes.length <= 30,
     s"plane count must be in [1, 30], got ${planes.length}")
-
-  private def isDoubleArr(dt: DataType): Boolean = dt match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -48,11 +43,13 @@ case class LshBucket(child: Expression, planes: Array[Array[Double]])
 
   override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
+  @transient private lazy val readDouble = KernelExpression.isDoubleArray(child.dataType)
+
+  def kernel(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
     val dim = planes(0).length
     if (v.numElements() != dim) return null
-    val dbl = isDoubleArr(child.dataType)
+    val dbl = readDouble
     var bucket = 0
     var p = 0
     while (p < planes.length) {
@@ -68,38 +65,6 @@ case class LshBucket(child: Expression, planes: Array[Array[Double]])
       p += 1
     }
     java.lang.Integer.valueOf(bucket)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    val getter =
-      if (isDoubleArr(child.dataType)) (a: String, i: String) => s"$a.getDouble($i)"
-      else (a: String, i: String) => s"(double) $a.getFloat($i)"
-    nullSafeCodeGen(ctx, ev, a => {
-      val dim = ctx.freshName("dim")
-      val p = ctx.freshName("p")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val bucket = ctx.freshName("bucket")
-      val plane = ctx.freshName("plane")
-      s"""
-         |final int $dim = $planesRef[0].length;
-         |if ($a.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $bucket = 0;
-         |  for (int $p = 0; $p < $planesRef.length; $p++) {
-         |    final double[] $plane = $planesRef[$p];
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $dim; $i++) {
-         |      $dot += ${getter(a, i)} * $plane[$i];
-         |    }
-         |    if ($dot > 0.0) $bucket |= (1 << $p);
-         |  }
-         |  ${ev.value} = $bucket;
-         |}
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): LshBucket =

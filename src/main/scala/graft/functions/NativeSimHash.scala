@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -12,7 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * the HOF builds and interprets a fresh 64-element lambda chain PER TOKEN
   * — measured minutes for a few hundred documents, i.e. unusable as the
   * production signature path. This expression is one tight
-  * tokens × 64-bit loop in whole-stage codegen.
+  * tokens × 64-bit loop, a JIT-compiled Scala kernel called from the
+  * fused whole-stage-codegen stage ([[UnaryKernel]]).
   *
   * Bit-identical to the HOF by construction:
   *   h(token)   = xxhash64(token) (XXH64.hashUTF8String, seed 42 — the
@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *   sig bit b  =  counter[b] > 0
   * Empty array ⇒ 0L (all counters 0); NULL array ⇒ NULL.
   */
-case class SimHashSig(child: Expression) extends UnaryExpression {
+case class SimHashSig(child: Expression) extends UnaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -35,7 +35,7 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
 
   override def nullable: Boolean = child.nullable
 
-  override def nullSafeEval(input: Any): Any = {
+  def kernel(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val counters = new Array[Int](64)
@@ -59,33 +59,6 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
     }
     java.lang.Long.valueOf(sig)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val counters = ctx.freshName("counters")
-      val sig = ctx.freshName("sig")
-      val xxh = classOf[XXH64].getName
-      s"""
-         |final int $n = $a.numElements();
-         |final int[] $counters = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final long $h = $a.isNullAt($i)
-         |    ? 42L : $xxh.hashUTF8String($a.getUTF8String($i), 42L);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ((($h >>> $b) & 1L) == 1L) $counters[$b]++; else $counters[$b]--;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($counters[$b] > 0) $sig |= (1L << $b);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): SimHashSig =
     copy(child = newChild)

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,7 +26,8 @@ import scala.util.Random
   * m×k lookup table of exact subspace distances probe↔centroid, and each
   * candidate's approximate squared L2 distance is m table lookups + adds —
   * no float multiply touches the corpus row. Both the encode and the ADC
-  * kernels are native codegen expressions (a HOF formulation would be
+  * kernels are native expressions, JIT-compiled Scala kernels called from
+  * the fused whole-stage-codegen stage (a HOF formulation would be
   * CodegenFallback — interpreted per element in the hottest loop of the
   * scan; see the [[LshBucket]] scaladoc for the measured collapse of
   * exactly this shape).
@@ -405,21 +405,18 @@ object ProductQuantizer {
       nProbe, rerank)
 }
 
-/** Native codegen PQ encoder: argmin-centroid code per subspace over the
-  * L2-NORMALIZED input. NULL vector ⇒ NULL; length ≠ m·subDim ⇒ NULL
-  * (dim misconfiguration surfaces as null codes, the [[LshBucket]]
-  * convention). Zero vectors encode as-is (norm guard). */
-case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+/** The half of the PQ kernels that [[PqEncode]] and [[PqLut]] share: the
+  * input vector L2-NORMALIZED (zero vectors as-is, norm guard) and the
+  * squared distance of one of its subspaces to a centroid. NULL vector ⇒
+  * NULL; length ≠ m·subDim ⇒ NULL (dim misconfiguration surfaces as null
+  * codes, the [[LshBucket]] convention). */
+sealed trait PqSubspaces extends UnaryKernel {
+  def codebooks: Array[Array[Array[Double]]]
 
-  private def m: Int = codebooks.length
-  private def k: Int = codebooks(0).length
-  private def subDim: Int = codebooks(0)(0).length
-
-  private def isDoubleArr: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
+  protected def m: Int = codebooks.length
+  protected def k: Int = codebooks(0).length
+  protected def subDim: Int = codebooks(0)(0).length
+  @transient private lazy val readDouble = KernelExpression.isDoubleArray(child.dataType)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -428,14 +425,13 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
       s"$prettyName requires an ARRAY<FLOAT> or ARRAY<DOUBLE> argument, got ${dt.sql}")
   }
 
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** The normalized input, or null when its length is not m·subDim. */
+  protected def normalized(v: ArrayData): Array[Double] = {
     val dim = m * subDim
     if (v.numElements() != dim) return null
-    val dbl = isDoubleArr
+    val dbl = readDouble
     val x = new Array[Double](dim)
     var i = 0
     var nsq = 0d
@@ -444,18 +440,40 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
       x(i) = e; nsq += e * e; i += 1
     }
     val inv = if (nsq == 0d) 1d else 1d / math.sqrt(nsq)
+    i = 0
+    while (i < dim) { x(i) *= inv; i += 1 }
+    x
+  }
+
+  /** ‖x_sub_j − cent‖² over the normalized input x. */
+  protected def subDist(x: Array[Double], j: Int, cent: Array[Double]): Double = {
+    val off = j * subDim
+    var d = 0d; var t = 0
+    while (t < subDim) {
+      val diff = x(off + t) - cent(t)
+      d += diff * diff; t += 1
+    }
+    d
+  }
+}
+
+/** Native codegen PQ encoder: argmin-centroid code per subspace over the
+  * normalized input ([[PqSubspaces]]). */
+case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
+    extends PqSubspaces {
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+
+  def kernel(input: Any): Any = {
+    val x = normalized(input.asInstanceOf[ArrayData])
+    if (x == null) return null
     val out = new Array[Int](m)
     var j = 0
     while (j < m) {
       val cb = codebooks(j)
       var best = 0; var bestD = Double.MaxValue; var c = 0
       while (c < k) {
-        val cent = cb(c)
-        var d = 0d; var t = 0
-        while (t < subDim) {
-          val diff = x(j * subDim + t) * inv - cent(t)
-          d += diff * diff; t += 1
-        }
+        val d = subDist(x, j, cb(c))
         if (d < bestD) { bestD = d; best = c }
         c += 1
       }
@@ -463,58 +481,6 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-    val getter =
-      if (isDoubleArr) (a: String, i: String) => s"$a.getDouble($i)"
-      else (a: String, i: String) => s"(double) $a.getFloat($i)"
-    val (mV, kV, sdV) = (m, k, subDim)
-    nullSafeCodeGen(ctx, ev, a => {
-      val x = ctx.freshName("x")
-      val nsq = ctx.freshName("nsq")
-      val inv = ctx.freshName("inv")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val t = ctx.freshName("t")
-      val d = ctx.freshName("d")
-      val diff = ctx.freshName("diff")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val cent = ctx.freshName("cent")
-      s"""
-         |if ($a.numElements() != ${mV * sdV}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final double[] $x = new double[${mV * sdV}];
-         |  double $nsq = 0.0;
-         |  for (int $i = 0; $i < ${mV * sdV}; $i++) {
-         |    $x[$i] = ${getter(a, i)};
-         |    $nsq += $x[$i] * $x[$i];
-         |  }
-         |  final double $inv = $nsq == 0.0 ? 1.0 : 1.0 / Math.sqrt($nsq);
-         |  final int[] $out = new int[$mV];
-         |  for (int $j = 0; $j < $mV; $j++) {
-         |    int $best = 0;
-         |    double $bestD = Double.MAX_VALUE;
-         |    for (int $c = 0; $c < $kV; $c++) {
-         |      final double[] $cent = $cbRef[$j][$c];
-         |      double $d = 0.0;
-         |      for (int $t = 0; $t < $sdV; $t++) {
-         |        final double $diff = $x[$j * $sdV + $t] * $inv - $cent[$t];
-         |        $d += $diff * $diff;
-         |      }
-         |      if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |    }
-         |    $out[$j] = $best;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
@@ -527,105 +493,22 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
   * length m·k with lut[j·k + c] = ‖normalized(probe)_sub_j − cb(j)(c)‖².
   * Same null/dim semantics as [[PqEncode]]. */
 case class PqLut(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-
-  private def m: Int = codebooks.length
-  private def k: Int = codebooks(0).length
-  private def subDim: Int = codebooks(0)(0).length
-
-  private def isDoubleArr: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an ARRAY<FLOAT> or ARRAY<DOUBLE> argument, got ${dt.sql}")
-  }
+    extends PqSubspaces {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val dim = m * subDim
-    if (v.numElements() != dim) return null
-    val dbl = isDoubleArr
-    val x = new Array[Double](dim)
-    var i = 0
-    var nsq = 0d
-    while (i < dim) {
-      val e = if (dbl) v.getDouble(i) else v.getFloat(i).toDouble
-      x(i) = e; nsq += e * e; i += 1
-    }
-    val inv = if (nsq == 0d) 1d else 1d / math.sqrt(nsq)
+  def kernel(input: Any): Any = {
+    val x = normalized(input.asInstanceOf[ArrayData])
+    if (x == null) return null
     val out = new Array[Double](m * k)
     var j = 0
     while (j < m) {
       val cb = codebooks(j)
       var c = 0
-      while (c < k) {
-        val cent = cb(c)
-        var d = 0d; var t = 0
-        while (t < subDim) {
-          val diff = x(j * subDim + t) * inv - cent(t)
-          d += diff * diff; t += 1
-        }
-        out(j * k + c) = d
-        c += 1
-      }
+      while (c < k) { out(j * k + c) = subDist(x, j, cb(c)); c += 1 }
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-    val getter =
-      if (isDoubleArr) (a: String, i: String) => s"$a.getDouble($i)"
-      else (a: String, i: String) => s"(double) $a.getFloat($i)"
-    val (mV, kV, sdV) = (m, k, subDim)
-    nullSafeCodeGen(ctx, ev, a => {
-      val x = ctx.freshName("x")
-      val nsq = ctx.freshName("nsq")
-      val inv = ctx.freshName("inv")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val t = ctx.freshName("t")
-      val d = ctx.freshName("d")
-      val diff = ctx.freshName("diff")
-      val cent = ctx.freshName("cent")
-      s"""
-         |if ($a.numElements() != ${mV * sdV}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final double[] $x = new double[${mV * sdV}];
-         |  double $nsq = 0.0;
-         |  for (int $i = 0; $i < ${mV * sdV}; $i++) {
-         |    $x[$i] = ${getter(a, i)};
-         |    $nsq += $x[$i] * $x[$i];
-         |  }
-         |  final double $inv = $nsq == 0.0 ? 1.0 : 1.0 / Math.sqrt($nsq);
-         |  final double[] $out = new double[${mV * kV}];
-         |  for (int $j = 0; $j < $mV; $j++) {
-         |    for (int $c = 0; $c < $kV; $c++) {
-         |      final double[] $cent = $cbRef[$j][$c];
-         |      double $d = 0.0;
-         |      for (int $t = 0; $t < $sdV; $t++) {
-         |        final double $diff = $x[$j * $sdV + $t] * $inv - $cent[$t];
-         |        $d += $diff * $diff;
-         |      }
-         |      $out[$j * $kV + $c] = $d;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqLut =
@@ -639,7 +522,7 @@ case class PqLut(child: Expression, codebooks: Array[Array[Array[Double]]])
   * multiplies against the corpus row). NULL if either side is NULL or the
   * shapes disagree (codes.length · k ≠ lut.length). */
 case class PqAdc(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -652,7 +535,7 @@ case class PqAdc(left: Expression, right: Expression, k: Int)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override def nullSafeEval(codes: Any, lut: Any): Any = {
+  def kernel(codes: Any, lut: Any): Any = {
     val c = codes.asInstanceOf[ArrayData]
     val l = lut.asInstanceOf[ArrayData]
     val m = c.numElements()
@@ -662,25 +545,6 @@ case class PqAdc(left: Expression, right: Expression, k: Int)
     while (j < m) { s += l.getDouble(j * k + c.getInt(j)); j += 1 }
     java.lang.Double.valueOf(s)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l) => {
-      val m = ctx.freshName("m")
-      val s = ctx.freshName("s")
-      val j = ctx.freshName("j")
-      s"""
-         |final int $m = $c.numElements();
-         |if ($m * $k != $l.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $j = 0; $j < $m; $j++) {
-         |    $s += $l.getDouble($j * $k + $c.getInt($j));
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdc =

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (size - n + 1; callers guard size ≥ n), containsNull = false.
   */
 case class WordGrams(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(n >= 1, s"gram width must be >= 1, got $n")
 
@@ -39,13 +38,8 @@ case class WordGrams(child: Expression, n: Int, distinct: Boolean)
       s"$prettyName requires ARRAY<STRING>, got ${dt.sql}")
   }
 
-  override def nullSafeEval(input: Any): Any =
+  def kernel(input: Any): Any =
     WordGrams.build(input.asInstanceOf[ArrayData], n, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.WordGrams.build($arr, $n, $distinct);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -61,7 +55,7 @@ object WordGrams {
 
   private val space = UTF8String.fromString(" ")
 
-  /** Called from both eval and the generated code. */
+  /** The expression's kernel (both engine paths call it). */
   def build(tokens: ArrayData, n: Int, distinct: Boolean): ArrayData = {
     val len = tokens.numElements()
     val count = len - n + 1

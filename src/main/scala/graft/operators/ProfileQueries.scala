@@ -56,7 +56,7 @@ object Profiler {
         minN.as("min_num"), maxN.as("max_num"),
         minS.as("min_str"), maxS.as("max_str"))
     }
-    df.agg(cols.head.as("c0"), cols.tail.zipWithIndex
+    df.agg(cols.head.as("c0"), cols.tail.toIndexedSeq.zipWithIndex
         .map { case (c, i) => c.as(s"c${i + 1}") }: _*)
       .select(explode(array((0 until cols.length).map(i => col(s"c$i")): _*))
         .as("p"))

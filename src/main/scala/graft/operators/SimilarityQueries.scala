@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
 object SimilarityQueries extends QueryModule {
 
   /** dot(a,b) / (|a|*|b|) via the native codegen'd CosineSim expression
-    * (graft.functions.NativeCosine) — a tight primitive loop inside
-    * whole-stage codegen, vs an interpreted per-element HOF lambda. The
+    * (graft.functions.NativeCosine) — one call per row from whole-stage
+    * codegen into a JIT-compiled primitive loop, vs an interpreted
+    * per-element HOF lambda. The
     * per-accumulator fold order is identical to the DuckDB mirror, so
     * doubles match bit-for-bit. */
   private def cosine(a: String, b: String): Column =

@@ -371,11 +371,6 @@ case class TopKPerGroupExec(
   * doc of [[GroupedTopK]]). */
 object RewriteTopKWindow extends Rule[LogicalPlan] {
 
-  /** Session kill switch (and the AbProbe A/B lever): the rewrite is
-    * semantics-preserving, so the toggle exists for measurement, not
-    * correctness. */
-  val EnabledKey = "spark.graft.topk.rewrite"
-
   private def limitOf(cond: Expression, rn: Attribute): Option[Int] = cond match {
     case LessThanOrEqual(a: Attribute, IntegerLiteral(k)) if a.semanticEquals(rn) => Some(k)
     // guard the decrement: rn < Int.MinValue would wrap to Int.MaxValue
@@ -385,9 +380,7 @@ object RewriteTopKWindow extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = if (
-    !SQLConf.get.getConfString(EnabledKey, "true").toBoolean) plan
-  else plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond,
         Window(Seq(a @ Alias(
           WindowExpression(_: RowNumber,

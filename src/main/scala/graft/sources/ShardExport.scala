@@ -34,14 +34,14 @@ object ShardExport {
     * `shard=N/` each holding one file), rows in the seeded pseudo-random
     * order, plus `_graft_manifest` (one row per shard: n_rows and the
     * order-key range) written under the same root. */
-  def export(df: DataFrame, idCol: String, path: String, shards: Int,
+  def exportParquet(df: DataFrame, idCol: String, path: String, shards: Int,
              seed: String = "shard"): Unit = {
     keyedSorted(df, idCol, shards, seed)
       .write.mode("overwrite").partitionBy("shard").parquet(path)
     manifestOf(df.sparkSession.read.parquet(path), path, idCol, seed)
   }
 
-  /** The JSONL flavor of [[export]]: identical seeded order and shard
+  /** The JSONL flavor of [[exportParquet]]: identical seeded order and shard
     * assignment, but each shard lands as ONE gzip'd JSON-lines file
     * (`shard=N/part-*.json.gz`) — the interchange format most training
     * dataloaders stream natively, no parquet reader required. The same

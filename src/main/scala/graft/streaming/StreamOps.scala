@@ -75,7 +75,7 @@ object StreamOps {
 
   /** R3 serialize step: pack all columns as a JSON kafka value. */
   def toKafkaJson(df: DataFrame): DataFrame =
-    df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
+    df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
 
   /** R2 producer analog: deterministic "random" 1–5 word sentences from a
     * 16-word vocabulary, derived from a rate-source row (seeded by the

@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.functions.{GraftExtensions, NativeCosine, Registry}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ExtensionsProbe
 
@@ -172,12 +176,22 @@ class NativeExprSpec extends SparkSpec {
     // null slot — both must return NULL for a null element on either side
     graft.functions.NativeDot.register(spark)
     val n = graft.functions.NativeDot.name
-    // codegen path (SQL over a projected array with a null element)
+    // a select over literals constant-folds: the optimizer evaluates it
+    // with the interpreted eval before any task runs, so it pins the
+    // literal form only
     val r = spark.sql(
       s"""SELECT $n(array(1L, CAST(NULL AS BIGINT), 3L), array(1L, 2L, 3L)) AS a,
          |       $n(array(1L, 2L, 3L), array(1L, CAST(NULL AS BIGINT), 3L)) AS b
          |""".stripMargin).head()
     assert(r.isNullAt(0) && r.isNullAt(1),
+      "literal form must return NULL on a null element")
+    // codegen path: the same arrays from a parquet file, whole-stage fused
+    val arrays = nonLocal(spark.sql("""SELECT
+      array(1L, CAST(NULL AS BIGINT), 3L) AS x, array(1L, 2L, 3L) AS y"""))
+    val compiled = arrays.selectExpr(s"$n(x, y) AS a", s"$n(y, x) AS b")
+    assert(fusedProject(compiled), compiled.queryExecution.executedPlan.toString)
+    val c = compiled.head()
+    assert(c.isNullAt(0) && c.isNullAt(1),
       "codegen path must return NULL on a null element")
     // interpreted path (direct eval over GenericArrayData)
     val at = org.apache.spark.sql.types.ArrayType(
@@ -188,6 +202,148 @@ class NativeExprSpec extends SparkSpec {
       Seq[java.lang.Long](1L, 2L, 3L), at)
     assert(graft.functions.DotLong(lit, full).eval(null) == null)
     assert(graft.functions.DotLong(full, lit).eval(null) == null)
+  }
+
+  /** `df` written to and read back from a temp parquet file: Spark runs
+    * literal selects and projections over local data through the
+    * interpreted eval (ConstantFolding, ConvertToLocalRelation), so only a
+    * file-backed input reaches the generated code. */
+  private def nonLocal(df: DataFrame): DataFrame = {
+    val dir = Files.createTempDirectory("graft-native").resolve("t").toString
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** True when the plan's projection runs inside a whole-stage codegen stage. */
+  private def fusedProject(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.exists {
+      case w: WholeStageCodegenExec => w.child.exists(_.isInstanceOf[ProjectExec])
+      case _ => false
+    }
+
+  /** Runs `f` with `conf` set, restoring the previous values after. */
+  private def withConf[T](conf: (String, String)*)(f: => T): T = {
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("every native expression returns the same rows compiled and interpreted") {
+    import graft.functions._
+    import org.apache.spark.sql.graftbridge.PlanBridge.{column, expression}
+    GraftSession.attach(spark)
+    // one file-backed table of edge rows: NULL inputs, NULL elements,
+    // length mismatches, empty arrays, NaN/Infinity, zero vectors
+    val input = nonLocal(spark.sql("""
+      SELECT id, CAST(fa AS ARRAY<FLOAT>) AS fa, CAST(fb AS ARRAY<FLOAT>) AS fb,
+             CAST(fa AS ARRAY<DOUBLE>) AS da, CAST(la AS ARRAY<BIGINT>) AS la,
+             CAST(lb AS ARRAY<BIGINT>) AS lb, CAST(ta AS ARRAY<STRING>) AS ta,
+             CAST(tb AS ARRAY<STRING>) AS tb, s, s2, CAST(v AS DOUBLE) AS v,
+             g, CAST(codes AS ARRAY<INT>) AS codes,
+             CAST(lut AS ARRAY<DOUBLE>) AS lut
+      FROM VALUES
+        (1, array(1.0, 2.0, 3.0, 4.0), array(2.0, 4.0, 6.0, 8.5),
+            array(2, -3, 5), array(7, 11, -13), array('a', 'b', 'a', 'c'),
+            array('a', 'c'), 'martha', 'marhta', '1.5', 0,
+            array(0, 2), array(0.5, 1.0, 1.5, 2.0, 2.5, 3.0)),
+        (2, array(1.0, 2.0, 3.0), array(1.0, 2.0, 3.0, 4.0), array(1),
+            array(1, 2), array('x', NULL, 'y', 'x', NULL), array(NULL),
+            '', 'abc', 'NaN', 1, array(1), array(1.0, 2.0, 3.0, 4.0)),
+        (3, array(), array(), array(), array(), array(), array(),
+            'a  b', '', NULL, 0, array(), array()),
+        (4, NULL, array(1.0, 1.0, 1.0, 1.0), NULL, array(1), NULL, NULL,
+            NULL, 'x', 'Infinity', 1, NULL, NULL),
+        (5, array(1.0, CAST('NaN' AS DOUBLE), 0.0, 1.0), array(1.0, 1.0, NULL, 1.0),
+            array(1, NULL, 3), array(1, 2, 3), array('a', NULL, 'b'),
+            array('b', 'a'), 'héllo wörld 日本', 'hello world', '-2.0', 0,
+            array(0, 0), array(CAST('NaN' AS DOUBLE), 1.0, 2.0, 3.0, 4.0, 5.0)),
+        (6, array(0.0, 0.0, 0.0, 0.0), array(1.0, 1.0, 1.0, 1.0),
+            array(1, 2, 3), array(1, 2, NULL), array('a', 'b', 'a', 'b'),
+            array('a', 'b'), 'the cat and the dog', 'de la', '0.0', 1,
+            array(2, 1), array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))
+      AS t(id, fa, fb, la, lb, ta, tb, s, s2, v, g, codes, lut)"""))
+    val planes = Array(Array(1.0, -1.0, 0.5, 0.0), Array(0.0, 1.0, 1.0, -1.0),
+      Array(-0.5, 0.0, 0.0, 2.0))
+    val codebooks = Array(
+      Array(Array(0.5, 0.5), Array(-0.5, 0.1), Array(0.0, 0.9)),
+      Array(Array(0.7, 0.0), Array(0.1, -0.6), Array(0.3, 0.3)))
+    val splits = Array(Array(-1.0, 0.0, 1.5, 2.0), Array.empty[Double])
+    def native(e: Expression): Column = column(e)
+    def c(name: String): Expression = expression(col(name))
+    val cases: Seq[Column] = Seq(
+      expr(s"${NativeCosine.name}(fa, fb)"),
+      expr(s"${NativeCosine.name}(fa, da)"),
+      expr(s"${NativeDot.name}(la, lb)"),
+      // sequence() is non-null-typed: the kernel's unguarded loop
+      expr(s"${NativeDot.name}(sequence(1L, size(la) + 1L), sequence(2L, size(lb) + 2L))"),
+      native(LshBucket(c("fa"), planes)),
+      native(LshBucket(c("da"), planes)),
+      expr(s"${NativeSimHash.name}(ta)"),
+      native(BucketIndex(c("g"), c("v"), splits, asc = true, nullBucket = 0)),
+      native(BucketIndex(c("g"), c("v"), splits, asc = false, nullBucket = 4)),
+      native(PqEncode(c("fa"), codebooks)),
+      native(PqEncode(c("da"), codebooks)),
+      native(PqLut(c("fa"), codebooks)),
+      native(PqAdc(c("codes"), c("lut"), 3)),
+      expr(s"${NativeJaccard.name}(ta, tb)"),
+      expr(s"${NativeJaro.name}(s, s2)"),
+      // non-nullable inputs: the generated call without a NULL branch
+      expr(s"${NativeJaro.name}(coalesce(s, ''), coalesce(s2, ''))"),
+      expr(s"${NativeFingerprint.name}(s)"),
+      expr(s"${NativeFingerprint.name}(coalesce(s, ''))"),
+      BpeMergePair.merge(col("ta"), "a b"),
+      WordGrams.grams(col("ta"), 2, distinct = false),
+      WordGrams.grams(col("ta"), 2, distinct = true),
+      WordGrams.grams(col("ta"), 5, distinct = false),
+      LangId.detect(col("s")))
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val covered = cases.flatMap { e =>
+      // a fresh DataFrame per path: each plans under the conf it runs with
+      def run(df: DataFrame) = df.collect().sortBy(_.getInt(0)).map(_.toString).toSeq
+      val df = input.select(col("id"), e.as("r"))
+      assert(fusedProject(df), df.queryExecution.executedPlan.toString)
+      val compiled = run(df)
+      val evaluated = withConf(interpreted: _*) {
+        val plain = input.select(col("id"), e.as("r"))
+        assert(!plain.queryExecution.executedPlan.exists(
+          _.isInstanceOf[WholeStageCodegenExec]))
+        run(plain)
+      }
+      assert(compiled.length == 6 && compiled == evaluated,
+        s"$e\ncompiled:    $compiled\ninterpreted: $evaluated")
+      df.queryExecution.analyzed.expressions.flatMap(_.collect {
+        case x if x.getClass.getPackageName == "graft.functions" =>
+          x.getClass.getSimpleName
+      })
+    }.toSet
+    assert(covered == Set("CosineSim", "DotLong", "LshBucket", "SimHashSig",
+      "BucketIndex", "PqEncode", "PqLut", "PqAdc", "TokenSetJaccard",
+      "JaroWinkler", "RollingFingerprint", "BpeMergePair", "WordGrams",
+      "LangDetectExpr"), covered)
+  }
+
+  test("no generated-code string under functions/ carries a Java loop") {
+    // every native expression's loop is its Scala kernel; a `for (` or
+    // `while (` inside a string literal is a second, Janino-only copy
+    val root = Paths.get("src/main/scala/graft/functions")
+    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
+    val literal = "(?s)\"\"\".*?\"\"\"|\"(?:[^\"\\\\\n]|\\\\.)*\"".r
+    val loop = """\b(for|while)\s*\(""".r
+    val files = Files.walk(root)
+    val hits =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .flatMap { p =>
+          literal.findAllIn(new String(Files.readAllBytes(p), "UTF-8"))
+            .filter(loop.findFirstIn(_).isDefined)
+            .map(l => s"${root.relativize(p)}: ${l.take(80)}")
+        }
+      finally files.close()
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("GraftExtensions injects the function into a new session") {

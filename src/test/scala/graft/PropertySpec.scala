@@ -149,8 +149,8 @@ class PropertySpec extends SparkSpec {
     val docs = table("documents").select("doc_id", "text")
     val dirA = java.nio.file.Files.createTempDirectory("graft-prop-shard").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft-prop-shard").toString
-    graft.sources.ShardExport.export(docs, "doc_id", dirA, shards = 4)
-    graft.sources.ShardExport.export(docs.orderBy(col("text")), "doc_id",
+    graft.sources.ShardExport.exportParquet(docs, "doc_id", dirA, shards = 4)
+    graft.sources.ShardExport.exportParquet(docs.orderBy(col("text")), "doc_id",
       dirB, shards = 4)
     def assign(d: String) = spark.read.parquet(d)
       .select("doc_id", "shard").as[(Long, Int)].collect().toMap

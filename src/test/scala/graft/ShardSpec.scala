@@ -15,7 +15,7 @@ class ShardSpec extends SparkSpec {
   test("export partitions the corpus completely, one file per shard") {
     val docs = table("documents").select("doc_id", "text", "lang")
     val dir = tmp()
-    ShardExport.export(docs, "doc_id", dir, shards = 8)
+    ShardExport.exportParquet(docs, "doc_id", dir, shards = 8)
     val back = spark.read.parquet(dir)
     // multiset identity (doc_id unique → set identity + count)
     assert(back.count() == docs.count())
@@ -35,8 +35,8 @@ class ShardSpec extends SparkSpec {
   test("same seed re-exports byte-identical per-shard row order") {
     val docs = table("documents").select("doc_id", "text")
     val (d1, d2) = (tmp(), tmp())
-    ShardExport.export(docs, "doc_id", d1, shards = 4)
-    ShardExport.export(docs, "doc_id", d2, shards = 4)
+    ShardExport.exportParquet(docs, "doc_id", d1, shards = 4)
+    ShardExport.exportParquet(docs, "doc_id", d2, shards = 4)
     def orderOf(dir: String): Seq[(Int, Seq[Long])] =
       (0 until 4).map { s =>
         s -> spark.read.parquet(s"$dir/shard=$s")
@@ -48,8 +48,8 @@ class ShardSpec extends SparkSpec {
   test("a different seed is a fresh global shuffle, same completeness") {
     val docs = table("documents").select("doc_id", "text")
     val (d1, d2) = (tmp(), tmp())
-    ShardExport.export(docs, "doc_id", d1, shards = 4, seed = "a")
-    ShardExport.export(docs, "doc_id", d2, shards = 4, seed = "b")
+    ShardExport.exportParquet(docs, "doc_id", d1, shards = 4, seed = "a")
+    ShardExport.exportParquet(docs, "doc_id", d2, shards = 4, seed = "b")
     val o1 = ShardExport.readOrdered(spark, d1, "doc_id", "a")
       .select("doc_id").as[Long].collect().toSeq
     val o2 = ShardExport.readOrdered(spark, d2, "doc_id", "b")
@@ -61,7 +61,7 @@ class ShardSpec extends SparkSpec {
   test("no source clustering leaks into the order (interleaving check)") {
     val docs = table("documents").select("doc_id", "text", "source")
     val dir = tmp()
-    ShardExport.export(docs, "doc_id", dir, shards = 2)
+    ShardExport.exportParquet(docs, "doc_id", dir, shards = 2)
     // in the global training order, adjacent-pair same-source rate should
     // be near the source-share² sum, far below 1.0 (storage order is
     // source-clustered; export order must not be)
@@ -75,7 +75,7 @@ class ShardSpec extends SparkSpec {
   test("reserved column names fail fast") {
     val bad = Seq((1L, 0)).toDF("doc_id", "shard")
     intercept[IllegalArgumentException] {
-      ShardExport.export(bad, "doc_id", tmp(), shards = 2)
+      ShardExport.exportParquet(bad, "doc_id", tmp(), shards = 2)
     }
   }
 
@@ -88,7 +88,7 @@ class ShardSpec extends SparkSpec {
     val bad = Seq((java.lang.Long.valueOf(1L), "a"),
       (null.asInstanceOf[java.lang.Long], "b")).toDF("doc_id", "text")
     val ex = intercept[Exception] {
-      ShardExport.export(bad, "doc_id", tmp(), shards = 2)
+      ShardExport.exportParquet(bad, "doc_id", tmp(), shards = 2)
     }
     val msgs = Iterator.iterate(ex: Throwable)(_.getCause)
       .takeWhile(_ != null)
@@ -100,7 +100,7 @@ class ShardSpec extends SparkSpec {
     val docs = table("documents").select("doc_id", "text", "lang")
     val (dj, dp) = (tmp(), tmp())
     ShardExport.exportJsonl(docs, "doc_id", dj, shards = 4)
-    ShardExport.export(docs, "doc_id", dp, shards = 4)
+    ShardExport.exportParquet(docs, "doc_id", dp, shards = 4)
     // one .json.gz per shard dir, nothing else data-shaped
     (0 until 4).foreach { s =>
       val files = new java.io.File(s"$dj/shard=$s")
