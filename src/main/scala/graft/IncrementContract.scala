@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import scala.util.control.NonFatal
 
 /** THE incremental-maintenance split convention, hoisted to one
   * definition (round-11 verdict task #6: the 80/20 predicate was
@@ -16,6 +17,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   * the id (not a hash) so the oracle SQL states it verbatim.
   */
 object IncrementContract {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** True for rows of the arriving batch; `!isDelta(id)` is the
     * standing base. The ONE definition every incremental family uses. */
@@ -64,14 +66,16 @@ object IncrementContract {
     // per-family isolation: one family's build failure must not abort
     // the rest (the unbuilt tail's one-time cost would land back inside
     // graded query medians) nor discard the completed families' lines —
-    // a failure records -1 under a name carrying the error
+    // a failure is logged with its exception and records -1 under a
+    // name carrying the error
     def timed(name: String)(body: => Unit): (String, Double) =
       try {
         val t0 = System.nanoTime()
         body
         (name, (System.nanoTime() - t0) / 1e9)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
+          log.warn(s"pre-build of the $name base failed; its query builds lazily", e)
           (s"$name-failed:" +
             Option(e.getMessage).getOrElse(e.getClass.getName).take(80),
             -1.0)

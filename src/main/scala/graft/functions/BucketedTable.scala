@@ -3,11 +3,12 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** THE bucketed-catalog-projection convention, in one place (round-12
-  * review: TokenStore.termFreqBucketed, GramStore.bucketedRead and the
-  * dedup bands table each carried their own copy of the same
-  * build-else-register flow — three implementations to keep in
-  * lockstep). The convention:
+/** THE bucketed-catalog-projection convention, in one place, and the
+  * engine's only bucketed writer: TokenStore.termFreqBucketed,
+  * GramStore.bucketedRead, the dedup increment base's band keys
+  * (DedupQueries.ensureIncBase) and q_join_bucketed's two tables
+  * (JoinQueries.bucketize) all build and re-register through it. The
+  * convention:
   *
   *   - N buckets on the cluster keys, ONE sorted file per bucket
   *     (repartition on the keys before the bucketed write — a

@@ -68,7 +68,7 @@ object CompactStore {
                       replacement: Option[DataFrame]): Unit =
       FsUtil.withWriterLockWait(relDir) {
     val spark = removeIds.sparkSession
-    healLocked(relDir)
+    heal(relDir)
     require(new java.io.File(s"$relDir/_SUCCESS").exists(),
       s"compactRelation target $relDir is not a built relation")
     val rm = removeIds.select(col(idCol)).distinct()
@@ -115,7 +115,7 @@ object CompactStore {
                          removeIds: DataFrame): Unit =
       FsUtil.withWriterLockWait(relDir) {
     val spark = removeIds.sparkSession
-    healLocked(relDir)
+    heal(relDir)
     require(new java.io.File(s"$relDir/_SUCCESS").exists(),
       s"compactPartitioned target $relDir is not a built relation")
     val rm = removeIds.select(col(idCol)).distinct()
@@ -171,17 +171,11 @@ object CompactStore {
     * stage→commit→apply sequence, so debris observed under a held lock
     * is always genuinely crashed, never a live attempt (the abort arm
     * can therefore never delete a live `_compact` — round-12 ADVICE
-    * finding #1). */
+    * finding #1). The compaction writers call it under the relation
+    * lock they already hold (the lock is reentrant). */
   def heal(relDir: String): Unit = {
-    if (!new java.io.File(s"$relDir/_compact").exists()) return
-    FsUtil.withWriterLockWait(relDir) { healLocked(relDir) }
-  }
-
-  /** [[heal]]'s body, for callers ALREADY holding the relation lock
-    * (the compaction writers above). */
-  private def healLocked(relDir: String): Unit = {
     val compactDir = new java.io.File(s"$relDir/_compact")
-    if (compactDir.exists()) {
+    if (compactDir.exists()) FsUtil.withWriterLockWait(relDir) {
       if (new java.io.File(compactDir, "commit").isFile)
         applyCommit(relDir)
       else // crashed before the commit — under the held lock this can

@@ -29,26 +29,35 @@ private[graft] object FsUtil {
     *   - acquisition is atomic across processes (the OS arbitrates);
     *   - a crashed holder's lock releases AUTOMATICALLY with its
     *     process — no dead-pid detection, no steal path, no pid reuse;
-    *   - a second acquirer in the SAME JVM surfaces as
+    *   - another thread of the SAME JVM surfaces as
     *     OverlappingFileLockException — refused identically.
+    *
+    * REENTRANT for the holding thread: a nested call on the same root
+    * (normalized absolute path) from the thread that holds it runs its
+    * body directly, and the OS lock stays held until the OUTERMOST call
+    * exits — so an artifact build under Artifacts.ensure may call the
+    * store mutators (compact, compactRemoved) that lock the same root.
+    * Any other thread or process is still refused. Store mutators lock
+    * the store ROOT while CompactStore locks the relation SUBDIR —
+    * distinct roots, each held independently.
     *
     * The lock FILE persists across acquisitions (deleting it would
     * reopen the classic unlink race: a late acquirer locks the removed
-    * inode while a fresh one locks its replacement, and both "hold").
+    * inode while a fresh one locks its replacement, and both "hold") —
+    * so a build under the lock never overwrites the root dir itself.
     * Its content is the holder's pid — diagnostics only, truncated on
     * release, never consulted for exclusion. A contended acquire fails
-    * LOUD instead of corrupting the artifact. Not reentrant: hold it
-    * only at the outermost mutator (recovery helpers called inside a
-    * locked mutator stay unlocked; store mutators lock the store ROOT
-    * while CompactStore locks the relation SUBDIR — disjoint paths, so
-    * the nesting is safe). The streaming maintainers' foreachBatch
-    * bodies reach this through the store mutators they call; a
-    * Structured Streaming query is single-writer by construction, so
-    * the lock only guards them against a concurrent BATCH mutator.
-    * Advisory-lock semantics are local-FS / NFSv4; an object-store
-    * deployment swaps in its conditional-put primitive. */
+    * LOUD ([[WriterLockHeld]]) instead of corrupting the artifact. The
+    * streaming maintainers' foreachBatch bodies reach this through the
+    * store mutators they call; a Structured Streaming query is
+    * single-writer by construction, so the lock only guards them
+    * against a concurrent BATCH mutator. Advisory-lock semantics are
+    * local-FS / NFSv4; an object-store deployment swaps in its
+    * conditional-put primitive. */
   def withWriterLock[T](artifactRoot: String)(body: => T): T = {
     val dir = new java.io.File(artifactRoot)
+    val key = dir.toPath.toAbsolutePath.normalize.toString
+    if (holders.get(key) eq Thread.currentThread()) return body
     dir.mkdirs(): Unit
     val lock = new java.io.File(dir, "_writer.lock")
     val ch = java.nio.channels.FileChannel.open(lock.toPath,
@@ -65,12 +74,13 @@ private[graft] object FsUtil {
         try java.nio.file.Files.readString(lock.toPath).trim
         catch { case _: java.io.IOException => "" }
       ch.close()
-      throw new IllegalStateException(
+      throw new WriterLockHeld(
         s"another maintenance writer holds $lock" +
           (if (holder.nonEmpty) s" (pid $holder)" else "") +
           " — artifact mutation is single-writer; wait for it to finish" +
           " (a crashed holder's lock releases with its process)")
     }
+    holders.put(key, Thread.currentThread())
     try {
       // stamp the holder pid for diagnostics (the refusal message above)
       ch.truncate(0): Unit
@@ -79,6 +89,7 @@ private[graft] object FsUtil {
       ch.force(false)
       body
     } finally {
+      holders.remove(key)
       // clear the stamp BEFORE releasing so no released lock file ever
       // names a pid (a stale stamp would implicate a live-but-unrelated
       // process in a later refusal message)
@@ -88,22 +99,33 @@ private[graft] object FsUtil {
     }
   }
 
+  /** The thread holding each root's writer lock in this JVM (set only
+    * while the OS lock is held) — what makes [[withWriterLock]]
+    * reentrant for its holder and nobody else. */
+  private val holders =
+    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
+
+  /** [[withWriterLock]]'s refusal: another thread or process holds the
+    * root's lock. */
+  final class WriterLockHeld(msg: String) extends IllegalStateException(msg)
+
   /** [[withWriterLock]] with a bounded WAIT instead of an immediate
     * refusal — for heal-on-read paths where the competing holder is
     * another healer (or a live compaction writer) that will finish
-    * momentarily. */
+    * momentarily, and for Artifacts.ensure's builds. Only a refused
+    * acquisition is retried; a failure of the body itself propagates. */
   def withWriterLockWait[T](artifactRoot: String,
                             maxWaitMs: Long = 60000)(body: => T): T = {
     val deadline = System.currentTimeMillis() + maxWaitMs
-    var last: Option[IllegalStateException] = None
+    var last: Option[WriterLockHeld] = None
     while (System.currentTimeMillis() < deadline) {
       try return withWriterLock(artifactRoot)(body)
       catch {
-        case e: IllegalStateException =>
+        case e: WriterLockHeld =>
           last = Some(e); Thread.sleep(100)
       }
     }
-    throw last.getOrElse(new IllegalStateException(
+    throw last.getOrElse(new WriterLockHeld(
       s"timed out waiting for the writer lock on $artifactRoot"))
   }
 
@@ -112,7 +134,7 @@ private[graft] object FsUtil {
     * same data. The mtime term closes the round-11 advice gap: a fixture
     * regenerated in place whose files keep identical sizes (plausible for
     * fixed-width/seeded generators) still changes the manifest, so every
-    * content-keyed artifact tag (`JoinQueries.dirTag`) invalidates. A path
+    * content-keyed artifact tag (`Artifacts.dirTag`) invalidates. A path
     * that is a single file hashes that file's own line, so a table stored
     * as one file (every fixture table) is stamped by its own bytes.
     *

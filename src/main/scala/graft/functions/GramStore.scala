@@ -40,35 +40,20 @@ import org.apache.spark.sql.functions._
   * shuffle each is the same they always paid — the saving is the
   * repeated tokenize+md5 CPU, the dominant term measured at sf1).
   * Cache keying: the dir tag folds the fixture's content manifest
-  * (JoinQueries.dirTag), so regenerating a fixture in place invalidates
+  * (Artifacts.dirTag), so regenerating a fixture in place invalidates
   * the store automatically.
   */
 object GramStore {
-
-  private[graft] def storePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_grams/" +
-      s"store_${graft.operators.JoinQueries.dirTag(dir)}"
-
-  /** The q_novelty_incr increment-base path — a pure function of the
-    * fixture dir (the incBasePath convention). */
-  private[graft] def incBasePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_grams/" +
-      s"base_${graft.operators.JoinQueries.dirTag(dir)}"
-
-  /** The q_novelty_compact artifact path (the incBasePath convention). */
-  private[graft] def compactBasePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_grams/" +
-      s"cmp_${graft.operators.JoinQueries.dirTag(dir)}"
 
   /** Build-then-compact artifact for the q_novelty_compact proof: a
     * FULL-corpus sh3 store compacted under the IncrementContract
     * takedown/update split (the proof artifact carries only the novelty
     * grain — the five-grain store's compaction is spec-pinned by
     * CompactStoreSpec), marked `compacted` once done. Idempotent at
-    * every step; pre-built by the bench driver. */
-  private[graft] def ensureCompacted(s: SparkSession, dir: String): String = {
-    val path = compactBasePath(dir)
-    if (!new java.io.File(s"$path/compacted").exists()) {
+    * every step; pre-built by Bench. */
+  private[graft] def ensureCompacted(s: SparkSession, dir: String): String =
+    Artifacts.ensure(Artifacts.path("grams", "cmp", dir),
+        Artifacts.Compacted) { path =>
       CompactStore.heal(s"$path/sh3")
       val docs = graft.Tables.load(s, dir, "documents")
       if (!new java.io.File(s"$path/sh3/_SUCCESS").exists())
@@ -81,27 +66,22 @@ object GramStore {
         .filter(graft.IncrementContract.isRemoved(col("doc_id")))
         .select("doc_id")
         .unionByName(updated.select("doc_id"))
-      FsUtil.withWriterLock(path) {
-        CompactStore.compactRelation(s"$path/sh3", "doc_id", rm,
-          Some(buildSh3(updated)))
-      }
-      new java.io.File(s"$path/compacted").createNewFile(): Unit
+      CompactStore.compactRelation(s"$path/sh3", "doc_id", rm,
+        Some(buildSh3(updated)))
     }
-    path
-  }
 
   /** Build-on-first-touch of the q_novelty_incr increment base: the
     * standing 80% corpus's sh3 shingle rows (the IncrementContract
-    * split), write-once at [[incBasePath]]. The bench driver pre-builds
-    * it so the graded query times only the arrival path. */
-  private[graft] def ensureIncBase(s: SparkSession, dir: String): String = {
-    val path = incBasePath(dir)
-    if (!new java.io.File(s"$path/sh3/_SUCCESS").exists())
-      buildSh3(graft.Tables.load(s, dir, "documents")
-          .filter(!graft.IncrementContract.isDelta(col("doc_id"))))
-        .write.mode("overwrite").parquet(s"$path/sh3")
-    path
-  }
+    * split), write-once at `Artifacts.path("grams", "base", dir)`. The
+    * Bench pre-builds it so the graded query times only the
+    * arrival path. */
+  private[graft] def ensureIncBase(s: SparkSession, dir: String): String =
+    Artifacts.ensure(Artifacts.path("grams", "base", dir), "sh3/_SUCCESS") {
+      path =>
+        buildSh3(graft.Tables.load(s, dir, "documents")
+            .filter(!graft.IncrementContract.isDelta(col("doc_id"))))
+          .write.mode("overwrite").parquet(s"$path/sh3")
+    }
 
   /** The DISTINCT (doc_id, source, sh, shh) 3-token shingle relation —
     * byte-identical rows to what q_novelty/q_mix_knapsack derived inline
@@ -226,14 +206,13 @@ object GramStore {
   }
 
   private def ensure(s: SparkSession, dir: String): String = {
-    val path = storePath(dir)
+    val root = Artifacts.path("grams", "store", dir)
     // finish/abort any interrupted compaction before trusting _SUCCESS
-    relationNames.foreach(name => CompactStore.heal(s"$path/$name"))
-    if (relationNames.exists(name =>
-        !new java.io.File(s"$path/$name/_SUCCESS").exists()))
+    relationNames.foreach(name => CompactStore.heal(s"$root/$name"))
+    Artifacts.ensure(root, relationNames.map(_ + "/_SUCCESS"): _*) { path =>
       writeRelations(graft.Tables.load(s, dir, "documents"), path,
         "overwrite")
-    path
+    }
   }
 
   /** Per-relation replacement builders for [[compact]] — the same
@@ -302,7 +281,7 @@ object GramStore {
                            key: String, ddlSchema: String): DataFrame = {
     val path = ensure(s, dir)
     BucketedTable.readOrBuild(s,
-      s"graft_grams_${rel}_${graft.operators.JoinQueries.dirTag(dir)}",
+      s"graft_grams_${rel}_${Artifacts.dirTag(dir)}",
       s"$path/${rel}b", Seq(key), ddlSchema) {
       s.read.parquet(s"$path/$rel")
     }

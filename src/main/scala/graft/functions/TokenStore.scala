@@ -37,34 +37,22 @@ import org.apache.spark.sql.functions._
   * bucketed by `w` so df counts and term lookups run exchange-free
   * (the RetrievalIndex postings layout); the fixture artifact keeps
   * plain parquet. Cache keying: the dir tag folds the fixture's content
-  * manifest (JoinQueries.dirTag), so regenerating a fixture in place
+  * manifest (Artifacts.dirTag), so regenerating a fixture in place
   * invalidates the store automatically.
   */
 object TokenStore {
 
-  private[graft] def storePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_tokens/" +
-      s"store_${graft.operators.JoinQueries.dirTag(dir)}"
-
-  /** The q_tfidf_incr increment-base path — a pure function of the
-    * fixture dir (the DedupQueries.incBasePath convention: tooling can
-    * locate/wipe the artifact without triggering a build). */
-  private[graft] def incBasePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_tokens/" +
-      s"base_${graft.operators.JoinQueries.dirTag(dir)}"
-
   /** Build-on-first-touch of the q_tfidf_incr increment base: the
     * standing 80% corpus's tf rows (the IncrementContract split),
-    * write-once at [[incBasePath]]. The bench driver pre-builds it so
-    * the graded query times only the arrival path. */
-  private[graft] def ensureIncBase(s: SparkSession, dir: String): String = {
-    val path = incBasePath(dir)
-    if (!new java.io.File(s"$path/tf/_SUCCESS").exists())
-      buildTf(graft.Tables.load(s, dir, "documents")
-          .filter(!graft.IncrementContract.isDelta(col("doc_id"))))
-        .write.mode("overwrite").parquet(s"$path/tf")
-    path
-  }
+    * write-once at `Artifacts.path("tokens", "base", dir)`. Bench
+    * pre-builds it so the graded query times only the arrival path. */
+  private[graft] def ensureIncBase(s: SparkSession, dir: String): String =
+    Artifacts.ensure(Artifacts.path("tokens", "base", dir), "tf/_SUCCESS") {
+      path =>
+        buildTf(graft.Tables.load(s, dir, "documents")
+            .filter(!graft.IncrementContract.isDelta(col("doc_id"))))
+          .write.mode("overwrite").parquet(s"$path/tf")
+    }
 
   /** The (doc_id, lang, source, w, tf) relation — one tokenize pass.
     * Plain explode, NOT explode_outer: every consumer tokenizes with
@@ -83,29 +71,24 @@ object TokenStore {
       .agg(count(lit(1)).as("tf"))
 
   private def ensure(s: SparkSession, dir: String): String = {
-    val path = storePath(dir)
+    val root = Artifacts.path("tokens", "store", dir)
     // finish/abort any interrupted compaction before trusting _SUCCESS
-    CompactStore.heal(s"$path/tf")
-    if (!new java.io.File(s"$path/tf/_SUCCESS").exists())
+    CompactStore.heal(s"$root/tf")
+    Artifacts.ensure(root, "tf/_SUCCESS") { path =>
       buildTf(graft.Tables.load(s, dir, "documents"))
         .write.mode("overwrite").parquet(s"$path/tf")
-    path
+    }
   }
-
-  /** The q_tfidf_compact artifact path (the incBasePath convention). */
-  private[graft] def compactBasePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_tokens/" +
-      s"cmp_${graft.operators.JoinQueries.dirTag(dir)}"
 
   /** Build-then-compact artifact for the q_tfidf_compact proof: a FULL
     * corpus store compacted under the IncrementContract takedown/update
     * split, marked `compacted` once done. Every step is idempotent
     * (CompactStore.heal + the updated-ids-in-removal-set argument), so a
-    * crash anywhere re-runs clean. Pre-built by the bench driver; the
+    * crash anywhere re-runs clean. Pre-built by Bench; the
     * graded query is then a pure read of the compacted store. */
-  private[graft] def ensureCompacted(s: SparkSession, dir: String): String = {
-    val path = compactBasePath(dir)
-    if (!new java.io.File(s"$path/compacted").exists()) {
+  private[graft] def ensureCompacted(s: SparkSession, dir: String): String =
+    Artifacts.ensure(Artifacts.path("tokens", "cmp", dir),
+        Artifacts.Compacted) { path =>
       CompactStore.heal(s"$path/tf")
       val docs = graft.Tables.load(s, dir, "documents")
       if (!new java.io.File(s"$path/tf/_SUCCESS").exists())
@@ -116,10 +99,7 @@ object TokenStore {
         docs.filter(graft.IncrementContract.isUpdated(col("doc_id")))
           .withColumn("text",
             graft.IncrementContract.updatedText(col("text"))))
-      new java.io.File(s"$path/compacted").createNewFile(): Unit
     }
-    path
-  }
 
   /** DELETE/UPDATE compaction (round-11 verdict task #1 — the
     * append-only contract's documented gap): drop every stored row of
@@ -181,7 +161,7 @@ object TokenStore {
   /** Catalog name of the BUCKETED token table (content-keyed like every
     * artifact tag). */
   private[graft] def bucketedTbl(dir: String): String =
-    s"graft_tokens_${graft.operators.JoinQueries.dirTag(dir)}"
+    s"graft_tokens_${Artifacts.dirTag(dir)}"
 
   /** The stored word grain as a BUCKETED catalog relation — the
     * TokenStore scaladoc's "at warehouse scale store it bucketed by w"

@@ -540,14 +540,12 @@ object DedupQueries extends QueryModule {
   }
 
   private[graft] def ensureSimhashBase(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dedup/sim_${JoinQueries.dirTag(dir)}"
-    if (!new java.io.File(s"$path/sigs/_SUCCESS").exists() ||
-        !new java.io.File(s"$path/pairs/_SUCCESS").exists())
+      dir: String): String =
+    graft.functions.Artifacts.ensure(
+        graft.functions.Artifacts.path("dedup", "sim", dir),
+        "sigs/_SUCCESS", "pairs/_SUCCESS") { path =>
       writeSimhashArtifact(s, dir, path, !incIsDelta)
-    path
-  }
+    }
 
   /** Build-then-compact artifact for the q_simhash_compact proof: a
     * FULL-corpus (sigs, pairs) artifact takes a takedown of the
@@ -556,14 +554,10 @@ object DedupQueries extends QueryModule {
     * Hamming distance are pairwise, so surviving pairs are untouched).
     * Every step is idempotent; `compacted` marks done. */
   private[graft] def ensureSimhashCompact(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dedup/simc_${JoinQueries.dirTag(dir)}"
-    // root writer lock for consistency with every other artifact
-    // mutator (round-12 ADVICE finding #4); the relation-level
-    // compactions below additionally lock their own subdirs
-    if (!new java.io.File(s"$path/compacted").exists())
-        graft.functions.FsUtil.withWriterLock(path) {
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.functions.Artifacts.ensure(
+        graft.functions.Artifacts.path("dedup", "simc", dir),
+        graft.functions.Artifacts.Compacted) { path =>
       if (!new java.io.File(s"$path/sigs/_SUCCESS").exists() ||
           !new java.io.File(s"$path/pairs/_SUCCESS").exists())
         writeSimhashArtifact(s, dir, path, lit(true))
@@ -576,10 +570,7 @@ object DedupQueries extends QueryModule {
         "id_a", rm.select(col("doc_id").as("id_a")), None)
       graft.functions.CompactStore.compactRelation(s"$path/pairs",
         "id_b", rm.select(col("doc_id").as("id_b")), None)
-      new java.io.File(s"$path/compacted").createNewFile(): Unit
     }
-    path
-  }
 
   /** Hash-grouped exact dedup: the first (full-corpus) aggregate groups on
     * xxhash64(norm) so its shuffle carries 16 bytes/row, not the document
@@ -785,28 +776,23 @@ object DedupQueries extends QueryModule {
       .orderBy("id_a", "id_b")
   }
 
-  /** Path of the write-once persisted dedup artifact of the FULL corpus
-    * — the relation every downstream consumer reads (q_dedup_cluster,
-    * q_split_leakage, q_curation_pipeline's survivor filter). The same
-    * write-once, dir-keyed discipline as JoinQueries.bucketize (immutable
-    * fixture dirs, md5 dir tag, external under the system tmpdir): the
-    * cluster relation is computed ONCE per corpus and consumed many
-    * times; a deployment appends to it with DedupClusters.refreshAppended
-    * instead of re-deriving signatures from raw text per consumer. */
-  private[graft] def persistedDedupPath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_dedup/full_${JoinQueries.dirTag(dir)}"
-
-  /** The persisted (id, cluster) relation, building the artifact on first
-    * touch (steady state for every later consumer: an exchange-free
-    * parquet scan). */
+  /** The persisted (id, cluster) relation of the write-once dedup
+    * artifact of the FULL corpus, building it on first touch — the
+    * relation every downstream consumer reads (q_dedup_cluster,
+    * q_split_leakage, q_curation_pipeline's survivor filter; steady
+    * state: an exchange-free parquet scan). The cluster relation is
+    * computed ONCE per corpus and consumed many times; a deployment
+    * appends to it with DedupClusters.refreshAppended instead of
+    * re-deriving signatures from raw text per consumer. */
   private[graft] def persistedClusters(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val path = persistedDedupPath(dir)
-    if (!new java.io.File(s"$path/clusters/_SUCCESS").exists())
-      graft.functions.DedupClusters.writePersisted(
-        minhashPairs(s, dir), path, "id_a", "id_b")
-    graft.functions.DedupClusters.readPersistedClusters(s, path)
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.functions.DedupClusters.readPersistedClusters(s,
+      graft.functions.Artifacts.ensure(
+          graft.functions.Artifacts.path("dedup", "full", dir),
+          "clusters/_SUCCESS") { path =>
+        graft.functions.DedupClusters.writePersisted(
+          minhashPairs(s, dir), path, "id_a", "id_b"): Unit
+      })
 
   /** The delta predicate of the INCREMENTAL artifact (q_dedup_persist) —
     * the shared IncrementContract split (one definition across the six
@@ -816,25 +802,10 @@ object DedupQueries extends QueryModule {
   /** Catalog name of the BUCKETED stored band-key table of the
     * increment base (content-keyed like every artifact tag). */
   private[graft] def incBandsTbl(dir: String): String =
-    s"graft_dedup_bands_${JoinQueries.dirTag(dir)}"
+    s"graft_dedup_bands_${graft.functions.Artifacts.dirTag(dir)}"
 
-  /** Write-once BASE-state artifact for q_dedup_persist: the standing
-    * corpus's gram arrays, banded keys, and clusters — what a deployment
-    * keeps on disk between increments (the MinHashDedup.Index discipline
-    * plus the cluster artifact). The band keys are stored BUCKETED by
-    * (band, bk) (round-10 verdict task #3): the increment's candidate
-    * probe then sort-merge-joins the stored side with NO Exchange — the
-    * base key table never reshuffles per arrival, only the delta does
-    * (the q_join_bucketed machinery; DedupPersistSpec plan-asserts it). */
-  /** The increment-base artifact path — a pure function of the fixture
-    * dir (content-keyed tag), so tooling can locate/wipe the artifact
-    * WITHOUT triggering [[ensureIncBase]]'s build. */
-  private[graft] def incBasePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_dedup/base_${JoinQueries.dirTag(dir)}"
-
-  /** The q_dedup_compact artifact path (the incBasePath convention). */
-  private[graft] def compactClustersPath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_dedup/cmpc_${JoinQueries.dirTag(dir)}"
+  /** DDL of the stored band-key table (its fresh-JVM registration). */
+  private val incBandsDdl = "doc_id BIGINT, band INT, bk STRING"
 
   /** Build-then-compact artifact for the q_dedup_compact proof: a
     * FULL-corpus cluster artifact (pairs trail + labels) compacted by
@@ -845,9 +816,10 @@ object DedupQueries extends QueryModule {
     * crash windows via recoverCompact/recoverAppended. Pre-built by the
     * bench driver; the graded query is then a pure artifact read. */
   private[graft] def ensureCompactClusters(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val path = compactClustersPath(dir)
-    if (!new java.io.File(s"$path/compacted").exists()) {
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.functions.Artifacts.ensure(
+        graft.functions.Artifacts.path("dedup", "cmpc", dir),
+        graft.functions.Artifacts.Compacted) { path =>
       graft.functions.DedupClusters.recoverCompact(s, path): Unit
       if (!new java.io.File(s"$path/clusters/_SUCCESS").exists())
         graft.functions.DedupClusters.writePersisted(
@@ -856,31 +828,28 @@ object DedupQueries extends QueryModule {
         t(s, dir, "documents")
           .filter(graft.IncrementContract.isRemoved(col("doc_id")))
           .select(col("doc_id").as("id"))): Unit
-      new java.io.File(s"$path/compacted").createNewFile(): Unit
     }
-    path
-  }
 
+  /** Write-once BASE-state artifact for q_dedup_persist: the standing
+    * corpus's gram arrays, banded keys, and clusters — what a deployment
+    * keeps on disk between increments (the MinHashDedup.Index discipline
+    * plus the cluster artifact). The band keys are stored BUCKETED by
+    * (band, bk) (round-10 verdict task #3, the BucketedTable convention):
+    * the increment's candidate probe then sort-merge-joins the stored
+    * side with NO Exchange — the base key table never reshuffles per
+    * arrival, only the delta does (DedupPersistSpec plan-asserts it).
+    * bandcounts is newest — its presence implies a complete artifact,
+    * and checking it self-heals artifacts written by older builds. */
   private[graft] def ensureIncBase(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val path = incBasePath(dir)
-    // bandcounts is newest — its presence implies a complete artifact,
-    // and checking it self-heals artifacts written by older builds
-    if (!new java.io.File(s"$path/clusters/_SUCCESS").exists() ||
-        !new java.io.File(s"$path/bandcounts/_SUCCESS").exists()) {
+      dir: String): String =
+    graft.functions.Artifacts.ensure(
+        graft.functions.Artifacts.path("dedup", "base", dir),
+        "clusters/_SUCCESS", "bandcounts/_SUCCESS") { path =>
       val grams = minhashGrams(minhashTokRel(s, dir, !incIsDelta))
       val bands = minhashBands(grams)
       grams.write.mode("overwrite").parquet(s"$path/grams")
-      // ONE file per bucket (repartition on the bucket key before the
-      // bucketed write): a multi-file bucket loses its sort order at
-      // scan time, a single-file bucket scans as SORTED — the increment
-      // probe's SMJ then reads the stored side with neither Exchange
-      // NOR Sort
-      bands.repartition(8, col("band"), col("bk"))
-        .write.format("parquet").bucketBy(8, "band", "bk")
-        .sortBy("band", "bk")
-        .option("path", s"$path/bands")
-        .mode("overwrite").saveAsTable(incBandsTbl(dir))
+      graft.functions.BucketedTable.readOrBuild(s, incBandsTbl(dir),
+        s"$path/bands", Seq("band", "bk"), incBandsDdl)(bands): Unit
       // per-bucket member counts: the increment's hot-cap check needs
       // COUNTS, not keys — a bucket-sized table (≤ corpus/4 rows, narrow)
       // read instead of re-counting the full key table every arrival
@@ -889,21 +858,14 @@ object DedupQueries extends QueryModule {
       graft.functions.DedupClusters.writePersisted(
         minhashVerify(minhashCands(bands), grams), path, "id_a", "id_b")
     }
-    path
-  }
 
-  /** The stored band-key table as a BUCKETED catalog relation. The
-    * catalog entry is per-JVM (in-memory catalog): a fresh session
-    * re-REGISTERS the existing bucketed files with CREATE TABLE ...
-    * CLUSTERED BY ... LOCATION — bucket ids live in the file names, so
-    * registration is metadata-only and the write-once economics hold
-    * across JVMs. */
+  /** The stored band-key table as a BUCKETED catalog relation (a fresh
+    * JVM re-registers the existing files — BucketedTable). */
   private[graft] def incBandsTable(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val path = ensureIncBase(s, dir)
     graft.functions.BucketedTable.register(s, incBandsTbl(dir),
-      s"$path/bands", Seq("band", "bk"),
-      "doc_id BIGINT, band INT, bk STRING")
+      s"$path/bands", Seq("band", "bk"), incBandsDdl)
     s.table(incBandsTbl(dir))
   }
 

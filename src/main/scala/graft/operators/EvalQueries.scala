@@ -103,16 +103,6 @@ object EvalQueries extends QueryModule {
     * split over the embedding id. */
   private def lshIsDelta = graft.IncrementContract.isDelta(col("id"))
 
-  /** Write-once persisted LSH index base for q_lsh_persist: the standing
-    * 80% of the audit block stores its band keys and its verified
-    * candidate-pair list once (per-fixture, content-keyed tag — the
-    * ensureIncBase discipline). */
-  /** The q_lsh_persist base path — a pure function of the fixture dir
-    * (the DedupQueries.incBasePath convention: tooling can locate/wipe
-    * the artifact without triggering a build). */
-  private[graft] def lshBasePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lsh/base_${JoinQueries.dirTag(dir)}"
-
   /** Write a (keys, pairs) banded-LSH artifact for the audit-block rows
     * matching `pred` — shared by the increment base and the compaction
     * proof's full-block artifact. */
@@ -131,13 +121,17 @@ object EvalQueries extends QueryModule {
       .write.mode("overwrite").parquet(s"$path/pairs")
   }
 
+  /** Write-once persisted LSH index base for q_lsh_persist: the standing
+    * 80% of the audit block stores its band keys and its verified
+    * candidate-pair list once (per-fixture, content-keyed tag — the
+    * ensureIncBase discipline). */
   private[graft] def ensureLshBase(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): String = {
-    val path = lshBasePath(dir)
-    if (!new java.io.File(s"$path/pairs/_SUCCESS").exists())
+                                   dir: String): String =
+    graft.functions.Artifacts.ensure(
+        graft.functions.Artifacts.path("lsh", "base", dir),
+        "pairs/_SUCCESS") { path =>
       writeLshArtifact(s, dir, path, !lshIsDelta)
-    path
-  }
+    }
 
   /** Build-then-compact artifact for the q_lsh_compact proof: the FULL
     * audit block's (keys, pairs) artifact takes a takedown of the
@@ -146,14 +140,10 @@ object EvalQueries extends QueryModule {
     * band-key candidacy is pairwise, so surviving pairs are untouched).
     * Idempotent at every step; `compacted` marks done. */
   private[graft] def ensureLshCompact(s: org.apache.spark.sql.SparkSession,
-                                      dir: String): String = {
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_lsh/cmp_${JoinQueries.dirTag(dir)}"
-    // root writer lock for consistency with every other artifact
-    // mutator (round-12 ADVICE finding #4); the relation-level
-    // compactions below additionally lock their own subdirs
-    if (!new java.io.File(s"$path/compacted").exists())
-        graft.functions.FsUtil.withWriterLock(path) {
+                                      dir: String): String =
+    graft.functions.Artifacts.ensure(
+        graft.functions.Artifacts.path("lsh", "cmp", dir),
+        graft.functions.Artifacts.Compacted) { path =>
       if (!new java.io.File(s"$path/pairs/_SUCCESS").exists())
         writeLshArtifact(s, dir, path, lit(true))
       val rm = t(s, dir, "embeddings").filter(col("vec_id") < 1000)
@@ -165,10 +155,7 @@ object EvalQueries extends QueryModule {
         "ia", rm.select(col("id").as("ia")), None)
       graft.functions.CompactStore.compactRelation(s"$path/pairs",
         "ib", rm.select(col("id").as("ib")), None)
-      new java.io.File(s"$path/compacted").createNewFile(): Unit
     }
-    path
-  }
 
   override def queries: Map[String, Q] = Map(
     // NDCG@10 and P@10 per probe, relevance = same label.

@@ -40,20 +40,21 @@ class IncrementContractSpec extends SparkSpec {
       assert(df.filter(IncrementContract.isDelta(col(idCol))).isEmpty,
         s"$what base artifact contains delta ids")
 
+    def base(family: String, kind: String) =
+      functions.Artifacts.path(family, kind, sf)
     assertNoDelta(spark.read.parquet(
-      s"${functions.TokenStore.incBasePath(sf)}/tf"), "doc_id", "tokens")
+      s"${base("tokens", "base")}/tf"), "doc_id", "tokens")
     assertNoDelta(spark.read.parquet(
-      s"${functions.GramStore.incBasePath(sf)}/sh3"), "doc_id", "grams")
+      s"${base("grams", "base")}/sh3"), "doc_id", "grams")
     assertNoDelta(spark.read.parquet(
-      s"${functions.RetrievalIndex.incBasePath(sf)}/doclens"), "doc_id",
+      s"${base("retr", "base")}/doclens"), "doc_id",
       "retrieval")
     assertNoDelta(spark.read.parquet(
-      s"${operators.DedupQueries.incBasePath(sf)}/grams"), "doc_id", "dedup")
+      s"${base("dedup", "base")}/grams"), "doc_id", "dedup")
     assertNoDelta(spark.read.parquet(
-      s"${operators.EvalQueries.lshBasePath(sf)}/keys"), "id", "lsh")
+      s"${base("lsh", "base")}/keys"), "id", "lsh")
     assertNoDelta(spark.read.parquet(
-      s"${System.getProperty("java.io.tmpdir")}/graft_dedup/" +
-        s"sim_${operators.JoinQueries.dirTag(sf)}/sigs"), "doc_id",
+      s"${base("dedup", "sim")}/sigs"), "doc_id",
       "simhash")
   }
 }

@@ -528,7 +528,7 @@ class TemporalQualitySpec extends SparkSpec {
     // either input (the agg above the join still exchanges — that's the
     // grouping shuffle, not the join's)
     q("q_join_bucketed").collect()
-    val tag = operators.JoinQueries.dirTag(sf)
+    val tag = functions.Artifacts.dirTag(sf)
     val li = spark.table(s"graft_bkt_li_$tag")
     val ord = spark.table(s"graft_bkt_ord_$tag")
     val join = li.hint("merge")
