@@ -1,8 +1,14 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{CurrentTimestamp, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{BinaryType, DataType}
 import org.apache.spark.sql.Row
 
 /** Kafka edge wiring (reference operators R3/R4: producer writes
@@ -17,9 +23,10 @@ import org.apache.spark.sql.Row
   * consumer group id is advisory metadata for monitoring
   * (SURVEY.md §2.1 R4 note).
   *
-  * The transforms ([[decode]], [[encode]]) are plain DataFrame functions,
-  * testable batch-side without a broker — the reference's own fallback
-  * discipline when infra is absent (go/producer/producer_test.go:86-126).
+  * The transforms ([[decode]], [[encode]], [[wordCountFrames]]) are plain
+  * DataFrame functions, testable batch-side without a broker — the
+  * reference's own fallback discipline when infra is absent
+  * (go/producer/producer_test.go:86-126).
   * The readStream/writeStream builders require the spark-sql-kafka
   * connector on the cluster classpath at runtime.
   */
@@ -67,10 +74,12 @@ object KafkaPipelines {
       col("value").cast("string").as("value"),
       col("timestamp").as("ts"))
 
-  /** R3 key scheme: `key-<unixSeconds>` (go/producer/producer.go:119). */
+  /** R3 key scheme: `key-<unixSeconds>` (go/producer/producer.go:119) of
+    * the query's clock, `current_timestamp()`: one key for every row of a
+    * batch query, and of a micro-batch in a stream. See [[SecondsKey]]. */
   def encode(df: DataFrame, valueCol: String): DataFrame =
     df.select(
-      concat(lit("key-"), unix_timestamp()).cast("binary").as("key"),
+      PlanBridge.column(SecondsKey(CurrentTimestamp())).as("key"),
       col(valueCol).cast("binary").as("value"))
 
   /** R3: Kafka sink writer (start() requires a live broker + connector). */
@@ -80,15 +89,37 @@ object KafkaPipelines {
       .option("kafka.bootstrap.servers", cfg.bootstrapServers)
       .option("topic", cfg.topic)
 
-  /** §2.2 end-to-end: Kafka[in] → windowed word count → Kafka[out]. */
+  /** §2.2 transform: raw Kafka frames → decode → windowed word count →
+    * JSON value → `key-<unixSeconds>` key; the whole job between the two
+    * topics, on a stream or a static frame. */
+  def wordCountFrames(raw: DataFrame, windowDur: String, watermark: String): DataFrame =
+    encode(StreamOps.toKafkaJson(StreamOps.windowedWordCount(
+      decode(raw), "value", "ts", windowDur, watermark)), "value")
+
+  /** §2.2 end-to-end: Kafka[in] → [[wordCountFrames]] → Kafka[out]. */
   def wordCountPipeline(spark: SparkSession, in: KafkaConfig, out: KafkaConfig,
                         checkpointDir: String, windowDur: String = "1 minute",
-                        watermark: String = "10 seconds"): DataStreamWriter[Row] = {
-    val counts = StreamOps.windowedWordCount(
-      decode(source(spark, in)), "value", "ts", windowDur, watermark)
-    sink(StreamOps.toKafkaJson(counts)
-        .select(col("value").cast("binary").as("value")),
-      out, checkpointDir)
+                        watermark: String = "10 seconds"): DataStreamWriter[Row] =
+    sink(wordCountFrames(source(spark, in), windowDur, watermark), out, checkpointDir)
       .outputMode("update")
-  }
+}
+
+/** `key-<floorDiv(µs, 10⁶)>` of a timestamp, as bytes: the value of
+  * `concat(lit("key-"), unix_timestamp()).cast("binary")` over `child`.
+  *
+  * In a stream, Spark swaps `current_timestamp()` for the batch's
+  * `CurrentBatchTimestamp`, whose generated code is the batch time as a
+  * Java literal, so any stage that compiles it has new source text, and a
+  * fresh Janino compile, in every micro-batch. This expression is evaluated
+  * from the plan object instead (CodegenFallback, which also initializes
+  * the nondeterministic child), so the output stage compiles once per
+  * query; on a static frame the child is a literal and the key folds to a
+  * constant. See SCALE.md "One compiled output stage per stream". */
+case class SecondsKey(child: Expression) extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = BinaryType
+
+  override protected def nullSafeEval(micros: Any): Any =
+    s"key-${Math.floorDiv(micros.asInstanceOf[Long], 1000000L)}".getBytes(UTF_8)
+
+  override protected def withNewChildInternal(newChild: Expression): SecondsKey = copy(child = newChild)
 }

@@ -1,18 +1,22 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 
-import graft.streaming.{CheckpointFiles, StreamOps}
+import graft.streaming.{CheckpointFiles, PosixLocalFileSystem, StreamOps}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.scalatest.PrivateMethodTester
 
 /** Which checkpoint file manager a stream gets: [[CheckpointFiles]] sends a
   * checkpoint on Hadoop's LocalFileSystem to the FileSystem-based manager
-  * (no `readlink` launch per rename) and everything else to Spark's
+  * (no `readlink` launch per rename) on a [[PosixLocalFileSystem]] (no
+  * `chmod` launch per created file) and everything else to Spark's
   * default; [[StreamOps.checkpointed]] installs it without overriding a
   * session's own choice. */
-class CheckpointFilesSpec extends SparkSpec {
+class CheckpointFilesSpec extends SparkSpec with PrivateMethodTester {
 
   private def tmpPath = new Path(Files.createTempDirectory("graft-cpf").toUri)
 
@@ -20,6 +24,27 @@ class CheckpointFilesSpec extends SparkSpec {
     val fm = new CheckpointFiles(tmpPath, new Configuration())
     assert(fm.underlying.isInstanceOf[FileSystemBasedCheckpointFileManager])
     assert(fm.isLocal)
+    val fs = fm.underlying.invokePrivate(PrivateMethod[FileSystem](Symbol("fs"))())
+    assert(fs.isInstanceOf[PosixLocalFileSystem], fs.getClass.getName)
+  }
+
+  test("files and directories a local checkpoint creates get Hadoop's modes under the umask") {
+    def mode(f: File) = PosixFilePermissions.toString(Files.getPosixFilePermissions(f.toPath))
+    for ((umask, file, dir) <- Seq((None, "rw-r--r--", "rwxr-xr-x"),
+                                   (Some("027"), "rw-r-----", "rwxr-x---"))) {
+      val conf = new Configuration()
+      umask.foreach(conf.set("fs.permissions.umask-mode", _))
+      val root = tmpPath
+      val fm = new CheckpointFiles(root, conf)
+      val log = new Path(root, "offsets")
+      fm.mkdirs(log)
+      val out = fm.createAtomic(new Path(log, "0"), overwriteIfPossible = false)
+      out.write(42); out.close()
+      val dirFile = new File(log.toUri)
+      assert(mode(dirFile) == dir, s"umask $umask: offsets/")
+      for (name <- Seq("0", ".0.crc"))
+        assert(mode(new File(dirFile, name)) == file, s"umask $umask: offsets/$name")
+    }
   }
 
   test("a path whose FileSystem is not LocalFileSystem keeps Spark's default manager") {

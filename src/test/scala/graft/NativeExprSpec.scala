@@ -221,17 +221,6 @@ class NativeExprSpec extends SparkSpec {
       case _ => false
     }
 
-  /** Runs `f` with `conf` set, restoring the previous values after. */
-  private def withConf[T](conf: (String, String)*)(f: => T): T = {
-    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("every native expression returns the same rows compiled and interpreted") {
     import graft.functions._
     import org.apache.spark.sql.graftbridge.PlanBridge.{column, expression}

@@ -24,4 +24,16 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def q(name: String): DataFrame = SparkEntry.queries(name)(spark, sf)
 
   def table(name: String): DataFrame = Tables.load(spark, sf, name)
+
+  /** Runs `f` with `conf` set on the shared session, restoring the previous
+    * values after. */
+  def withConf[T](conf: (String, String)*)(f: => T): T = {
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -819,6 +819,87 @@ class StreamingSpec extends SparkSpec {
     assert(new String(enc.getAs[Array[Byte]]("key")).startsWith("key-"))
   }
 
+  /** Kafka-shaped frames on a MemoryStream through `chain`, one micro-batch
+    * per step: step `b` adds three sentences at event time `t0 + b * 20 s`,
+    * so the watermark moves on every batch. `sink` sees each micro-batch;
+    * `onStep` runs after each step's batch has finished. */
+  private def wordCountSteps(chain: DataFrame => DataFrame, t0: Long, steps: Int)(
+      sink: (DataFrame, Long) => Unit)(onStep: Int => Unit = _ => ()): Unit = {
+    val in = MemoryStream[(Array[Byte], Array[Byte], Timestamp)]
+    val cp = Files.createTempDirectory("graft-cp").toString
+    val q = StreamOps.foreachBatchSink(chain(in.toDF().toDF("key", "value", "timestamp")), cp)(sink)
+      .outputMode("update").start()
+    try (0 until steps).foreach { b =>
+      in.addData((0 until 3).map { i =>
+        val words = StreamOps.vocabulary.drop((b + i) % 12).take(1 + i)
+        ("key-0".getBytes, words.mkString(" ").getBytes, new Timestamp(t0 + b * 20000L + i))
+      })
+      q.processAllAvailable()
+      onStep(b)
+    } finally q.stop()
+  }
+
+  private val wordCountT0 = Timestamp.valueOf("2024-01-01 10:00:00").getTime
+
+  test("s_wordcount codegen: encode adds no compile per steady micro-batch") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // Janino compiles (codegen cache misses) per micro-batch from the third
+    // on; with no-data batches off, each step is exactly one micro-batch
+    def compiles(chain: DataFrame => DataFrame, t0: Long): Seq[Long] =
+      withConf("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+        val perStep = scala.collection.mutable.ArrayBuffer.empty[Long]
+        var before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        wordCountSteps(chain, t0, 8)((batch, _) => batch.collect()) { _ =>
+          val now = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          perStep += now - before
+          before = now
+        }
+        perStep.drop(2).toSeq
+      }
+    val counts = (raw: DataFrame) => StreamOps.toKafkaJson(StreamOps.windowedWordCount(
+      KafkaPipelines.decode(raw), "value", "ts", "1 minute", "10 seconds"))
+    // a day apart, the two runs step their watermarks alike, and each
+    // compiles Spark's eviction predicate (the watermark as a literal) afresh
+    val without = compiles(counts, wordCountT0)
+    val withKey = compiles(KafkaPipelines.wordCountFrames(_, "1 minute", "10 seconds"),
+      wordCountT0 + 86400000L)
+    assert(without.size == 6)
+    assert(withKey == without, s"compiles per batch with encode $withKey, without $without")
+  }
+
+  /** encode's key beside `unix_timestamp()`'s in one stream: both read the
+    * batch clock, so they are byte-equal on every row, and every row of a
+    * micro-batch carries one key, a second within the run. */
+  private def keyReadsTheBatchClock(): Unit = {
+    val keys = scala.collection.mutable.Map.empty[Long, Seq[(String, String)]]
+    val startS = System.currentTimeMillis() / 1000
+    wordCountSteps(raw => KafkaPipelines.wordCountFrames(raw, "1 minute", "10 seconds")
+        .withColumn("reference", concat(lit("key-"), unix_timestamp()).cast("binary")),
+      wordCountT0, 3) { (batch, batchId) =>
+      val rows = batch.select("key", "reference").as[(Array[Byte], Array[Byte])].collect()
+      keys.synchronized { keys(batchId) = rows.map { case (k, r) => (new String(k), new String(r)) }.toSeq }
+    }()
+    val endS = System.currentTimeMillis() / 1000
+    val data = keys.toMap.filter(_._2.nonEmpty)
+    assert(data.size == 3, s"micro-batches with rows: ${data.keys}")
+    data.foreach { case (batchId, rows) =>
+      rows.foreach { case (k, r) => assert(k == r, s"batch $batchId: key $k, unix_timestamp() $r") }
+      val batchKeys = rows.map(_._1).distinct
+      assert(batchKeys.size == 1, s"batch $batchId carries keys $batchKeys")
+      val secs = batchKeys.head.stripPrefix("key-").toLong
+      assert(secs >= startS && secs <= endS, s"batch $batchId: ${batchKeys.head} outside [$startS, $endS]")
+    }
+  }
+
+  test("s_wordcount key: encode's key is unix_timestamp()'s, compiled") {
+    withConf("spark.sql.codegen.wholeStage" -> "true")(keyReadsTheBatchClock())
+  }
+
+  test("s_wordcount key: encode's key is unix_timestamp()'s, interpreted") {
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(keyReadsTheBatchClock())
+  }
+
   test("checkpoint recovery: file sink resumes exactly-once after restart") {
     // The Spark analog of the reference's consumer-group offset tracking
     // (go/consumer/consumer.go:98-106): offsets live in the checkpoint
