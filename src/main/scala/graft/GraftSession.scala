@@ -34,11 +34,11 @@ object GraftSession {
 
   val nativeFunctions: Seq[functions.NativeFunction[_]] = Seq(
     functions.NativeCosine, functions.NativeSimHash, functions.NativeJaccard,
-    functions.NativeFingerprint, functions.NativeJaro, functions.NativeDot)
+    functions.NativeFingerprint, functions.NativeJaro, functions.NativeDot) ++
+    functions.SqlNames.all
 
   val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
-    functions.PromoteCosineUdf, plans.RollupRewrite, plans.JoinElimination,
-    plans.RewriteTopKWindow)
+    plans.RollupRewrite, plans.JoinElimination, plans.RewriteTopKWindow)
 
   val plannerStrategies: Seq[SparkStrategy] = Seq(
     plans.TopKStrategy, plans.AsofJoinStrategy, plans.RangeLookupStrategy)
@@ -47,12 +47,9 @@ object GraftSession {
     plans.AsofSql.descriptor, plans.RangeSql.descriptor,
     plans.TopKSql.descriptor)
 
-  /** Idempotently attach every component to a live session, plus the
-    * Scala-UDF convenience registry (`cosine_sim`, `normalize_text`, ...),
-    * which lives in `spark.udf` and so has no extensions form. */
+  /** Idempotently attach every component to a live session. */
   def attach(spark: SparkSession): SparkSession = {
     nativeFunctions.foreach(_.register(spark))
-    functions.Registry.registerAll(spark)
     tableFunctions.foreach(PlanBridge.registerTableFunction(spark, _))
     add(spark, optimizerRules, plannerStrategies)
     spark

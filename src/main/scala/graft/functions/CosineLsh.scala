@@ -93,12 +93,6 @@ object CosineLsh {
   // Materialize.spread for the one-partition-corpus failure mode
   private def spread(df: DataFrame): DataFrame = Materialize.spread(df)
 
-  /** dot(vec, literal hyperplane) as a HOF fold — [[bucketHof]] only. */
-  private def dotLit(vec: Column, plane: Array[Double]): Column =
-    aggregate(
-      zip_with(vec, typedlit(plane.toSeq), (x, y) => x.cast("double") * y),
-      lit(0d), (acc, v) => acc + v)
-
   /** Deterministic random hyperplanes: nPlanes × dim gaussians. */
   def planes(dim: Int, nPlanes: Int, seed: Long): Array[Array[Double]] = {
     val rnd = new Random(seed)
@@ -112,16 +106,6 @@ object CosineLsh {
   def bucket(vec: Column, planes: Array[Array[Double]]): Column =
     org.apache.spark.sql.graftbridge.PlanBridge.column(
       LshBucket(org.apache.spark.sql.graftbridge.PlanBridge.expression(vec), planes))
-
-  /** The original HOF bucket (sum of when(dotLit > 0, 1 << i)) — kept as
-    * the independent bit-identity mirror for the spec. NOT a production
-    * path (CodegenFallback, interpreted per element). Degenerate inputs
-    * differ deliberately: the HOF collapses null vectors and dim
-    * mismatches to bucket 0; the native kernel surfaces them as NULL. */
-  private[graft] def bucketHof(vec: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dotLit(vec, p) > 0, lit(1 << i)).otherwise(lit(0))
-    }.reduce(_ + _)
 
   /** Bucket + bit-flip neighbor buckets (multi-probe): vectors near a
     * hyperplane boundary are still found. `depth` is the probe radius —

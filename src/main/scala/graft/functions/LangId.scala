@@ -2,10 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,10 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * function words — the 1-gram version of the classic char-n-gram profile
   * method) and returns the argmax language, or "und" when nothing matches.
   *
-  * Pure codegen'd expressions: one pass over the token array per language
-  * profile (profiles are literal arrays in the plan, broadcast for free).
-  * Deterministic tie-break: higher score wins, then lexicographically
-  * smaller language code (via struct max ordering).
+  * One compiled pass per row ([[LangDetectExpr]] calling [[detectOne]]),
+  * behind both [[detect]] and the SQL name `lang_id`. Deterministic
+  * tie-break: higher score wins, then the lexicographically smaller
+  * language code.
   */
 object LangId extends Serializable {
 
@@ -28,10 +27,6 @@ object LangId extends Serializable {
     "es" -> Seq("el", "la", "de", "que", "y", "los", "en", "un"),
     "fr" -> Seq("le", "la", "et", "les", "des", "un", "une", "est"),
     "de" -> Seq("der", "die", "und", "das", "ist", "ein", "nicht", "mit"))
-
-  /** Occurrence count of profile tokens in the token array. */
-  private def score(tokens: Column, markers: Seq[String]): Column =
-    size(filter(tokens, t => array_contains(typedlit(markers), t)))
 
   private val langs: Array[String] = profiles.keys.toArray.sorted
   /** marker token → langs containing it (markers overlap: "la" is both
@@ -47,7 +42,8 @@ object LangId extends Serializable {
   private val langResults = langs.map(UTF8String.fromString)
 
   /** One compiled pass: tokenize, score every profile, argmax. Exactly
-    * [[detectHof]]'s semantics (the spec pins equality): ties break to
+    * the HOF formulation's semantics (FunctionsLibSpec pins equality
+    * against the mirror in `HofMirrors`): ties break to
     * the alphabetically smaller code, score ≤ 0 and NULL text give
     * "und". Exists because the HOF form runs one interpreted
     * filter-lambda per profile per row — 4 × |tokens| × 8 interpreted
@@ -78,26 +74,6 @@ object LangId extends Serializable {
   def detect(text: Column): Column =
     org.apache.spark.sql.graftbridge.PlanBridge.column(LangDetectExpr(
       org.apache.spark.sql.graftbridge.PlanBridge.expression(text)))
-
-  /** The original HOF formulation — kept as the independent mirror the
-    * spec compares the native scorer against (the NativeDot/LshBucket
-    * discipline). NOT a production path: interpreted per row. */
-  def detectHof(text: Column): Column = {
-    val tokens = split(lower(text), "\\s+")
-    // struct max: (score, inverted-lang) so ties pick the alphabetically
-    // first code deterministically.
-    val scored = profiles.toSeq.sortBy(_._1).map { case (lang, markers) =>
-      struct(score(tokens, markers).as("s"),
-        lit(-profiles.keys.toSeq.sorted.indexOf(lang)).as("o"),
-        lit(lang).as("lang"))
-    }
-    val best = greatest(scored: _*)
-    // NULL text must yield "und" (matching the registered lang_id SQL UDF):
-    // without the guard every score is NULL, the <=0 branch evaluates NULL,
-    // and the result falls through to a NULL/arbitrary language.
-    when(text.isNull || best.getField("s") <= 0, lit("und"))
-      .otherwise(best.getField("lang"))
-  }
 }
 
 /** Codegen wrapper for [[LangId.detectOne]]: the generated code is one
@@ -105,16 +81,11 @@ object LangId extends Serializable {
   * lookups run as JIT-compiled Scala), never an interpreted lambda.
   * NULL-tolerant by design: NULL text yields "und", so the expression
   * itself is never null. */
-case class LangDetectExpr(child: Expression) extends UnaryExpression {
+case class LangDetectExpr(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
   override def dataType: DataType = StringType
   override def nullable: Boolean = false
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType.sql}")
+  override def inputTypes = Seq(StringType)
 
   override def eval(input: InternalRow): Any =
     LangId.detectOne(child.eval(input).asInstanceOf[UTF8String])

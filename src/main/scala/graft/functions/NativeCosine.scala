@@ -21,6 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *   (embedding columns; null elements read as 0.0). Each side reads in
   *   its own element precision — a double-typed corpus is never narrowed
   *   to float; accumulation is double either way.
+  *
+  * SQL names: `cosine_sim_native`, and the convenience name `cosine_sim`
+  * ([[SqlNames.Cosine]]), which builds this expression too.
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryKernel {
@@ -71,32 +74,10 @@ case class CosineSim(left: Expression, right: Expression)
 object NativeCosine
     extends NativeFunction("cosine_sim_native", 2)(a => CosineSim(a.head, a(1)))
 
-/** Optimizer rule (§4.3 custom-Catalyst tier): rewrites calls to the
-  * registered `cosine_sim` Scala UDF into the native [[CosineSim]]
-  * expression — users writing the convenient SQL UDF get the codegen'd
-  * loop automatically. Null semantics of the UDF and the expression are
-  * identical by construction, so the rewrite is observation-equivalent. */
-object PromoteCosineUdf
-    extends org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case u: ScalaUDF
-          if u.udfName.contains("cosine_sim") && u.children.length == 2 &&
-            u.children.forall(_.dataType match {
-              case ArrayType(FloatType, _) => true
-              case _ => false
-            }) =>
-        CosineSim(u.children.head, u.children(1))
-    }
-}
-
 /** Cluster entry point: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
   * injects, at session build time, the component list
-  * [[graft.GraftSession.attach]] installs on a live session. */
+  * [[graft.GraftSession.attach]] installs on a live session — every SQL
+  * name, the convenience names of [[SqlNames]] included. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     import graft.GraftSession._

@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
 
 /** Native codegen sign-LSH bucket id: bit i = (vec · planes(i)) > 0.
   *
-  * The compiled twin of the HOF formulation in [[CosineLsh.bucketHof]]
-  * (when(aggregate(zip_with(...)) > 0, 1 << i) summed per plane):
+  * The compiled twin of the HOF formulation
+  * (when(aggregate(zip_with(...)) > 0, 1 << i) summed per plane; its
+  * mirror in the test sources is `HofMirrors.lshBucket`):
   * HigherOrderFunctions are CodegenFallback — interpreted per element —
   * and the bucket tree is re-evaluated once PER PROBE KEY inside
   * multiProbeBuckets' array constructor, so a depth-2/11-plane keying ran

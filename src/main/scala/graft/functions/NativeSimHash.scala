@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native codegen 64-bit SimHash of a token array — the compiled twin of
-  * the HOF formulation in [[SimHash.signatureHof]] (aggregate over
-  * zip_with over transform): HigherOrderFunctions are CodegenFallback, so
+  * the HOF formulation (aggregate over zip_with over transform; its
+  * mirror in the test sources is `HofMirrors.simHashSignature`):
+  * HigherOrderFunctions are CodegenFallback, so
   * the HOF builds and interprets a fresh 64-element lambda chain PER TOKEN
   * — measured minutes for a few hundred documents, i.e. unusable as the
   * production signature path. This expression is one tight

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * complements MinHashDedup: SimHash preserves cosine-ish similarity of
   * the token multiset, so near-dups land within a small Hamming ball).
   *
-  * Pure Catalyst expressions (HOF fold over token hashes — no UDF, stays
-  * in codegen):
+  * One compiled kernel per row ([[NativeSimHash]]):
   *   counters[b] = Σ_tokens (bit b of xxhash64(token) ? +1 : -1)
   *   simhash bit b = counters[b] > 0
   *
@@ -29,28 +28,6 @@ object SimHash {
   def signature(tokens: Column): Column = {
     NativeSimHash.register(org.apache.spark.sql.SparkSession.active)
     call_function(NativeSimHash.name, tokens)
-  }
-
-  /** The original HOF formulation (aggregate over zip_with over
-    * transform) — bit-identical to [[signature]] by construction, kept as
-    * the independent cross-check mirror for the spec. NOT a production
-    * path: HigherOrderFunctions are CodegenFallback, interpreted per
-    * element — minutes for a few hundred documents. */
-  private[graft] def signatureHof(tokens: Column): Column = {
-    val counters = aggregate(
-      transform(tokens, t => xxhash64(t)),
-      array_repeat(lit(0), Bits),
-      (acc, h) => zip_with(
-        acc,
-        transform(sequence(lit(0), lit(Bits - 1)),
-          b => when(call_function("shiftright", h, b).bitwiseAND(lit(1L)) === 1L,
-            lit(1)).otherwise(lit(-1))),
-        (x, y) => x + y))
-    aggregate(
-      sequence(lit(0), lit(Bits - 1)),
-      lit(0L),
-      (acc, b) => when(element_at(counters, b + 1) > 0,
-        acc.bitwiseOR(call_function("shiftleft", lit(1L), b))).otherwise(acc))
   }
 
   /** Hamming distance between two simhash columns. */

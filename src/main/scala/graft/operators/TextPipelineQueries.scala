@@ -143,10 +143,11 @@ object TextPipelineQueries extends QueryModule {
 
     "q_lang_id" -> ((s, dir) =>
       t(s, dir, "documents")
-        // single-row-group fixture parquet = one scan task, and detect's
-        // four interpreted marker-filter lambdas run in the PARTIAL
-        // aggregate (before the groupBy shuffle) — spread the cheap raw
-        // text first so the detection parallelizes
+        // single-row-group fixture parquet = one scan task, and detection
+        // runs in the partial aggregate: spreading the raw text first
+        // costs one exchange and pays from ~sf1 up. Measured on 4 cores
+        // (one JVM, 20 interleaved reps, noop sink), median wall with vs
+        // without: sf1 367 vs 552 ms; sf0.1 243 vs 199 ms.
         .repartition(col("doc_id"))
         .groupBy(col("lang"), LangId.detect(col("text")).as("detected"))
         .agg(count(lit(1)).as("n"))

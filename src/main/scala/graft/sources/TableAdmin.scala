@@ -30,10 +30,4 @@ object TableAdmin {
   /** Idempotent drop (metadata only for external tables). */
   def dropTable(spark: SparkSession, name: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
-
-  /** Provision every fixture table of a scale-factor directory as temp
-    * views — the one-call "create my world" the reference tests do per
-    * topic. */
-  def provisionFixtureViews(spark: SparkSession, sfDir: String): Unit =
-    graft.Tables.registerAll(spark, sfDir)
 }

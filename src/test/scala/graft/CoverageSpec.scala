@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.functions.Registry
 import graft.streaming.StreamOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -205,7 +204,6 @@ class CoverageSpec extends SparkSpec {
   }
 
   test("SQL function registry: cosine_sim/normalize_text/lang_id/... (K)") {
-    Registry.registerAll(spark)
     val r = spark.sql("""SELECT
         cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
                    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c1,
@@ -223,8 +221,121 @@ class CoverageSpec extends SparkSpec {
     assert(r.getAs[String]("lid") == "en")
   }
 
+  /** cos(a, b) accumulated in double, as every cosine form here does. */
+  private def cosine(a: Seq[Double], b: Seq[Double]): Double = {
+    val dot = a.zip(b).map { case (x, y) => x * y }.sum
+    dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
+  }
+  private def floats(xs: Double*) =
+    xs.map(x => s"CAST($x AS FLOAT)").mkString("array(", ", ", ")")
+  private def doubles(xs: Double*) = xs.map(x => s"${x}D").mkString("array(", ", ", ")")
+  private def chars(parts: Any*) = parts.map {
+    case c: Int => s"chr($c)"
+    case s => s"'$s'"
+  }.mkString("concat(", ", ", ")")
+
+  /** The five SQL convenience names on their edge cases: (call, value). */
+  private val sqlNamePins: Seq[(String, Any)] = Seq(
+    s"cosine_sim(CAST(NULL AS ARRAY<FLOAT>), ${floats(1)})" -> null,
+    s"cosine_sim(${floats(1, 0)}, NULL)" -> null,
+    "cosine_sim(CAST(array() AS ARRAY<FLOAT>), CAST(array() AS ARRAY<FLOAT>))" -> null,
+    s"cosine_sim(${floats(1)}, ${floats(1, 0)})" -> null,
+    s"cosine_sim(${floats(0, 0)}, ${floats(1, 1)})" -> null,
+    s"cosine_sim(${floats(1, 0)}, ${floats(1, 0)})" -> 1.0,
+    s"cosine_sim(${floats(1, 0)}, ${floats(0, 1)})" -> 0.0,
+    s"cosine_sim(${floats(1, 2, 3)}, ${floats(4, 5, 6)})" ->
+      cosine(Seq(1, 2, 3), Seq(4, 5, 6)),
+    "cosine_sim(array(1, 2, 3), array(4, 5, 6))" -> cosine(Seq(1, 2, 3), Seq(4, 5, 6)),
+    "cosine_sim(array(1.5, 0.0), array(3.0, 0.0))" -> 1.0,
+    "normalize_text(NULL)" -> null,
+    "normalize_text('')" -> "",
+    "normalize_text('   ')" -> "",
+    s"normalize_text(${chars(9, 10, 13, " ")})" -> "",
+    s"normalize_text(${chars(9, "  Hello", 10, 10, "WORLD  ", 13, 10)})" -> "hello world",
+    s"normalize_text(${chars(1, "A  B", 31)})" -> "a b",
+    s"normalize_text(${chars("a", 11, 12, "b")})" -> "a b",
+    s"normalize_text(${chars("a", 1, "b")})" -> "a\u0001b",
+    "normalize_text('  ÄÖÜ  Straße ')" -> "äöü straße",
+    "normalize_text('ΣΊΣΥΦΟΣ')" -> "σίσυφος",
+    s"normalize_text(${chars(160, "A", 160)})" -> " a ",
+    "token_count(NULL)" -> 0,
+    "token_count('')" -> 0,
+    "token_count('   ')" -> 0,
+    s"token_count(${chars(9, "a b", 10)})" -> 2,
+    "token_count('a  b   c')" -> 3,
+    "token_count('héllo wörld ñ')" -> 3,
+    s"token_count(${chars("a", 1, "b")})" -> 1,
+    s"token_count(${chars("a", 160, "b")})" -> 1,
+    s"token_count(${chars("a", 11, "b")})" -> 2,
+    "jaccard_tokens(NULL, 'a')" -> null,
+    "jaccard_tokens('a', NULL)" -> null,
+    "jaccard_tokens('', '')" -> null,
+    s"jaccard_tokens('  ', ${chars(9, 10)})" -> null,
+    "jaccard_tokens('', 'a')" -> 0.0,
+    "jaccard_tokens('a b', 'c')" -> 0.0,
+    "jaccard_tokens('a b c', 'b c d')" -> 0.5,
+    s"jaccard_tokens(' a  a b ', ${chars("b", 9, "a", 10)})" -> 1.0,
+    "jaccard_tokens('Héllo wörld', 'héllo wörld')" -> 1.0 / 3,
+    "lang_id(NULL)" -> "und",
+    "lang_id('')" -> "und",
+    s"lang_id(${chars(9, 10, " ")})" -> "und",
+    "lang_id('zzz qqq')" -> "und",
+    "lang_id('the cat and the dog')" -> "en",
+    s"lang_id(${chars(9, "The", 10)})" -> "en",
+    "lang_id('el perro y el gato')" -> "es",
+    "lang_id('LA MAISON EST belle')" -> "fr",
+    "lang_id('der Hund und die Katze')" -> "de",
+    "lang_id('über die Brücke')" -> "de",
+    "lang_id('ÉL Y ELLA')" -> "es",
+    "lang_id('la')" -> "es", // es/fr tie: the alphabetically first code
+    "lang_id('the der')" -> "de",
+    "lang_id('le la')" -> "fr")
+
+  /** Evaluates every pin twice on `s`: constant-folded (the interpreted
+    * eval) and with folding off (the generated code). */
+  private def checkSqlNamePins(s: org.apache.spark.sql.SparkSession): Unit = {
+    val select = sqlNamePins.zipWithIndex
+      .map { case ((call, _), i) => s"$call AS p$i" }.mkString("SELECT ", ", ", "")
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val prev = s.conf.getOption(excluded)
+    val rows = Seq(None, Some(
+      "org.apache.spark.sql.catalyst.optimizer.ConstantFolding")).map { rule =>
+      rule.foreach(s.conf.set(excluded, _))
+      try {
+        val df = s.sql(select)
+        assert(rule.isEmpty || df.queryExecution.executedPlan.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]))
+        df.head()
+      } finally prev.fold(s.conf.unset(excluded))(s.conf.set(excluded, _))
+    }
+    for (row <- rows; ((call, want), i) <- sqlNamePins.zipWithIndex) {
+      val got = row.get(i)
+      assert(got == want, s"$call = $got, pinned $want")
+      if (want != null) assert(got.getClass == want.getClass,
+        s"$call returned a ${got.getClass}, pinned a ${want.getClass}")
+    }
+  }
+
+  test("SQL convenience names: each pinned on its edge cases (K)") {
+    checkSqlNamePins(spark)
+    // ARRAY<DOUBLE> input
+    val (a, b) = (Seq(0.1, 0.2, 0.3), Seq(0.3, 0.2, 0.1))
+    val r = spark.sql(s"""SELECT cosine_sim(${doubles(a: _*)}, ${doubles(b: _*)}),
+      cosine_sim_native(${doubles(a: _*)}, ${doubles(b: _*)})""").head()
+    // read as doubles, as cosine_sim_native does; the Scala UDF this name
+    // once was narrowed them to float
+    val narrowed = cosine(a.map(_.toFloat.toDouble), b.map(_.toFloat.toDouble))
+    assert(r.getDouble(0) == r.getDouble(1), s"${r.getDouble(0)} vs ${r.getDouble(1)}")
+    assert(r.getDouble(1) == cosine(a, b))
+    assert(r.getDouble(0) != narrowed)
+  }
+
+  test("SQL convenience names: a session built only by GraftExtensions answers them (K)") {
+    checkSqlNamePins(org.apache.spark.sql.graftbridge.ExtensionsProbe.session(
+      spark, new graft.functions.GraftExtensions))
+  }
+
   test("registered cosine_sim agrees with the HOF cosine on embeddings (K)") {
-    Registry.registerAll(spark)
     table("embeddings").limit(50).createOrReplaceTempView("emb_cov")
     val rows = spark.sql("""
       SELECT ABS(

@@ -148,7 +148,7 @@ class FunctionsLibSpec extends SparkSpec {
         (9202L, Seq("one", null, "two"))).toDF("doc_id", "t"))
     val mismatch = docs.select(
         SimHash.signature(col("t")).as("native"),
-        SimHash.signatureHof(col("t")).as("hof"))
+        HofMirrors.simHashSignature(col("t")).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(mismatch == 0, s"$mismatch signatures differ between kernels")
   }
@@ -231,7 +231,7 @@ class FunctionsLibSpec extends SparkSpec {
     val e = table("embeddings")
     val mismatch = e.select(
         CosineLsh.bucket(col("embedding"), ps).as("native"),
-        CosineLsh.bucketHof(col("embedding"), ps).as("hof"))
+        HofMirrors.lshBucket(col("embedding"), ps).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(mismatch == 0, s"$mismatch bucket ids differ between kernels")
   }
@@ -710,7 +710,7 @@ class FunctionsLibSpec extends SparkSpec {
     val df = rows.toDF("text")
     val got = df.select(
         LangId.detect(col("text")).as("a"),
-        LangId.detectHof(col("text")).as("b"))
+        HofMirrors.langDetect(col("text")).as("b"))
       .filter(not(col("a") <=> col("b"))).count()
     assert(got == 0, "native LangId scorer must equal the HOF mirror")
   }

@@ -55,20 +55,35 @@ class GraftSessionSpec extends SparkSpec {
       assert(tvfs.functionExists(t._1), t._1.funcName))
     // the experimental lists are written in one place: an assignment
     // anywhere else in the engine is a second install path that can drift
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
-    val assign = """\bextra(Optimizations|Strategies)\s*=(?!=)""".r
-    val files = Files.walk(root)
-    val hits =
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-        .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if assign.findFirstIn(line).isDefined =>
-            s"${root.relativize(p)}:${i + 1}"
-        })
-      finally files.close()
+    val hits = mainSourceLines("""\bextra(Optimizations|Strategies)\s*=(?!=)""")
     // one assignment per list, both in GraftSession's shared helper
     assert(hits.length == 2 &&
       hits.forall(_.startsWith("graft/GraftSession.scala:")),
       s"experimental lists assigned outside the shared helper: $hits")
+  }
+
+  test("one SQL surface: no Scala UDF is registered or built in the engine") {
+    // every SQL name is a NativeFunction, so GraftExtensions injects all of
+    // them; a spark.udf name would exist on attached sessions only
+    val registered = mainSourceLines("""\budf\.register\b""")
+    assert(registered.isEmpty, s"Scala UDFs registered at $registered")
+    // PlanDoctor's risk check is the one reader of ScalaUDF
+    val udfs = mainSourceLines("""\bScalaUDF\b""")
+    assert(udfs.nonEmpty && udfs.forall(_.startsWith("graft/plans/PlanDoctor.scala:")),
+      s"ScalaUDF outside PlanDoctor: $udfs")
+  }
+
+  /** `file:line` of every main-source line matching `pattern`. */
+  private def mainSourceLines(pattern: String): Seq[String] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
+    val re = pattern.r
+    val files = Files.walk(root)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if re.findFirstIn(line).isDefined =>
+          s"${root.relativize(p)}:${i + 1}"
+      })
+    finally files.close()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import graft.functions.{GraftExtensions, NativeCosine, Registry}
+import graft.functions.{GraftExtensions, NativeCosine}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
@@ -59,16 +59,15 @@ class NativeExprSpec extends SparkSpec {
     assert(!plan.contains("ScalaUDF"), "hot path fell back to a Scala UDF")
   }
 
-  test("PromoteCosineUdf rewrites the registered UDF to the native expression") {
-    graft.functions.Registry.registerAll(spark)
+  test("cosine_sim resolves to the native expression, no ScalaUDF") {
     table("embeddings").limit(20).createOrReplaceTempView("emb_native")
     val df = spark.sql("""
       SELECT vec_id, cosine_sim(embedding, embedding) AS c
       FROM emb_native""")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("cosine_sim_native"),
-      s"UDF not promoted to native expression:\n$plan")
-    assert(!plan.contains("ScalaUDF"), "ScalaUDF survived the rewrite")
+      s"cosine_sim did not build the native expression:\n$plan")
+    assert(!plan.contains("ScalaUDF"), "cosine_sim planned a ScalaUDF")
     df.collect().foreach(r => assert(math.abs(r.getDouble(1) - 1.0) < 1e-9))
   }
 
@@ -337,15 +336,12 @@ class NativeExprSpec extends SparkSpec {
 
   test("GraftExtensions injects the function into a new session") {
     // The cluster path (spark.sql.extensions=graft.functions.GraftExtensions)
-    // installs what the library path (GraftSession.attach) does, less the
-    // Scala-UDF registry (spark.udf has no extensions form).
+    // installs exactly what the library path (GraftSession.attach) does.
     def functionNames(s: SparkSession): Set[String] =
       s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
     def tableFunctionNames(s: SparkSession): Set[String] =
       s.sessionState.tableFunctionRegistry.listFunction().map(_.funcName).toSet
     val bare = spark.newSession()
-    val udfs = spark.newSession()
-    Registry.registerAll(udfs)
     val attached = GraftSession.attach(spark.newSession())
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
@@ -356,7 +352,9 @@ class NativeExprSpec extends SparkSpec {
       attached.experimental.extraOptimizations)
     val injected = ExtensionsProbe.functionNames(ext)
     assert(injected.contains(NativeCosine.name))
-    assert(injected == functionNames(attached) -- functionNames(udfs))
+    Seq("cosine_sim", "lang_id", "jaccard_tokens", "normalize_text", "token_count")
+      .foreach(n => assert(injected.contains(n), n))
+    assert(injected == functionNames(attached) -- functionNames(bare))
     val injectedTvfs = ExtensionsProbe.tableFunctionNames(ext)
     assert(injectedTvfs.nonEmpty &&
       injectedTvfs == tableFunctionNames(attached) -- tableFunctionNames(bare))

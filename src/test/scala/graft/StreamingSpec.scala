@@ -657,6 +657,29 @@ class StreamingSpec extends SparkSpec {
       "stream-maintained LSH index must equal rebuild-without")
   }
 
+  test("s_takedown_retrieval: streamed removals compact the BM25 index") {
+    val docs = table("documents").select("doc_id", "text")
+    def build(d: DataFrame) = graft.functions.RetrievalIndex.build(d, "doc_id", "text")
+    // two identical indexes: the feed names the first, the second must
+    // come through untouched
+    val (dir, other) = (Files.createTempDirectory("graft-stk-retr").toString,
+      Files.createTempDirectory("graft-stk-retr-other").toString)
+    Seq(dir, other).foreach(graft.functions.RetrievalIndex.write(build(docs), _))
+    val rmPred = IncrementContract.isRemoved(col("doc_id"))
+    val rmIds = docs.filter(rmPred).select("doc_id").as[Long].collect().toSeq
+    val cp = Files.createTempDirectory("graft-cp").toString
+    feedRemovals(rmIds)(
+      graft.streaming.StreamingTakedown.maintainRetrievalIndex(_, dir, cp))
+    def same(a: DataFrame, b: DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    Seq(dir -> build(docs.filter(!rmPred)), other -> build(docs)).foreach {
+      case (path, want) =>
+        val got = graft.functions.RetrievalIndex.read(spark, path)
+        assert(same(got.postings, want.postings) && same(got.doclens, want.doclens),
+          s"$path: the stream must compact exactly the index it was given")
+    }
+  }
+
   test("s_simhash pairsAgainstIndex: arrivals probe the stored sig index") {
     // the SimHash twin of s_lsh (round-11: the family's persisted index)
     // — planted exact copies are Hamming-0 by construction, so recall is
