@@ -86,16 +86,16 @@ object IncrementContract {
         operators.DedupQueries.ensureSimhashBase(s, dir): Unit
       },
       timed("lsh") { operators.EvalQueries.ensureLshBase(s, dir): Unit },
-      timed("tokens") { functions.TokenStore.ensureIncBase(s, dir): Unit },
-      timed("grams") { functions.GramStore.ensureIncBase(s, dir): Unit },
+      timed("tokens") { functions.TokenStore.store.ensureIncBase(s, dir): Unit },
+      timed("grams") { functions.GramStore.sh3Store.ensureIncBase(s, dir): Unit },
       timed("retrieval") {
-        functions.RetrievalIndex.ensureIncBase(s, dir): Unit
+        functions.RetrievalIndex.store.ensureIncBase(s, dir): Unit
       },
       timed("tokens_compact") {
-        functions.TokenStore.ensureCompacted(s, dir): Unit
+        functions.TokenStore.store.ensureCompacted(s, dir): Unit
       },
       timed("retrieval_compact") {
-        functions.RetrievalIndex.ensureCompacted(s, dir): Unit
+        functions.RetrievalIndex.store.ensureCompacted(s, dir): Unit
       },
       timed("dedup_compact") {
         operators.DedupQueries.ensureCompactClusters(s, dir): Unit
@@ -107,7 +107,7 @@ object IncrementContract {
         operators.EvalQueries.ensureLshCompact(s, dir): Unit
       },
       timed("grams_compact") {
-        functions.GramStore.ensureCompacted(s, dir): Unit
+        functions.GramStore.sh3Store.ensureCompacted(s, dir): Unit
       })
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** THE bucketed-catalog-projection convention, in one place, and the
-  * engine's only bucketed writer: TokenStore.termFreqBucketed,
-  * GramStore.bucketedRead, the dedup increment base's band keys
+  * engine's only bucketed writer: the per-doc stores' projections
+  * (DocStore.bucketed), the dedup increment base's band keys
   * (DedupQueries.ensureIncBase) and q_join_bucketed's two tables
   * (JoinQueries.bucketize) all build and re-register through it. The
   * convention:

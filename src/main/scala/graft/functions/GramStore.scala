@@ -26,10 +26,11 @@ import org.apache.spark.sql.functions._
   *   - `gram5/` (doc_id, g): per-doc DISTINCT 5-token grams — the
   *     decontamination grain (q_decontaminate / q_curation_pipeline).
   *
-  * Both relations are PER-DOC ROWS, so appending a batch of new doc ids
-  * is exact: appendDocs(write(build(C)), B) ≡ build(C ∪ B) row-for-row
-  * (GramStoreSpec pins it) — the RetrievalIndex.appendDocs contract; an
-  * updated document needs a rebuild or delete+append compaction.
+  * Every relation holds PER-DOC ROWS, so the [[DocStore]] protocol
+  * applies: appending a batch of new doc ids is exact, appendDocs(
+  * write(C), B) ≡ write(C ∪ B) row-for-row (GramStoreSpec pins it), and
+  * an updated document goes through the store's delete+append
+  * compaction.
   *
   * Scale posture (100 TB): the artifact is the corpus's tokenize output
   * materialized once — every consumer's remaining work is shuffle-shaped
@@ -44,44 +45,6 @@ import org.apache.spark.sql.functions._
   * the store automatically.
   */
 object GramStore {
-
-  /** Build-then-compact artifact for the q_novelty_compact proof: a
-    * FULL-corpus sh3 store compacted under the IncrementContract
-    * takedown/update split (the proof artifact carries only the novelty
-    * grain — the five-grain store's compaction is spec-pinned by
-    * CompactStoreSpec), marked `compacted` once done. Idempotent at
-    * every step; pre-built by Bench. */
-  private[graft] def ensureCompacted(s: SparkSession, dir: String): String =
-    Artifacts.ensure(Artifacts.path("grams", "cmp", dir),
-        Artifacts.Compacted) { path =>
-      CompactStore.heal(s"$path/sh3")
-      val docs = graft.Tables.load(s, dir, "documents")
-      if (!new java.io.File(s"$path/sh3/_SUCCESS").exists())
-        buildSh3(docs).write.mode("overwrite").parquet(s"$path/sh3")
-      val updated = docs
-        .filter(graft.IncrementContract.isUpdated(col("doc_id")))
-        .withColumn("text",
-          graft.IncrementContract.updatedText(col("text")))
-      val rm = docs
-        .filter(graft.IncrementContract.isRemoved(col("doc_id")))
-        .select("doc_id")
-        .unionByName(updated.select("doc_id"))
-      CompactStore.compactRelation(s"$path/sh3", "doc_id", rm,
-        Some(buildSh3(updated)))
-    }
-
-  /** Build-on-first-touch of the q_novelty_incr increment base: the
-    * standing 80% corpus's sh3 shingle rows (the IncrementContract
-    * split), write-once at `Artifacts.path("grams", "base", dir)`. The
-    * Bench pre-builds it so the graded query times only the
-    * arrival path. */
-  private[graft] def ensureIncBase(s: SparkSession, dir: String): String =
-    Artifacts.ensure(Artifacts.path("grams", "base", dir), "sh3/_SUCCESS") {
-      path =>
-        buildSh3(graft.Tables.load(s, dir, "documents")
-            .filter(!graft.IncrementContract.isDelta(col("doc_id"))))
-          .write.mode("overwrite").parquet(s"$path/sh3")
-    }
 
   /** The DISTINCT (doc_id, source, sh, shh) 3-token shingle relation —
     * byte-identical rows to what q_novelty/q_mix_knapsack derived inline
@@ -108,10 +71,10 @@ object GramStore {
     * too). Stored separately so the biggest per-query shuffle of the
     * containment family (the shingle-grain distinct) is paid once per
     * corpus. This from-docs form is the SPEC's independent mirror; the
-    * production write path ([[writeRelations]]) derives sh3h from the
-    * already-materialized sh3 relation instead — identical rows by
-    * construction (shh is a pure function of sh), without re-running
-    * the tokenize+md5 pass the store exists to amortize. */
+    * [[store]] derives sh3h from the already-materialized sh3 relation
+    * instead — identical rows by construction (shh is a pure function of
+    * sh), without re-running the tokenize+md5 pass the store exists to
+    * amortize. */
   private[graft] def buildSh3h(docs: DataFrame): DataFrame =
     buildSh3(docs).select(col("doc_id"), col("shh")).distinct()
 
@@ -168,174 +131,63 @@ object GramStore {
         conv(substring(md5(col("span").cast("binary")), 1, 15), 16, 10)
           .cast("bigint").as("span_h"))
 
-  /** Build-on-first-touch for a fixture dir (the persistedClusters
-    * discipline: immutable fixture dirs, content-keyed tag). */
-  private val relationNames = Seq("sh3", "sh3h", "span8", "gram5", "gram2")
-
-  /** One derivation pass for a doc set (full-corpus build or arriving
-    * batch): sh3 materializes once and also feeds the sh3h projection —
-    * the tokenize+md5+per-doc-distinct is the store's dominant cost,
-    * and paying it twice per build/append would halve the point of the
-    * artifact. span8/gram5 tokenize separately (different window
-    * widths over the raw text). */
-  private def writeRelations(docs: DataFrame, path: String,
-                             mode: String): Unit = {
-    // the bucketed projections derive from the relations about to change
-    // — drop them FIRST (crash ⇒ no projection, never a stale one)
-    invalidateBucketed(path)
-    val written = scala.collection.mutable.Set.empty[String]
-    def put(name: String, df: DataFrame): Unit = {
-      // appends go through the staged-rename commit (crash-atomic, and
-      // loud on a never-built relation — round-11 verdict task #2 /
-      // advice finding); the full build keeps the plain multi-file write
-      if (mode == "append") StagedCommit.commitAppend(s"$path/$name", df)
-      else df.write.mode(mode).parquet(s"$path/$name")
-      written += name
-    }
+  /** The five-grain store (kind `store`; bucketed projections `sh3b/`
+    * on the shingle string and `span8b/` on the span hash, catalog
+    * `graft_grams_{sh3,span8}_<tag>`). One derivation pass per doc set
+    * (full-corpus build or arriving batch): sh3 materializes once and
+    * also feeds the sh3h projection — the tokenize+md5+per-doc-distinct
+    * is the store's dominant cost, and paying it twice per build/append
+    * would halve the point of the artifact. span8/gram5/gram2 tokenize
+    * separately (different window widths over the raw text). */
+  private[graft] val store = new DocStore("grams",
+    Seq("sh3", "sh3h", "span8", "gram5", "gram2"), Seq(
+      DocStore.Projection("sh3", "sh",
+        "doc_id BIGINT, source STRING, sh STRING, shh BIGINT",
+        "graft_grams_sh3"),
+      DocStore.Projection("span8", "span_h", "doc_id BIGINT, span_h BIGINT",
+        "graft_grams_span8")))({ docs =>
     val sh3 = Materialize(buildSh3(docs))
-    put("sh3", sh3)
-    put("sh3h", sh3.select(col("doc_id"), col("shh")).distinct())
-    put("span8", buildSpan8(docs))
-    put("gram5", buildGram5(docs))
-    put("gram2", buildGram2(docs))
-    // lockstep guard: ensure()'s completeness check and this write path
-    // must name the same relations — a grain added to one but not the
-    // other either crashes readers of older stores or rebuilds forever
-    require(written == relationNames.toSet,
-      s"writeRelations/relationNames drift: wrote $written, declared $relationNames")
-  }
+    Seq(sh3, sh3.select(col("doc_id"), col("shh")).distinct(),
+      buildSpan8(docs), buildGram5(docs), buildGram2(docs))
+  })
 
-  private def ensure(s: SparkSession, dir: String): String = {
-    val root = Artifacts.path("grams", "store", dir)
-    // finish/abort any interrupted compaction before trusting _SUCCESS
-    relationNames.foreach(name => CompactStore.heal(s"$root/$name"))
-    Artifacts.ensure(root, relationNames.map(_ + "/_SUCCESS"): _*) { path =>
-      writeRelations(graft.Tables.load(s, dir, "documents"), path,
-        "overwrite")
-    }
-  }
-
-  /** Per-relation replacement builders for [[compact]] — the same
-    * derivations [[writeRelations]] writes, over the updated docs only.
-    * sh3h derives from the updated docs directly (buildSh3h), not from
-    * the materialized sh3, because the compaction path is takedown-sized,
-    * not corpus-sized. */
-  private def replacementFor(name: String, docs: DataFrame): DataFrame =
-    name match {
-      case "sh3"   => buildSh3(docs)
-      case "sh3h"  => buildSh3h(docs)
-      case "span8" => buildSpan8(docs)
-      case "gram5" => buildGram5(docs)
-      case "gram2" => buildGram2(docs)
-    }
-
-  /** DELETE/UPDATE compaction (round-11 verdict task #1): drop every
-    * stored row of `removeIds` documents across all five grains and
-    * insert the freshly-derived rows of `updatedDocs` (ids implicitly
-    * removed first — the delete+append update idiom). Touched-files-only
-    * rewrite per relation; a crash between relations re-runs
-    * idempotently (updated ids are in the removal set, so their
-    * previously-inserted rows delete before re-inserting). */
-  def compact(path: String, removeIds: DataFrame,
-              updatedDocs: DataFrame): Unit =
-    FsUtil.withWriterLock(path) {
-      invalidateBucketed(path)
-      val rm = removeIds.select(col("doc_id"))
-        .unionByName(updatedDocs.select(col("doc_id"))).distinct()
-      relationNames.foreach { name =>
-        CompactStore.compactRelation(s"$path/$name", "doc_id", rm,
-          Some(replacementFor(name, updatedDocs)))
-      }
-    }
-
-  /** Removal-only [[compact]] (takedowns with no replacement rows):
-    * drop every stored row of `removeIds` documents across all five
-    * grains — the streaming takedown maintainer's entry point (ids in
-    * the first column; idempotent, so at-least-once replay is safe). */
-  def compactRemove(path: String, removeIds: DataFrame): Unit =
-    FsUtil.withWriterLock(path) {
-      invalidateBucketed(path)
-      val rm = removeIds
-        .select(col(removeIds.columns.head).as("doc_id")).distinct()
-      relationNames.foreach { name =>
-        CompactStore.compactRelation(s"$path/$name", "doc_id", rm, None)
-      }
-    }
+  /** The novelty grain alone (family `grams`, kinds `base` for
+    * q_novelty_incr and `cmp` for q_novelty_compact — the proof artifact
+    * carries only the novelty grain; the five-grain store's compaction
+    * is spec-pinned by CompactStoreSpec). */
+  private[graft] val sh3Store =
+    new DocStore("grams", Seq("sh3"))(docs => Seq(buildSh3(docs)))
 
   /** The stored sh3 relation of a fixture corpus (builds on first touch;
     * steady state: an exchange-free parquet scan). */
   def shingles3(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/sh3")
-
-  /** A stored relation as a BUCKETED catalog projection — the TokenStore
-    * termFreqBucketed machinery generalized (round-11 verdict task #4:
-    * "bucket by the grain hash at warehouse scale" was a scaladoc claim;
-    * this exercises it): 8 buckets on `key`, ONE sorted file per bucket
-    * (repartition before the bucketed write so each bucket scans as
-    * sorted), re-registered across JVMs with a metadata-only CREATE
-    * TABLE ... CLUSTERED BY ... LOCATION. Every key-clustered stage of a
-    * consumer then runs with NO Exchange on the stored side. The
-    * projection derives from the base relation, so appends/compactions
-    * invalidate it ([[invalidateBucketed]]) and the next touch rebuilds. */
-  private def bucketedRead(s: SparkSession, dir: String, rel: String,
-                           key: String, ddlSchema: String): DataFrame = {
-    val path = ensure(s, dir)
-    BucketedTable.readOrBuild(s,
-      s"graft_grams_${rel}_${Artifacts.dirTag(dir)}",
-      s"$path/${rel}b", Seq(key), ddlSchema) {
-      s.read.parquet(s"$path/$rel")
-    }
-  }
+    store.stored(s, dir, "sh3")
 
   /** sh3 bucketed+sorted on the shingle string — q_novelty's and
     * q_mix_knapsack's first-occurrence aggregates (groupBy sh, the
     * family's dominant shuffle) run exchange-free on the stored side. */
   def shingles3Bucketed(s: SparkSession, dir: String): DataFrame =
-    bucketedRead(s, dir, "sh3", "sh",
-      "doc_id BIGINT, source STRING, sh STRING, shh BIGINT")
+    store.bucketed(s, dir, "sh3")
 
   /** span8 bucketed+sorted on the span hash — q_span_dedup's span-grain
     * aggregate AND its join back to the span relation both cluster on
     * span_h, so neither exchanges the stored side. */
   def spans8Bucketed(s: SparkSession, dir: String): DataFrame =
-    bucketedRead(s, dir, "span8", "span_h", "doc_id BIGINT, span_h BIGINT")
-
-  /** Drop the derived bucketed projections after their sources changed
-    * (appends and compactions call this BEFORE mutating, the TokenStore
-    * crash-ordering argument: a crash then leaves no projection at all,
-    * never a stale one). */
-  private[graft] def invalidateBucketed(path: String): Unit =
-    Seq("sh3b", "span8b").foreach(rel =>
-      FsUtil.deleteRecursively(new java.io.File(s"$path/$rel")))
+    store.bucketed(s, dir, "span8")
 
   /** The stored distinct (doc_id, shh) hash relation. */
   def shingles3Hashed(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/sh3h")
+    store.stored(s, dir, "sh3h")
 
   /** The stored span8 relation of a fixture corpus. */
   def spans8(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/span8")
+    store.stored(s, dir, "span8")
 
   /** The stored per-doc-distinct 5-gram relation. */
   def grams5(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/gram5")
+    store.stored(s, dir, "gram5")
 
   /** The stored per-doc bigram-count relation. */
   def grams2(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/gram2")
-
-  /** Append a batch of NEW documents (ids disjoint from the stored
-    * corpus) to an existing store at `path`: one tokenize pass over the
-    * batch per window width, each relation committed through the
-    * staged-rename primitive (crash-atomic per relation; a crash between
-    * relation commits leaves some relations appended and others not —
-    * still consistent per relation, and the batch re-append is safe only
-    * for the not-yet-committed relations, so treat a mid-appendDocs
-    * crash as a rebuild signal; the exactly-once path is the streaming
-    * maintainer's ledger). Every stored relation is per-doc — including
-    * sh3h's per-batch hash-distinct — so disjoint ids make each append
-    * exact. Requires a BUILT store (commitAppend fails loud otherwise —
-    * the round-11 advice finding). */
-  def appendDocs(path: String, docs: DataFrame): Unit =
-    FsUtil.withWriterLock(path) { writeRelations(docs, path, "append") }
+    store.stored(s, dir, "gram2")
 }

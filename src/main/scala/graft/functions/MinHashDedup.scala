@@ -279,8 +279,8 @@ object MinHashDedup {
     val sh = Materialize(shingleRel(accepted, idCol, textCol, shingleN))
     // staged-rename commits: each relation appends crash-atomically (a
     // crash between the two leaves keys appended and shingles not —
-    // treat as a rebuild signal, same two-relation caveat as
-    // RetrievalIndex.appendDocs)
+    // treat as a rebuild signal, same multi-relation caveat as
+    // DocStore.appendDocs)
     StagedCommit.commitAppend(s"$path/keys",
       bandedKeysFromShingles(sh, bands, rows))
     StagedCommit.commitAppend(s"$path/shingles", sh)

@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   *     (doc, w)-distinct grain), and the per-doc metadata (lang,
   *     source) rides along without a doc-grain join.
   *
-  * Every row is PER-DOC, so appending a batch of new doc ids is exact:
-  * appendDocs(write(build(C)), B) ≡ build(C ∪ B) row-for-row
-  * (TokenStoreSpec pins it) — the RetrievalIndex.appendDocs contract;
-  * an updated document needs a rebuild or delete+append compaction.
+  * Every row is PER-DOC, so the [[DocStore]] protocol applies: appending
+  * a batch of new doc ids is exact, appendDocs(write(C), B) ≡ write(C ∪
+  * B) row-for-row (TokenStoreSpec pins it), and an updated document goes
+  * through the store's delete+append compaction.
   * The DuckDB oracles of all six consumers stay FROM-SCRATCH, so each
   * sweep's hash matches re-prove stored ≡ derived.
   *
@@ -41,18 +41,6 @@ import org.apache.spark.sql.functions._
   * invalidates the store automatically.
   */
 object TokenStore {
-
-  /** Build-on-first-touch of the q_tfidf_incr increment base: the
-    * standing 80% corpus's tf rows (the IncrementContract split),
-    * write-once at `Artifacts.path("tokens", "base", dir)`. Bench
-    * pre-builds it so the graded query times only the arrival path. */
-  private[graft] def ensureIncBase(s: SparkSession, dir: String): String =
-    Artifacts.ensure(Artifacts.path("tokens", "base", dir), "tf/_SUCCESS") {
-      path =>
-        buildTf(graft.Tables.load(s, dir, "documents")
-            .filter(!graft.IncrementContract.isDelta(col("doc_id"))))
-          .write.mode("overwrite").parquet(s"$path/tf")
-    }
 
   /** The (doc_id, lang, source, w, tf) relation — one tokenize pass.
     * Plain explode, NOT explode_outer: every consumer tokenizes with
@@ -70,119 +58,26 @@ object TokenStore {
       .groupBy("doc_id", "lang", "source", "w")
       .agg(count(lit(1)).as("tf"))
 
-  private def ensure(s: SparkSession, dir: String): String = {
-    val root = Artifacts.path("tokens", "store", dir)
-    // finish/abort any interrupted compaction before trusting _SUCCESS
-    CompactStore.heal(s"$root/tf")
-    Artifacts.ensure(root, "tf/_SUCCESS") { path =>
-      buildTf(graft.Tables.load(s, dir, "documents"))
-        .write.mode("overwrite").parquet(s"$path/tf")
-    }
-  }
-
-  /** Build-then-compact artifact for the q_tfidf_compact proof: a FULL
-    * corpus store compacted under the IncrementContract takedown/update
-    * split, marked `compacted` once done. Every step is idempotent
-    * (CompactStore.heal + the updated-ids-in-removal-set argument), so a
-    * crash anywhere re-runs clean. Pre-built by Bench; the
-    * graded query is then a pure read of the compacted store. */
-  private[graft] def ensureCompacted(s: SparkSession, dir: String): String =
-    Artifacts.ensure(Artifacts.path("tokens", "cmp", dir),
-        Artifacts.Compacted) { path =>
-      CompactStore.heal(s"$path/tf")
-      val docs = graft.Tables.load(s, dir, "documents")
-      if (!new java.io.File(s"$path/tf/_SUCCESS").exists())
-        buildTf(docs).write.mode("overwrite").parquet(s"$path/tf")
-      compact(path,
-        docs.filter(graft.IncrementContract.isRemoved(col("doc_id")))
-          .select("doc_id"),
-        docs.filter(graft.IncrementContract.isUpdated(col("doc_id")))
-          .withColumn("text",
-            graft.IncrementContract.updatedText(col("text"))))
-    }
-
-  /** DELETE/UPDATE compaction (round-11 verdict task #1 — the
-    * append-only contract's documented gap): drop every stored row of
-    * `removeIds` documents and insert the freshly-tokenized rows of
-    * `updatedDocs` (whose ids are implicitly removed first — the
-    * delete+append update idiom; pass an empty updatedDocs for pure
-    * takedowns). Touched-files-only rewrite: untouched files — the bulk
-    * at warehouse scale — stay byte-identical (CompactStore). The
-    * bucketed projection derives from tf/, so it invalidates FIRST
-    * (crash ⇒ no projection at all, never a stale one). */
-  def compact(path: String, removeIds: DataFrame,
-              updatedDocs: DataFrame): Unit =
-    FsUtil.withWriterLock(path) {
-      invalidateBucketed(path)
-      val rm = removeIds.select(col("doc_id"))
-        .unionByName(updatedDocs.select(col("doc_id"))).distinct()
-      CompactStore.compactRelation(s"$path/tf", "doc_id", rm,
-        Some(buildTf(updatedDocs)))
-    }
-
-  /** Pure-takedown flavor of [[compact]] (no updated docs — the
-    * streaming takedown maintainer's per-batch operation). */
-  def compactRemove(path: String, removeIds: DataFrame): Unit =
-    FsUtil.withWriterLock(path) {
-      invalidateBucketed(path)
-      CompactStore.compactRelation(s"$path/tf", "doc_id",
-        removeIds.select(col(removeIds.columns.head).as("doc_id")), None)
-    }
-
-  /** The stored term-frequency relation of a fixture corpus (builds on
-    * first touch; steady state: an exchange-free parquet scan). */
-  def termFreq(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/tf")
-
-  /** Append a batch of NEW documents (ids disjoint from the stored
-    * corpus): one tokenize pass over the batch, committed through the
-    * staged-rename primitive (StagedCommit.commitAppend — round-11
-    * verdict task #2: crash mid-append now leaves the store exactly as
-    * it was, never partial batch rows under a vouching `_SUCCESS`; the
-    * commit also REQUIRES an existing built store, closing the advice
-    * finding where appending into a never-built path minted a
-    * delta-only store). The bucketed projection (`tfb/`) derives from
-    * `tf/`, so the append invalidates it — rebuilt on the next
-    * [[termFreqBucketed]] touch rather than served stale. */
-  def appendDocs(path: String, docs: DataFrame): Unit =
-    FsUtil.withWriterLock(path) {
-      // invalidate BEFORE the source grows: a crash mid-append then
-      // leaves no bucketed projection at all (rebuilt on next touch)
-      // instead of a stale one silently served alongside the grown tf/
-      invalidateBucketed(path)
-      StagedCommit.commitAppend(s"$path/tf", buildTf(docs))
-    }
-
-  /** Drop the bucketed projection after its source grew (see
-    * [[appendDocs]]; StreamingTokens' ledger commits call this too). */
-  private[graft] def invalidateBucketed(path: String): Unit =
-    FsUtil.deleteRecursively(new java.io.File(s"$path/tfb"))
-
-  /** Catalog name of the BUCKETED token table (content-keyed like every
-    * artifact tag). */
-  private[graft] def bucketedTbl(dir: String): String =
-    s"graft_tokens_${Artifacts.dirTag(dir)}"
-
-  /** The stored word grain as a BUCKETED catalog relation — the
-    * TokenStore scaladoc's "at warehouse scale store it bucketed by w"
-    * claim, exercised (the incBandsTable machinery): 8 buckets on `w`,
-    * ONE sorted file per bucket (repartition before the bucketed write,
-    * so the bucket scans as sorted). Every w-clustered stage of a
-    * consumer then runs with NO Exchange on the stored side: df counts
-    * (groupBy w), (lang, w) term frequencies (HashPartitioning(w)
-    * satisfies clustering on the superset (lang, w) — same-w rows are
-    * co-located), and the w-keyed join between the two aggregates.
+  /** The store: `tf/`, and its bucketed projection `tfb/` (catalog
+    * `graft_tokens_<tag>`) — the scaladoc's "at warehouse scale store it
+    * bucketed by w" claim, exercised: 8 buckets on `w`, so every
+    * w-clustered stage of a consumer runs with NO Exchange on the stored
+    * side: df counts (groupBy w), (lang, w) term frequencies
+    * (HashPartitioning(w) satisfies clustering on the superset (lang,
+    * w)), and the w-keyed join between the two aggregates.
     * TokenStoreSpec plan-asserts q_tfidf's only exchanges are the
-    * per-lang window and the output sort. The catalog entry is per-JVM
-    * (in-memory catalog): a fresh session re-REGISTERS the existing
-    * bucketed files with CREATE TABLE ... CLUSTERED BY ... LOCATION —
-    * bucket ids live in the file names, so registration is
-    * metadata-only and the write-once economics hold across JVMs. */
-  def termFreqBucketed(s: SparkSession, dir: String): DataFrame = {
-    val path = ensure(s, dir)
-    BucketedTable.readOrBuild(s, bucketedTbl(dir), s"$path/tfb", Seq("w"),
-      "doc_id BIGINT, lang STRING, source STRING, w STRING, tf BIGINT") {
-      s.read.parquet(s"$path/tf")
-    }
-  }
+    * per-lang window and the output sort. Kinds: `store` (the consumers
+    * below), `base` (q_tfidf_incr), `cmp` (q_tfidf_compact). */
+  private[graft] val store = new DocStore("tokens", Seq("tf"), Seq(
+    DocStore.Projection("tf", "w",
+      "doc_id BIGINT, lang STRING, source STRING, w STRING, tf BIGINT",
+      "graft_tokens")))(docs => Seq(buildTf(docs)))
+
+  /** The stored term-frequency relation of a fixture corpus. */
+  def termFreq(s: SparkSession, dir: String): DataFrame =
+    store.stored(s, dir, "tf")
+
+  /** The stored word grain as the BUCKETED catalog relation. */
+  def termFreqBucketed(s: SparkSession, dir: String): DataFrame =
+    store.bucketed(s, dir, "tf")
 }

@@ -117,16 +117,14 @@ object RetrievalQueries extends QueryModule {
     // the union the exact full relation; re-runs stay idempotent). The
     // oracle is the FROM-SCRATCH q_novelty SQL over the full corpus, so
     // the hash match proves maintained ≡ rebuilt. The on-disk append
-    // twin of this merge is GramStore.appendDocs (GramStoreSpec pins
+    // twin of this merge is the store's appendDocs (GramStoreSpec pins
     // append ≡ rebuild).
     "q_novelty_incr" -> ((s, dir) => {
-      val path = graft.functions.GramStore.ensureIncBase(s, dir)
+      val store = graft.functions.GramStore.sh3Store
       val isDelta = graft.IncrementContract.isDelta(col("doc_id"))
-      noveltyOf(s.read.parquet(s"$path/sh3")
-        .select("doc_id", "source", "sh")
-        .unionByName(graft.functions.GramStore
-          .buildSh3(t(s, dir, "documents").filter(isDelta))
-          .select("doc_id", "source", "sh")))
+      val Seq(sh3) = store.merged(store.read(s, store.ensureIncBase(s, dir)),
+        t(s, dir, "documents").filter(isDelta))
+      noveltyOf(sh3.select("doc_id", "source", "sh"))
     }),
 
     // COMPACTED novelty: the delete/update proof for the gram-store
@@ -137,7 +135,7 @@ object RetrievalQueries extends QueryModule {
     // oracle rebuilds from scratch over the post-compaction corpus.
     // Pre-built by the bench driver; re-runs are pure reads.
     "q_novelty_compact" -> ((s, dir) => {
-      val path = graft.functions.GramStore.ensureCompacted(s, dir)
+      val path = graft.functions.GramStore.sh3Store.ensureCompacted(s, dir)
       noveltyOf(s.read.parquet(s"$path/sh3")
         .select("doc_id", "source", "sh"))
     }),
@@ -191,16 +189,14 @@ object RetrievalQueries extends QueryModule {
     // make the union exact), and score BM25 from the merged relations.
     // The oracle is the FROM-SCRATCH q_bm25 SQL over the full corpus, so
     // the hash match proves the maintained index ranks identically to a
-    // rebuild. The stored artifact itself is append-maintained via
-    // RetrievalIndex.appendDocs (RetrievalIndexSpec pins append ≡
-    // rebuild); the query merges in memory so re-runs stay idempotent.
+    // rebuild. The stored artifact itself is append-maintained via the
+    // store's appendDocs (RetrievalIndexSpec pins append ≡ rebuild);
+    // the query merges in memory so re-runs stay idempotent.
     "q_bm25_incr" -> ((s, dir) => {
-      val path = graft.functions.RetrievalIndex.ensureIncBase(s, dir)
+      val ri = graft.functions.RetrievalIndex
       val isDelta = graft.IncrementContract.isDelta(col("doc_id"))
-      val base = graft.functions.RetrievalIndex.read(s, path)
-      graft.functions.RetrievalIndex.bm25TopDf(
-        graft.functions.RetrievalIndex.merged(base,
-          t(s, dir, "documents").filter(isDelta), "doc_id", "text"))
+      ri.bm25TopDf(ri.merged(ri.read(s, ri.store.ensureIncBase(s, dir)),
+        t(s, dir, "documents").filter(isDelta)))
     }),
 
     // COMPACTED BM25: the delete/update proof for the retrieval family
@@ -212,7 +208,7 @@ object RetrievalQueries extends QueryModule {
     // the hash match proves compacted ≡ rebuilt. Pre-built by the bench
     // driver; re-runs are pure reads.
     "q_bm25_compact" -> ((s, dir) => {
-      val path = graft.functions.RetrievalIndex.ensureCompacted(s, dir)
+      val path = graft.functions.RetrievalIndex.store.ensureCompacted(s, dir)
       graft.functions.RetrievalIndex.bm25TopDf(
         graft.functions.RetrievalIndex.read(s, path))
     }),

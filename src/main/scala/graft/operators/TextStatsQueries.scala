@@ -245,15 +245,14 @@ object TextStatsQueries extends QueryModule {
     // full relation; re-runs stay idempotent). The oracle is the
     // FROM-SCRATCH q_tfidf SQL over the full corpus, so the hash match
     // proves maintained ≡ rebuilt. The on-disk append twin of this
-    // merge is TokenStore.appendDocs (TokenStoreSpec pins append ≡
-    // rebuild); the streaming twin is StreamingTokens.maintainStore.
+    // merge is the store's appendDocs (TokenStoreSpec pins append ≡
+    // rebuild); the streaming twin is the store's maintain.
     "q_tfidf_incr" -> ((s, dir) => {
-      val path = graft.functions.TokenStore.ensureIncBase(s, dir)
+      val store = graft.functions.TokenStore.store
       val isDelta = graft.IncrementContract.isDelta(col("doc_id"))
-      tfidfOf(
-        s.read.parquet(s"$path/tf").unionByName(graft.functions.TokenStore
-          .buildTf(t(s, dir, "documents").filter(isDelta))),
-        t(s, dir, "documents").agg(count(lit(1)).as("n")))
+      val Seq(tf) = store.merged(store.read(s, store.ensureIncBase(s, dir)),
+        t(s, dir, "documents").filter(isDelta))
+      tfidfOf(tf, t(s, dir, "documents").agg(count(lit(1)).as("n")))
     }),
 
     // COMPACTED TF-IDF: the delete/update proof for the token-store
@@ -266,7 +265,7 @@ object TextStatsQueries extends QueryModule {
     // hash match proves compacted ≡ rebuilt. Pre-built by the bench
     // driver (IncrementContract.prebuildBases); re-runs are pure reads.
     "q_tfidf_compact" -> ((s, dir) => {
-      val path = graft.functions.TokenStore.ensureCompacted(s, dir)
+      val path = graft.functions.TokenStore.store.ensureCompacted(s, dir)
       tfidfOf(s.read.parquet(s"$path/tf"),
         t(s, dir, "documents")
           .filter(!graft.IncrementContract.isRemoved(col("doc_id")))

@@ -1,13 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.sql.types.{IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL surface for grouped top-k — same TVF pattern as [[AsofSql]] /
   * [[RangeSql]] (one registration bridge, one builder delegating to the
@@ -41,59 +37,41 @@ object TopKSql {
 
   private val PlainIdent = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  /** The comma/whitespace split above can't represent backticked names,
-    * dotted names (col() would parse them as struct access) or names with
-    * commas — reject them HERE with the TVF's own message instead of
-    * letting a confusing downstream resolution error surface. */
-  private def ident(c: String, what: String): String = c match {
-    case PlainIdent() => c
-    case _ => fail(s"$what entry '$c' is not a plain identifier " +
-      "([A-Za-z_][A-Za-z0-9_]*) — backticks/dots/commas are not supported " +
-      "in the TVF surface; use the DataFrame form for such names")
-  }
-
   /** The TVF's registry descriptor (listed in graft.GraftSession). */
   val descriptor: graft.GraftSession.TableFunction =
-    PlanBridge.tableFunction(name, usage, builder)
-
-  private def builder(args: Seq[Expression]): LogicalPlan = {
-    if (args.length < 4 || args.length > 5)
-      fail(s"expects 4-5 arguments, got ${args.length}")
-    def str(i: Int, what: String): String = args(i) match {
-      case Literal(s: UTF8String, StringType) => s.toString
-      case other => fail(s"$what (arg ${i + 1}) must be a string literal, " +
-        s"got ${other.sql}")
-    }
-    val k = args(3) match {
-      case Literal(v: Int, IntegerType) if v > 0 => v
-      case other => fail(s"k (arg 4) must be a positive integer literal, " +
-        s"got ${other.sql}")
-    }
-    val groupCols = str(1, "groupCols").split(",").map(_.trim).filter(_.nonEmpty)
-      .map(ident(_, "groupCols"))
-    if (groupCols.isEmpty) fail("groupCols must name at least one column")
-    val orderCols = str(2, "orderSpec").split(",").map(_.trim).filter(_.nonEmpty)
-      .map { spec =>
+    PlanBridge.tableFunction(name, usage, 4, 5) { args =>
+      /* The comma/whitespace split can't represent backticked names,
+       * dotted names (col() would parse them as struct access) or names
+       * with commas — reject them HERE with the TVF's own message instead
+       * of letting a confusing downstream resolution error surface. */
+      def ident(c: String, what: String): String = c match {
+        case PlainIdent() => c
+        case _ => args.fail(s"$what entry '$c' is not a plain identifier " +
+          "([A-Za-z_][A-Za-z0-9_]*) — backticks/dots/commas are not " +
+          "supported in the TVF surface; use the DataFrame form for such " +
+          "names")
+      }
+      val k = args.int(3, "k")
+      val groupCols = args.csv(1, "groupCols").map(ident(_, "groupCols"))
+      if (groupCols.isEmpty) args.fail("groupCols must name at least one column")
+      val orderCols = args.csv(2, "orderSpec").map { spec =>
         spec.split("\\s+") match {
           case Array(c)       => col(ident(c, "orderSpec")).asc
           case Array(c, dir) if dir.equalsIgnoreCase("asc")  => col(ident(c, "orderSpec")).asc
           case Array(c, dir) if dir.equalsIgnoreCase("desc") => col(ident(c, "orderSpec")).desc
-          case _ => fail(s"bad order entry '$spec' — use <col> [ASC|DESC]")
+          case _ => args.fail(s"bad order entry '$spec' — use <col> [ASC|DESC]")
         }
       }
-    if (orderCols.isEmpty) fail("orderSpec must name at least one column")
-    val rankCol = if (args.length > 4) str(4, "rankCol") else "rn"
-    val df = SparkSession.active.table(str(0, "table"))
-    if (df.columns.exists(_.equalsIgnoreCase(rankCol)))
-      fail(s"rank column $rankCol collides with an input column — pass a " +
-        "different name as arg 5")
-    val w = Window.partitionBy(groupCols.map(col).toIndexedSeq: _*)
-      .orderBy(orderCols.toIndexedSeq: _*)
-    df.withColumn(rankCol, row_number().over(w))
-      .filter(col(rankCol) <= k)
-      .queryExecution.analyzed
-  }
-
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(s"$name: $msg\nusage: $usage")
+      if (orderCols.isEmpty) args.fail("orderSpec must name at least one column")
+      val rankCol = if (args.length > 4) args.str(4, "rankCol") else "rn"
+      val df = SparkSession.active.table(args.str(0, "table"))
+      if (df.columns.exists(_.equalsIgnoreCase(rankCol)))
+        args.fail(s"rank column $rankCol collides with an input column — " +
+          "pass a different name as arg 5")
+      val w = Window.partitionBy(groupCols.map(col): _*)
+        .orderBy(orderCols: _*)
+      df.withColumn(rankCol, row_number().over(w))
+        .filter(col(rankCol) <= k)
+        .queryExecution.analyzed
+    }
 }

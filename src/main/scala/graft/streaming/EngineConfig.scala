@@ -5,10 +5,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-/** R6 config resolution: file → defaults → environment override, env
-  * highest priority — the reference's exact layering
-  * (go/producer/config.go:18-30: LoadConfig reads the JSON file, fills
-  * defaults, then applies env vars on top).
+/** R6 config resolution: env > file > defaults — the reference's exact
+  * layering (go/producer/config.go:18-30: LoadConfig reads the JSON file,
+  * fills defaults for the keys it left unset, then applies env vars on
+  * top).
   *
   * File format is `key=value` properties (one per line, # comments) — no
   * external parser dependency. Env keys are the config key upper-cased
@@ -38,8 +38,9 @@ object EngineConfig {
   def envKey(key: String): String =
     "GRAFT_" + key.toUpperCase.replace('.', '_')
 
-  /** file (lowest) → defaults (middle) → env (highest). Missing file is
-    * fine (the reference also runs with defaults only). */
+  /** defaults (lowest) → file (middle) → env (highest): a file value
+    * beats a default, an env value beats both. Missing file is fine (the
+    * reference also runs with defaults only). */
   def load(path: Option[Path] = None,
            env: Map[String, String] = sys.env): EngineConfig = {
     val fromFile: Map[String, String] = path

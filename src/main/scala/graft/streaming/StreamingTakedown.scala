@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous TAKEDOWN maintenance of the persisted stores — the delete
-  * twin of StreamingTokens/StreamingRetrieval (round-12: a living
+  * twin of the per-doc stores' DocStore.maintain (round-12: a living
   * corpus's removal feed — takedown requests, licensing revocations,
   * contamination discoveries — arrives as a stream just like its
   * documents do). Every micro-batch of doc ids compacts the store
@@ -57,21 +57,21 @@ object StreamingTakedown {
   def maintainTokenStore(removals: DataFrame, storePath: String,
                          checkpointDir: String): StreamingQuery =
     removalSink(removals, checkpointDir)(
-      TokenStore.compactRemove(storePath, _))
+      TokenStore.store.compactRemove(storePath, _))
 
   /** Apply every arriving micro-batch of removal doc ids to the
     * RetrievalIndex at `indexPath`. */
   def maintainRetrievalIndex(removals: DataFrame, indexPath: String,
                              checkpointDir: String): StreamingQuery =
     removalSink(removals, checkpointDir)(
-      RetrievalIndex.compactRemove(indexPath, _))
+      RetrievalIndex.store.compactRemove(indexPath, _))
 
   /** Apply every arriving micro-batch of removal doc ids to the
     * five-grain GramStore at `storePath`. */
   def maintainGramStore(removals: DataFrame, storePath: String,
                         checkpointDir: String): StreamingQuery =
     removalSink(removals, checkpointDir)(
-      GramStore.compactRemove(storePath, _))
+      GramStore.store.compactRemove(storePath, _))
 
   /** Apply every arriving micro-batch of removal doc ids to the
     * persisted dedup cluster artifact at `artifactPath` — pairs

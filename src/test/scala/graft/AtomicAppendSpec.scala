@@ -26,13 +26,13 @@ class AtomicAppendSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-atomic-never").toString
     val delta = docs.filter(col("doc_id") % 5 === 4)
     intercept[IllegalArgumentException] {
-      TokenStore.appendDocs(s"$base/tok", delta)
+      TokenStore.store.appendDocs(s"$base/tok", delta)
     }
     intercept[IllegalArgumentException] {
-      GramStore.appendDocs(s"$base/grams", delta)
+      GramStore.store.appendDocs(s"$base/grams", delta)
     }
     intercept[IllegalArgumentException] {
-      RetrievalIndex.appendDocs(s"$base/retr", delta, "doc_id", "text")
+      RetrievalIndex.store.appendDocs(s"$base/retr", delta)
     }
     // and none of the paths may have been created as readable relations
     assert(!new java.io.File(s"$base/tok/tf/_SUCCESS").exists())
@@ -55,7 +55,7 @@ class AtomicAppendSpec extends SparkSpec {
       "an uncommitted staging dir must be invisible to readers")
 
     // the next append sweeps the orphan and commits atomically
-    TokenStore.appendDocs(path, delta)
+    TokenStore.store.appendDocs(path, delta)
     assert(!new java.io.File(orphan).exists(), "orphan must be swept")
     assert(sameRelation(spark.read.parquet(s"$path/tf"),
       TokenStore.buildTf(docs)), "append after crash ≡ rebuild")
@@ -71,9 +71,10 @@ class AtomicAppendSpec extends SparkSpec {
     val base = docs.filter(col("doc_id") % 5 =!= 4)
     val delta = docs.filter(col("doc_id") % 5 === 4)
     val rp = Files.createTempDirectory("graft-atomic-retr").toString
-    RetrievalIndex.write(RetrievalIndex.build(base, "doc_id", "text"), rp)
-    val appended = RetrievalIndex.appendDocs(rp, delta, "doc_id", "text")
-    val rebuilt = RetrievalIndex.build(docs, "doc_id", "text")
+    RetrievalIndex.store.write(base, rp)
+    RetrievalIndex.store.appendDocs(rp, delta)
+    val appended = RetrievalIndex.read(spark, rp)
+    val rebuilt = RetrievalIndex.build(docs)
     assert(sameRelation(appended.postings, rebuilt.postings))
     assert(sameRelation(appended.doclens, rebuilt.doclens))
   }
@@ -94,7 +95,7 @@ class AtomicAppendSpec extends SparkSpec {
       java.nio.file.StandardOpenOption.WRITE)
     val held = ch.lock()
     val before = spark.read.parquet(s"$path/tf").count()
-    intercept[IllegalStateException] { TokenStore.appendDocs(path, delta) }
+    intercept[IllegalStateException] { TokenStore.store.appendDocs(path, delta) }
     assert(spark.read.parquet(s"$path/tf").count() == before,
       "a refused writer must not have touched the store")
     // a DEAD holder (crashed JVM): the OS released its lock with the
@@ -102,7 +103,7 @@ class AtomicAppendSpec extends SparkSpec {
     // the next acquire succeeds immediately, no steal protocol needed
     held.release(); ch.close()
     Files.writeString(lock.toPath, "99999999\n")
-    TokenStore.appendDocs(path, delta)
+    TokenStore.store.appendDocs(path, delta)
     assert(spark.read.parquet(s"$path/tf").count() > before)
     // and the released lock is immediately re-acquirable
     graft.functions.FsUtil.withWriterLock(path) {
@@ -176,7 +177,7 @@ class AtomicAppendSpec extends SparkSpec {
     // take down one doc that lives in batch 7 → its file is rewritten
     val victim = batch7.select("doc_id").orderBy("doc_id").limit(1)
     val victimId = victim.collect().head.getLong(0)
-    TokenStore.compactRemove(path.stripSuffix("/tf"), victim)
+    TokenStore.store.compactRemove(path.stripSuffix("/tf"), victim)
     assert(!new java.io.File(s"$path/batch-7.parquet").exists(),
       "precondition: the compaction rewrote the ledger batch file")
     // the replayed batch must STILL no-op (tombstone), and the store
@@ -251,7 +252,7 @@ class AtomicAppendSpec extends SparkSpec {
     // three successive single-doc takedowns all rewrite batch-3's file
     // lineage; the tombstone set must hold ONE line, not three
     victims.foreach { id =>
-      TokenStore.compactRemove(root,
+      TokenStore.store.compactRemove(root,
         spark.range(id, id + 1).select(col("id").as("doc_id")))
     }
     val tombs = graft.functions.CompactStore.readTombstones(path)

@@ -50,7 +50,7 @@ class CompactStoreSpec extends SparkSpec {
       .getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
       .map(f => f.getName -> f.lastModified()).toMap
-    TokenStore.compact(path, removeIds, updatedDocs)
+    TokenStore.store.compact(path, removeIds, updatedDocs)
     sameRelation(spark.read.parquet(s"$path/tf"),
       TokenStore.buildTf(modifiedCorpus), "tokens compact")
     // the removal ids hash across all 8 files here (tiny fixture), so
@@ -68,17 +68,17 @@ class CompactStoreSpec extends SparkSpec {
 
   test("compact is idempotent: a re-run (crash between relations) changes nothing") {
     val path = Files.createTempDirectory("graft-cmp-idem").toString
-    RetrievalIndex.write(RetrievalIndex.build(docs, "doc_id", "text"), path)
-    RetrievalIndex.compact(path, removeIds, updatedDocs)
+    RetrievalIndex.store.write(docs, path)
+    RetrievalIndex.store.compact(path, removeIds, updatedDocs)
     val once = RetrievalIndex.read(spark, path)
     val oncePost = once.postings.collect().toSet
     val onceDl = once.doclens.collect().toSet
     // the mid-crash recovery contract IS "re-run with the same args"
-    RetrievalIndex.compact(path, removeIds, updatedDocs)
+    RetrievalIndex.store.compact(path, removeIds, updatedDocs)
     val twice = RetrievalIndex.read(spark, path)
     assert(twice.postings.collect().toSet == oncePost, "postings changed")
     assert(twice.doclens.collect().toSet == onceDl, "doclens changed")
-    val rebuilt = RetrievalIndex.build(modifiedCorpus, "doc_id", "text")
+    val rebuilt = RetrievalIndex.build(modifiedCorpus)
     sameRelation(twice.postings, rebuilt.postings, "retr postings")
     sameRelation(twice.doclens, rebuilt.doclens, "retr doclens")
   }
@@ -91,7 +91,7 @@ class CompactStoreSpec extends SparkSpec {
     GramStore.buildSpan8(gdocs).write.parquet(s"$path/span8")
     GramStore.buildGram5(gdocs).write.parquet(s"$path/gram5")
     GramStore.buildGram2(gdocs).write.parquet(s"$path/gram2")
-    GramStore.compact(path, removeIds,
+    GramStore.store.compact(path, removeIds,
       updatedDocs.select("doc_id", "source", "text"))
     val mod = modifiedCorpus.select("doc_id", "source", "text")
     sameRelation(spark.read.parquet(s"$path/sh3"),
@@ -217,10 +217,10 @@ class CompactStoreSpec extends SparkSpec {
   }
 
   test("ensureCompacted marker makes re-touch a pure read") {
-    val p1 = TokenStore.ensureCompacted(spark, sf)
+    val p1 = TokenStore.store.ensureCompacted(spark, sf)
     assert(new java.io.File(s"$p1/compacted").exists())
     val rows = spark.read.parquet(s"$p1/tf").count()
-    val p2 = TokenStore.ensureCompacted(spark, sf)
+    val p2 = TokenStore.store.ensureCompacted(spark, sf)
     assert(p1 == p2 && spark.read.parquet(s"$p2/tf").count() == rows)
   }
 }

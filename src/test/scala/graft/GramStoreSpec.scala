@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * must equal the inline derivations row-for-row (the oracle gate proves
   * the same through q_novelty/q_mix_knapsack/q_containment/q_span_dedup's
   * from-scratch DuckDB SQL), and per-doc appends must equal a rebuild
-  * (the RetrievalIndex.appendDocs contract). */
+  * (the DocStore.appendDocs contract). */
 class GramStoreSpec extends SparkSpec {
 
   private def assertSameRelation(a: DataFrame, b: DataFrame,
@@ -45,7 +45,7 @@ class GramStoreSpec extends SparkSpec {
     GramStore.buildSpan8(base).write.parquet(s"$path/span8")
     GramStore.buildGram5(base).write.parquet(s"$path/gram5")
     GramStore.buildGram2(base).write.parquet(s"$path/gram2")
-    GramStore.appendDocs(path, delta)
+    GramStore.store.appendDocs(path, delta)
     assertSameRelation(spark.read.parquet(s"$path/sh3"),
       GramStore.buildSh3(docs), "sh3 append")
     assertSameRelation(spark.read.parquet(s"$path/sh3h"),

@@ -66,12 +66,14 @@ class ReferenceOpsSpec extends SparkSpec {
       """# test config
         |kafka.input.topic=file-topic
         |custom.key=from-file
+        |generator.interval.ms=500
         |""".stripMargin)
     val cfg = EngineConfig.load(Some(f), env = Map(
       "GRAFT_KAFKA_INPUT_TOPIC" -> "env-topic",
       "GRAFT_WINDOW_DURATION" -> "5 minutes"))
     assert(cfg.get("kafka.input.topic").contains("env-topic"), "env must win")
     assert(cfg.get("custom.key").contains("from-file"))
+    assert(cfg.get("generator.interval.ms").contains("500"), "file beats default")
     assert(cfg.get("window.duration").contains("5 minutes"), "env beats default")
     assert(cfg.get("watermark.delay").contains("10 seconds"), "default fallback")
     assert(cfg.getInt("kafka.fetch.min.bytes").contains(10000))

@@ -6,7 +6,7 @@ import graft.functions.RetrievalIndex
 import org.apache.spark.sql.DataFrame
 
 /** The retrieval-index maintenance contract (the RollupSpec discipline
-  * for the BM25 family): appendDocs(write(build(C)), B) must be
+  * for the BM25 family): store.appendDocs(write(C), B) must be
   * relation-identical to build(C ∪ B) — postings AND doclens — and the
   * BM25 scorer over the appended index must rank exactly like a rebuild.
   * q_bm25_incr carries the same proof under the DuckDB oracle gate on
@@ -34,9 +34,10 @@ class RetrievalIndexSpec extends SparkSpec {
 
   test("appendDocs ≡ rebuild: postings and doclens relation-identical") {
     val dir = Files.createTempDirectory("graft-ridx").toString
-    RetrievalIndex.write(RetrievalIndex.build(base, "doc_id", "text"), dir)
-    val appended = RetrievalIndex.appendDocs(dir, batch, "doc_id", "text")
-    val rebuilt = RetrievalIndex.build(base.unionAll(batch), "doc_id", "text")
+    RetrievalIndex.store.write(base, dir)
+    RetrievalIndex.store.appendDocs(dir, batch)
+    val appended = RetrievalIndex.read(spark, dir)
+    val rebuilt = RetrievalIndex.build(base.unionAll(batch))
     assert(postings(appended) == postings(rebuilt))
     assert(doclens(appended) == doclens(rebuilt))
     // empty-token rows never enter: "w <> ''" is build's rule
@@ -45,12 +46,13 @@ class RetrievalIndexSpec extends SparkSpec {
 
   test("bm25 over the appended index ranks exactly like a rebuild") {
     val dir = Files.createTempDirectory("graft-ridx2").toString
-    RetrievalIndex.write(RetrievalIndex.build(base, "doc_id", "text"), dir)
-    val appended = RetrievalIndex.appendDocs(dir, batch, "doc_id", "text")
+    RetrievalIndex.store.write(base, dir)
+    RetrievalIndex.store.appendDocs(dir, batch)
+    val appended = RetrievalIndex.read(spark, dir)
     val a = RetrievalIndex.bm25TopDf(appended).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
     val b = RetrievalIndex.bm25TopDf(
-      RetrievalIndex.build(base.unionAll(batch), "doc_id", "text")).collect()
+      RetrievalIndex.build(base.unionAll(batch))).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(a == b && a.nonEmpty)
     // the repeated-term doc must outrank on the top-df term family
@@ -59,10 +61,11 @@ class RetrievalIndexSpec extends SparkSpec {
 
   test("merged() is the in-memory view of what appendDocs persists") {
     val dir = Files.createTempDirectory("graft-ridx3").toString
-    RetrievalIndex.write(RetrievalIndex.build(base, "doc_id", "text"), dir)
+    RetrievalIndex.store.write(base, dir)
     val stored = RetrievalIndex.read(spark, dir)
-    val mem = RetrievalIndex.merged(stored, batch, "doc_id", "text")
-    val disk = RetrievalIndex.appendDocs(dir, batch, "doc_id", "text")
+    val mem = RetrievalIndex.merged(stored, batch)
+    RetrievalIndex.store.appendDocs(dir, batch)
+    val disk = RetrievalIndex.read(spark, dir)
     assert(postings(mem) == postings(disk))
     assert(doclens(mem) == doclens(disk))
   }

@@ -434,22 +434,20 @@ class StreamingSpec extends SparkSpec {
   test("s_bm25: stream-maintained index ranks identically to q_bm25") {
     // the retrieval-family increment twin (round-11): the standing 80%
     // of the corpus is indexed once; the remaining 20% ARRIVES over two
-    // micro-batches through StreamingRetrieval.maintainIndex. BM25 over
+    // micro-batches through the store's maintain. BM25 over
     // the maintained artifact must equal the from-scratch q_bm25 rows
     // (same integer-scaled scorer — the oracle-gated math), and the
     // composition must hold zero streaming state.
     val docs = table("documents").select("doc_id", "text")
     val isDelta = col("doc_id") % 5 === 4
     val dir = Files.createTempDirectory("graft-sbm25").toString
-    graft.functions.RetrievalIndex.write(
-      graft.functions.RetrievalIndex.build(
-        docs.filter(!isDelta), "doc_id", "text"), dir)
+    graft.functions.RetrievalIndex.store.write(docs.filter(!isDelta), dir)
     val delta = docs.filter(isDelta)
       .as[(Long, String)].collect().toSeq
     val (b1, b2) = delta.zipWithIndex.partition(_._2 % 2 == 0)
     val in = MemoryStream[(Long, String)]
     val cp = Files.createTempDirectory("graft-cp").toString
-    val q = StreamingRetrieval.maintainIndex(
+    val q = graft.functions.RetrievalIndex.store.maintain(
       in.toDF.toDF("doc_id", "text"), dir, cp)
     try {
       in.addData(b1.map(_._1)); q.processAllAvailable()
@@ -490,7 +488,7 @@ class StreamingSpec extends SparkSpec {
   test("s_tokens: stream-maintained token store ranks TF-IDF like q_tfidf") {
     // the TokenStore increment twin (round-11): the standing 80% of the
     // corpus stores its word-grain rows once; the remaining 20% ARRIVES
-    // over two micro-batches through StreamingTokens.maintainStore.
+    // over two micro-batches through the store's maintain.
     // TF-IDF over the maintained artifact must equal the from-scratch
     // q_tfidf rows (the oracle-gated math), and the composition must
     // hold zero streaming state.
@@ -504,7 +502,7 @@ class StreamingSpec extends SparkSpec {
     val (b1, b2) = delta.zipWithIndex.partition(_._2 % 2 == 0)
     val in = MemoryStream[(Long, String, String, String)]
     val cp = Files.createTempDirectory("graft-cp").toString
-    val sq = StreamingTokens.maintainStore(
+    val sq = graft.functions.TokenStore.store.maintain(
       in.toDF.toDF("doc_id", "lang", "source", "text"), dir, cp)
     try {
       in.addData(b1.map(_._1)); sq.processAllAvailable()
@@ -659,12 +657,12 @@ class StreamingSpec extends SparkSpec {
 
   test("s_takedown_retrieval: streamed removals compact the BM25 index") {
     val docs = table("documents").select("doc_id", "text")
-    def build(d: DataFrame) = graft.functions.RetrievalIndex.build(d, "doc_id", "text")
+    def build(d: DataFrame) = graft.functions.RetrievalIndex.build(d)
     // two identical indexes: the feed names the first, the second must
     // come through untouched
     val (dir, other) = (Files.createTempDirectory("graft-stk-retr").toString,
       Files.createTempDirectory("graft-stk-retr-other").toString)
-    Seq(dir, other).foreach(graft.functions.RetrievalIndex.write(build(docs), _))
+    Seq(dir, other).foreach(graft.functions.RetrievalIndex.store.write(docs, _))
     val rmPred = IncrementContract.isRemoved(col("doc_id"))
     val rmIds = docs.filter(rmPred).select("doc_id").as[Long].collect().toSeq
     val cp = Files.createTempDirectory("graft-cp").toString

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** The shared persisted word-grain artifact (round-11): stored rows must
   * equal the inline derivation row-for-row (the oracle gate proves the
   * same through the six consumers' from-scratch DuckDB SQL), per-doc
-  * appends must equal a rebuild (the RetrievalIndex.appendDocs
+  * appends must equal a rebuild (the DocStore.appendDocs
   * contract), and the consumers' steady state must read the artifact,
   * never raw text. */
 class TokenStoreSpec extends SparkSpec {
@@ -44,7 +44,7 @@ class TokenStoreSpec extends SparkSpec {
     val delta = docs.filter(col("doc_id") % 5 === 4)
     val path = Files.createTempDirectory("graft-tokens-append").toString
     TokenStore.buildTf(base).write.parquet(s"$path/tf")
-    TokenStore.appendDocs(path, delta)
+    TokenStore.store.appendDocs(path, delta)
     assertSameRelation(spark.read.parquet(s"$path/tf"),
       TokenStore.buildTf(docs), "tf append")
   }
